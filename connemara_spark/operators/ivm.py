@@ -409,7 +409,7 @@ class MaintainedTwoTableJoinView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         ta = touched_keys(parsed_events, self.spec_a).select(
             F.col(self.key_a).alias("__k")
         )
@@ -425,7 +425,7 @@ class MaintainedTwoTableJoinView:
         # never the store — so post-apply evaluation sees identical keys.
         self._touched = ta.union(tb).distinct()
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()
@@ -488,11 +488,13 @@ class MaintainedAggView:
     of ``incremental_group_agg``: per microbatch the patch costs
     O(touched keys), never a base-table rescan.
 
-    Protocol (driven by ``StreamingReplayer(maintainers=[...])``):
+    Protocol (driven by ``Replayer.step(maintainers=[...])``):
     ``before_apply(parsed_events)`` pins the batch's touched keys and the
     pre-apply store version; ``after_apply()`` diffs the table's state
     BETWEEN STORE VERSIONS at the touched keys and merges the -old/+new
-    group deltas into the materialized aggregate.
+    group deltas into the materialized aggregate. Every view accepts the
+    shared maintainer signature's ``buckets`` / ``batch_id`` keywords and
+    ignores them (their patches are version-anchored, not ledgered).
 
     Crash recovery is version-anchored (the ParquetStore-native variant
     of the join view's replacement patch): the view pointer persists the
@@ -588,14 +590,14 @@ class MaintainedAggView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         # lazy pin (see MaintainedTwoTableJoinView.before_apply): derives
         # from the immutable cached batch only, so evaluating it after the
         # store advanced yields identical keys at zero extra jobs
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()
@@ -799,12 +801,12 @@ class MaintainedJoinView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         self._old = self.store.read(self.spec)  # version-pinned OLD state
         # lazy pin (see MaintainedTwoTableJoinView.before_apply)
         self._touched = touched_keys(parsed_events, self.spec)
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()
@@ -1087,11 +1089,11 @@ class MaintainedMinMaxView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()
@@ -1472,11 +1474,11 @@ class MaintainedTopKView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()
@@ -1817,11 +1819,11 @@ class MaintainedDistinctCountView:
         """Retire old view version directories (see gc_view_versions)."""
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
-    def before_apply(self, parsed_events: DataFrame) -> None:
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
 
-    def after_apply(self) -> None:
+    def after_apply(self, batch_id: str | None = None) -> None:
         # static plan for the whole patch (see _static_patch_plan)
         with _static_patch_plan(self.spark):
             self._after_apply_impl()

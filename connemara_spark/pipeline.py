@@ -1,25 +1,36 @@
 """Batch replayer: the reference's apply loop as a pure batch function.
 
-``Replayer.apply_batch(bronze_df)`` is the engine's heart — the analog of one
-dispatcher pass over the spool (replay.pl:801-985):
+``Replayer.step(bronze_df, maintainers=[...])`` is the engine's ONE
+per-batch protocol — the analog of one dispatcher pass over the spool
+(replay.pl:801-985). Streaming (``foreachBatch``), batch replay and the
+registry fixtures all run it; nothing else drives the phases below:
 
-1. parse + standard filters (temp tables F3, db/slot restriction F2)
-2. split DDL / DML (F4)
-3. **DDL barrier** (D11, replay.pl:867-876): the batch is cut at each DDL
-   event's (insert_timestamp, lsn_start); each DML segment is fully applied
-   (per-table latest-wins fold + merge) BEFORE the DDL executes and the
-   engine catalog is refreshed — exactly the reference's commit-all →
-   replay-DDL-alone → DISCARD protocol, without threads.
-4. per-table apply via ``operators.apply.apply_changes``
-5. table store write (memory for tests, parquet for real runs)
+1. parse + standard filters (temp tables F3, db/slot restriction F2),
+   persisted once and shared by the summary, the maintainers and the apply
+2. ONE batch-summary job: ordered DDL rows, per-table counts, touched
+   buckets
+3. every maintainer's ``before_apply(parsed, buckets=...)`` pin
+4. ``apply_batch``: split DDL / DML (F4), then the **DDL barrier** (D11,
+   replay.pl:867-876): the batch is cut at each DDL event's
+   (insert_timestamp, lsn_start); each DML segment is fully applied
+   (per-table latest-wins fold + store write, tables concurrently) BEFORE
+   the DDL executes and the engine catalog is refreshed — the reference's
+   commit-all → replay-DDL-alone → DISCARD protocol
+5. after DDL, every maintainer's ``check_schema`` — before any patch
+6. every maintainer's ``after_apply(batch_id=...)``, concurrently, under
+   one static-plan session scope
 
-The same function body serves batch jobs and ``foreachBatch`` (streaming).
+``Replayer.replay(bronze, batch_ix, n_batches)`` runs a whole stream cut
+into batches by one integer Column: one checkpointed parse, one summary
+job for all batches, then ``step`` per slice.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +75,36 @@ def parse_command_tags(tags: str | None) -> list[str]:
     if cur or (body and body.endswith(",")):
         out.append("".join(cur))
     return [t for t in out if t]
+
+
+def run_legs(thunks):
+    """Run independent legs (zero-arg callables, each submitting its own
+    Spark jobs) concurrently and return their results in input order; a
+    single leg runs inline. The first failure propagates once every leg
+    has finished — callers' retries are idempotent (replacement
+    discipline, ledger skip)."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as ex:
+        return list(ex.map(lambda t: t(), thunks))
+
+
+@contextmanager
+def _job_labels(spark: SparkSession, label: str | None):
+    """Yield ``phase(name)``, which sets the calling thread's job
+    description to ``"<label>: <name>"`` (a no-op when ``label`` is None);
+    the description in force before is restored on exit."""
+    sc = spark.sparkContext
+    if label is None:
+        yield lambda name: None
+        return
+    prev = sc.getLocalProperty("spark.job.description")
+    try:
+        yield lambda name: sc.setJobDescription(f"{label}: {name}")
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 class MemoryStore:
@@ -525,6 +566,112 @@ class Replayer:
             out[ix] = (ddl_rows, counts, buckets)
         return out
 
+    def step(
+        self,
+        bronze: DataFrame,
+        *,
+        parsed: DataFrame | None = None,
+        summary: tuple | None = None,
+        maintainers=(),
+        batch_id: str | None = None,
+        label: str | None = None,
+    ) -> BatchMetrics:
+        """Apply ONE batch and bring its maintainers up to date — the
+        per-batch protocol of the module docstring, and the only code that
+        drives it.
+
+        ``parsed``/``summary``: the batch's parse and summary when the
+        caller already has them (``replay`` slices one checkpointed
+        parse). Otherwise the batch is parsed and persisted here, and the
+        summary job fills that cache before the maintainers pin against
+        it. ``batch_id`` reaches every ``after_apply`` (a sink's
+        exactly-once ledger key; None lets the sink assign one).
+        ``label`` prefixes the phase job descriptions (``"ivm b3"`` →
+        ``"ivm b3: fold"``) that the UI and ``tools/joblog_probe.py``
+        roll up."""
+        owned = parsed is None
+        with _job_labels(self.spark, label) as phase:
+            if owned:
+                parsed = self.parse_batch(bronze).persist()
+            try:
+                if summary is None:
+                    phase("summary")
+                    summary = self._batch_summary(parsed)
+                for m in maintainers:
+                    m.before_apply(parsed, buckets=summary[2])
+                phase("fold")
+                metrics = self.apply_batch(bronze, events=parsed, summary=summary)
+                if metrics.ddl_executed:
+                    # DDL may have evolved a maintainer's base table: a
+                    # dropped or renamed column fails loudly here, before
+                    # any patch could null-fill it
+                    for m in maintainers:
+                        if hasattr(m, "check_schema"):
+                            m.check_schema(self.catalog)
+
+                def patch(m):
+                    phase(f"patch:{type(m).__name__}")
+                    m.after_apply(batch_id=batch_id)
+
+                if maintainers:
+                    from connemara_spark.operators.ivm import _static_patch_plan
+
+                    # the patches are independent (own view dir / own
+                    # target; all read the same applied store version), so
+                    # they run as concurrent Spark jobs — the patch phase
+                    # costs max(maintainers), not the sum. ONE config
+                    # scope around all of them: per-leg scopes entered
+                    # concurrently would restore each other's patched
+                    # values and leave AQE off for the session.
+                    with _static_patch_plan(self.spark):
+                        run_legs([partial(patch, m) for m in maintainers])
+                return metrics
+            finally:
+                if owned:
+                    parsed.unpersist()
+
+    def replay(
+        self,
+        bronze: DataFrame,
+        batch_ix,
+        n_batches: int,
+        *,
+        maintainers=(),
+        label: str | None = None,
+    ) -> list[BatchMetrics]:
+        """Replay a stream cut into ``n_batches`` batches by ``batch_ix``,
+        an integer Column over bronze columns (e.g. an lsn-range index).
+
+        The stream is parsed ONCE and localCheckpointed (parse is
+        row-wise, so a slice of the parse equals the parse of the slice),
+        ALL batch summaries come from one job, and ``step`` then runs on
+        each slice ``batch_ix == i`` in order with
+        ``batch_id="batch-<i>"``. Slices and summaries derive from the
+        same Column, so they cannot disagree."""
+        with _job_labels(self.spark, label) as phase:
+            phase("parse")
+            parsed_all = self.parse_batch(bronze).localCheckpoint()
+            phase("summaries")
+            summaries = self.batch_summaries(parsed_all, batch_ix)
+        stray = set(summaries) - set(range(n_batches))
+        if stray:
+            # rows indexed outside 0..n_batches-1 would never be applied
+            raise ValueError(
+                f"replay: batch_ix assigned events to batches {sorted(stray)} "
+                f"outside 0..{n_batches - 1}"
+            )
+        return [
+            self.step(
+                bronze.filter(batch_ix == i),
+                parsed=parsed_all.filter(batch_ix == i),
+                summary=summaries.get(i, self.empty_summary()),
+                maintainers=maintainers,
+                batch_id=f"batch-{i}",
+                label=None if label is None else f"{label} b{i}",
+            )
+            for i in range(n_batches)
+        ]
+
     def apply_batch(
         self,
         bronze: DataFrame,
@@ -630,13 +777,7 @@ class Replayer:
         # concurrent submission wins. Metrics fold in deterministically
         # after the join below; the first failure propagates (the batch
         # retry re-applies idempotently — replacement discipline).
-        if len(legs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(len(legs), 4)) as ex:
-                flags = list(ex.map(lambda kv: fold_and_write(*kv), legs))
-        else:
-            flags = [fold_and_write(k, s) for k, s in legs]
+        flags = run_legs([partial(fold_and_write, k, s) for k, s in legs])
         metrics.bounded_folds += sum(1 for b in flags if b)
         metrics.tables_touched += len(flags)
 

@@ -35,13 +35,14 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
     Call ``cleanup()`` when done explaining — the frames read from the
     scratch stores, so they are only valid before cleanup.
     """
-    from connemara_spark.catalog import ColumnSpec, EngineCatalog, TableSpec
+    from connemara_spark.catalog import EngineCatalog
     from connemara_spark.operators.ivm import MaintainedAggView
-    from connemara_spark.pipeline import BatchMetrics, ParquetStore, Replayer
+    from connemara_spark.pipeline import ParquetStore, Replayer
     from connemara_spark.queries import (
         CUSTOMER_SPEC,
         _customer_cdc_bronze,
         _event_lsn_bounds,
+        _fresh_spec,
         load,
     )
     from connemara_spark.stores import BucketStore
@@ -54,15 +55,6 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             df.unpersist()
         for r in roots:
             shutil.rmtree(r, ignore_errors=True)
-
-    def fresh_spec() -> TableSpec:
-        return TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
 
     snapshot = load(spark, sf_dir, "customer")
     bronze = _customer_cdc_bronze(spark, sf_dir).persist()
@@ -79,7 +71,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         # -- bucketed pipeline: steady-state partial-rewrite fold ----------
         root = tempfile.mkdtemp(prefix="connemara_planaudit_b_")
         roots.append(root)
-        spec = fresh_spec()
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = BucketStore(spark, root, n_buckets=32)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -100,7 +92,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         # -- maintained view: flat fold + incremental view patch -----------
         root = tempfile.mkdtemp(prefix="connemara_planaudit_v_")
         roots.append(root)
-        spec = fresh_spec()
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -111,11 +103,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             group_col="c_mktsegment", sum_col="c_acctbal",
             sum_type="decimal(12,2)", view_dir=f"{root}/view",
         )
-        parsed1 = rep.parse_batch(b1).persist()
-        view.before_apply(parsed1)
-        rep.apply_batch(b1, events=parsed1)
-        view.after_apply()
-        parsed1.unpersist()
+        rep.step(b1, maintainers=[view])
 
         parsed2v = rep.parse_batch(b2)  # uncached — see note above
         _, counts, _ = rep._batch_summary(parsed2v)
@@ -131,7 +119,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
 
         root = tempfile.mkdtemp(prefix="connemara_planaudit_m_")
         roots.append(root)
-        spec = fresh_spec()
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -142,11 +130,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             group_col="c_mktsegment", val_col="c_acctbal",
             val_type="decimal(12,2)", view_dir=f"{root}/mmview",
         )
-        parsed1m = rep.parse_batch(b1).persist()
-        mm.before_apply(parsed1m)
-        rep.apply_batch(b1, events=parsed1m)
-        mm.after_apply()
-        parsed1m.unpersist()
+        rep.step(b1, maintainers=[mm])
         parsed2m = rep.parse_batch(b2)
         mm.before_apply(parsed2m)
         rep.apply_batch(b2, events=parsed2m)
@@ -158,7 +142,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
 
         root = tempfile.mkdtemp(prefix="connemara_planaudit_t_")
         roots.append(root)
-        spec = fresh_spec()
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -169,11 +153,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             group_col="c_mktsegment", val_col="c_acctbal",
             k=5, slack=5, val_type="decimal(12,2)", view_dir=f"{root}/tkview",
         )
-        parsed1t = rep.parse_batch(b1).persist()
-        tk.before_apply(parsed1t)
-        rep.apply_batch(b1, events=parsed1t)
-        tk.after_apply()
-        parsed1t.unpersist()
+        rep.step(b1, maintainers=[tk])
         parsed2t = rep.parse_batch(b2)
         tk.before_apply(parsed2t)
         rep.apply_batch(b2, events=parsed2t)
@@ -185,7 +165,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
 
         root = tempfile.mkdtemp(prefix="connemara_planaudit_d_")
         roots.append(root)
-        spec = fresh_spec()
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -197,11 +177,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             val_pg_type="integer", view_dir=f"{root}/dcview",
             support_buckets=16,
         )
-        parsed1d = rep.parse_batch(b1).persist()
-        dc.before_apply(parsed1d)
-        rep.apply_batch(b1, events=parsed1d)
-        dc.after_apply()
-        parsed1d.unpersist()
+        rep.step(b1, maintainers=[dc])
         parsed2d = rep.parse_batch(b2)
         dc.before_apply(parsed2d)
         rep.apply_batch(b2, events=parsed2d)
@@ -214,16 +190,8 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
 
         root = tempfile.mkdtemp(prefix="connemara_planaudit_2s_")
         roots.append(root)
-        spec_a = TableSpec(
-            database="db1", schema="public", table="customer",
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=["c_custkey"],
-        )
-        spec_b = TableSpec(
-            database="db2", schema="public", table="orders",
-            columns=[ColumnSpec(c.name, c.pg_type) for c in ORDERS_CDC_SPEC.columns],
-            pk_cols=["o_orderkey"],
-        )
+        spec_a = _fresh_spec(CUSTOMER_SPEC)
+        spec_b = _fresh_spec(ORDERS_CDC_SPEC, database="db2")
         store2 = BucketStore(spark, root, n_buckets=32)
         store2.write(spec_a, snapshot)
         store2.write(
@@ -260,11 +228,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
             ],
             view_dir=f"{root}/view",
         )
-        parsed1_2 = rep2.parse_batch(b1_2).persist()
-        view2.before_apply(parsed1_2)
-        rep2.apply_batch(b1_2, events=parsed1_2)
-        view2.after_apply()
-        parsed1_2.unpersist()
+        rep2.step(b1_2, maintainers=[view2])
         parsed2_2 = rep2.parse_batch(b2_2)
         view2.before_apply(parsed2_2)
         rep2.apply_batch(b2_2, events=parsed2_2)

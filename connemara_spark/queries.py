@@ -562,12 +562,43 @@ def _event_lsn_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
         return int(row["lo"]), int(row["hi"])
 
 
+def _fresh_spec(spec: TableSpec, **changes) -> TableSpec:
+    """A private copy of a fixture spec (``changes`` override fields): DDL
+    evolves catalog specs IN PLACE, so every replay registers its own."""
+    import copy
+    import dataclasses
+
+    return dataclasses.replace(copy.deepcopy(spec), **changes)
+
+
 def _lsn_batch_ix(lo: int, step: int) -> Column:
-    """Batch index of a parsed CDC event under the standard lsn slicing
-    (``lsn_start in [lo + i*step, lo + (i+1)*step)`` → ``i``) — the
-    row-wise twin of the replay loops' per-batch filter, for
-    ``Replayer.batch_summaries`` (all batches' summaries in one job)."""
+    """Batch index of a CDC event under the standard lsn slicing
+    (``lsn_start in [lo + i*step, lo + (i+1)*step)`` → ``i``), the
+    ``batch_ix`` that ``Replayer.replay`` slices and summarizes by."""
     return F.expr(f"int((lsn_start - {lo}) div {step})")
+
+
+def _with_ddl_event(bronze: DataFrame, lsn: int, query: str) -> DataFrame:
+    """``bronze`` plus one captured DDL statement on db1 at ``lsn`` (the
+    reference's sql_ddl_statements insert, replay.pl:867) — the mid-stream
+    DDL of the schema-evolution gates."""
+    import datetime as _dt
+    import json as _json
+
+    ts = _dt.datetime(2024, 6, 1)
+    payload = _json.dumps(
+        {
+            "kind": "insert",
+            "schema": "public",
+            "table": "sql_ddl_statements",
+            "columnnames": ["id", "current_query", "search_path", "command_tags"],
+            "columnvalues": [str(lsn), query, '"$user", public', "{DDL}"],
+        }
+    )
+    row = bronze.sparkSession.createDataFrame(
+        [(ts, "db1", "slot_db1", lsn, lsn + 1000, ts, payload)], schema=bronze.schema
+    )
+    return bronze.unionByName(row)
 
 
 def _customer_cdc_bronze(
@@ -719,13 +750,7 @@ def cdc_apply_customer_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parity suites, bench loops — leave no disk growth
     root = tempfile.mkdtemp(prefix="connemara_bucketed_")
     store = BucketStore(spark, root, n_buckets=32)
-    spec = TableSpec(
-        database=CUSTOMER_SPEC.database,
-        schema=CUSTOMER_SPEC.schema,
-        table=CUSTOMER_SPEC.table,
-        columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-        pk_cols=list(CUSTOMER_SPEC.pk_cols),
-    )
+    spec = _fresh_spec(CUSTOMER_SPEC)
     store.write(spec, snapshot)
     cat = EngineCatalog()
     cat.register(spec)
@@ -735,19 +760,7 @@ def cdc_apply_customer_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = _event_lsn_bounds(spark, sf_dir)  # footer stats, no Spark job
     step = max((hi - lo) // 2 + 1, 1)
     try:
-        # ONE parse + checkpoint for the whole stream, sliced per batch
-        # (row-wise parse: filter∘parse == parse∘filter) — apply_batch runs
-        # several driver-synchronous jobs over each batch and every one of
-        # them reads shallow checkpoint blocks instead of re-parsing JSON
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        summaries = rep.batch_summaries(parsed_all, _lsn_batch_ix(lo, step))
-        for i, b0 in enumerate(range(lo, hi + 1, step)):
-            in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            rep.apply_batch(
-                bronze.filter(in_batch),
-                events=parsed_all.filter(in_batch),
-                summary=summaries.get(i, rep.empty_summary()),
-            )
+        rep.replay(bronze, _lsn_batch_ix(lo, step), len(range(lo, hi + 1, step)))
         # eager localCheckpoint pins the final state OFF the store paths
         # (ContextCleaner frees the blocks when the result is dropped)
         return store.read(spec).localCheckpoint()
@@ -780,13 +793,7 @@ def cdc_rebucket_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze = _customer_cdc_bronze(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="connemara_rebucket_")
     store = BucketStore(spark, root, n_buckets=8)
-    spec = TableSpec(
-        database=CUSTOMER_SPEC.database,
-        schema=CUSTOMER_SPEC.schema,
-        table=CUSTOMER_SPEC.table,
-        columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-        pk_cols=list(CUSTOMER_SPEC.pk_cols),
-    )
+    spec = _fresh_spec(CUSTOMER_SPEC)
     store.write(spec, snapshot)
     cat = EngineCatalog()
     cat.register(spec)
@@ -798,12 +805,12 @@ def cdc_rebucket_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one parse for both batches (row-wise; layout-independent, so the
         # mid-stream rebucket below cannot affect it), sliced per batch
         parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        # NOT batch_summaries here: batch 2's touched-bucket pricing must
-        # run under the modulus the mid-loop rebucket() installs — an
+        # a step per batch, NOT replay: batch 2's touched-bucket pricing
+        # must run under the modulus the mid-loop rebucket() installs — an
         # upfront all-batches summary would price it under modulus 8
         for i, b0 in enumerate(ranges):
             in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            rep.apply_batch(bronze.filter(in_batch), events=parsed_all.filter(in_batch))
+            rep.step(bronze.filter(in_batch), parsed=parsed_all.filter(in_batch))
             if i == 0:
                 # the idle-maintenance trigger's core action, exercised at
                 # the harshest point: between two batches of one stream —
@@ -823,8 +830,8 @@ def cdc_rebucket_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # family union) and the two *_certified gates replay the SAME CDC stream over
 # the SAME seed snapshot, differing only in which maintainer(s) ride the
 # replay and how many LSN batches cut it. This helper builds the fixture and
-# runs the multi-maintainer protocol exactly as StreamingReplayer drives
-# ``maintainers=[...]``; each registry query attaches ONLY the maintainer(s)
+# runs the maintainers through ``Replayer.replay`` — the per-batch step
+# StreamingReplayer runs too; each registry query attaches ONLY the maintainer(s)
 # whose view it returns and pays for its own replay on EVERY invocation —
 # a bench/oracle run always computes each query's result from the parquet
 # inputs (an earlier revision memoized the finished view frames per sf_dir
@@ -874,13 +881,7 @@ def _ivm_replay(
         spark, sf_dir, acctbal=_adv_grid_col() if certified else None
     )
     root = tempfile.mkdtemp(prefix="connemara_ivmfam_")
-    spec = TableSpec(
-        database=CUSTOMER_SPEC.database,
-        schema=CUSTOMER_SPEC.schema,
-        table=CUSTOMER_SPEC.table,
-        columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-        pk_cols=list(CUSTOMER_SPEC.pk_cols),
-    )
+    spec = _fresh_spec(CUSTOMER_SPEC)
     store = ParquetStore(spark, root)
     spark.sparkContext.setJobDescription("ivm: seed")
     store.write(spec, snapshot)
@@ -935,53 +936,13 @@ def _ivm_replay(
     step = max((hi - lo) // n_batches + 1, 1)
     jd = spark.sparkContext.setJobDescription  # phase labels for the UI/probe
     try:
-        # ONE parse + checkpoint for the whole stream, sliced per batch:
-        # parse/standard_filters/slot_restriction are row-wise, so
-        # filter(parse(bronze)) == parse(filter(bronze)) row-for-row — and
-        # the n per-batch parse checkpoints (a scheduler job + driver gap
-        # each) collapse into one. Downstream per-batch frames read local
-        # checkpoint blocks through a cheap lsn filter, keeping every
-        # maintainer/fold plan shallow exactly as before.
-        jd("ivm: parse")
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        # every batch's summary in ONE aggregation job over the checkpoint
-        # (row-wise batch assignment == the per-batch slice filters below)
-        jd("ivm: summaries")
-        summaries = rep.batch_summaries(parsed_all, _lsn_batch_ix(lo, step))
-        for i, b0 in enumerate(range(lo, hi + 1, step)):
-            in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            batch = bronze.filter(in_batch)
-            parsed = parsed_all.filter(in_batch)
-            summary = summaries.get(i, rep.empty_summary())
-            for v in views.values():
-                v.before_apply(parsed)
-            jd(f"ivm b{i}: fold")
-            rep.apply_batch(batch, events=parsed, summary=summary)
-            if len(views) > 1:
-                # the patches are independent (each view has its own
-                # view_dir; the store state they read is the same applied
-                # version) — submit them as CONCURRENT Spark jobs, same
-                # discipline as Replayer._apply_dml_segment's per-table
-                # folds: the batch's patch phase costs max(views), not
-                # sum(views). One shared static-plan context wraps all of
-                # them (the nested per-view context is then a no-op that
-                # captures and restores the already-patched settings).
-                from concurrent.futures import ThreadPoolExecutor
-
-                from connemara_spark.operators.ivm import _static_patch_plan
-
-                def _patch(item, _i=i):
-                    nm, v = item
-                    jd(f"ivm b{_i}: patch:{nm}")
-                    v.after_apply()
-
-                with _static_patch_plan(spark):
-                    with ThreadPoolExecutor(max_workers=len(views)) as ex:
-                        list(ex.map(_patch, views.items()))
-            else:
-                for nm, v in views.items():
-                    jd(f"ivm b{i}: patch:{nm}")
-                    v.after_apply()
+        # the maintainers ride Replayer.replay: one checkpointed parse and
+        # one summary job for the whole stream, then the production
+        # per-batch step (concurrent patches under one static-plan scope)
+        rep.replay(
+            bronze, _lsn_batch_ix(lo, step), len(range(lo, hi + 1, step)),
+            maintainers=list(views.values()), label="ivm",
+        )
         jd("ivm: read_view")
         return {nm: v.read_view().localCheckpoint() for nm, v in views.items()}
     finally:
@@ -1538,13 +1499,7 @@ def cdc_jdbc_apply_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     con.close()
     root = tempfile.mkdtemp(prefix="connemara_jdbcsink_")
     try:
-        spec = TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = BucketStore(spark, root, n_buckets=32)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -1565,29 +1520,13 @@ def cdc_jdbc_apply_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         jd = spark.sparkContext.setJobDescription
         jd("jdbc: bootstrap")
         sink.bootstrap_load(batch_id="bootstrap")
+        jd(None)
         lo, hi = _event_lsn_bounds(spark, sf_dir)  # footer stats, no Spark job
         step = max((hi - lo) // 2 + 1, 1)
-        # ONE parse + checkpoint for the whole stream, sliced per batch
-        # (row-wise parse; see _ivm_replay): the batch summary, touched-key
-        # pin, apply and sink ship all run shallow plans over the truncated
-        # lineage
-        jd("jdbc: parse")
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        jd("jdbc: summaries")
-        summaries = rep.batch_summaries(parsed_all, _lsn_batch_ix(lo, step))
-        for i, b0 in enumerate(range(lo, hi + 1, step)):
-            in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            batch = bronze.filter(in_batch)
-            parsed = parsed_all.filter(in_batch)
-            summary = summaries.get(i, rep.empty_summary())
-            sink.before_apply(
-                parsed, buckets=(summary[2] or {}).get(("db1", "public", "customer"))
-            )
-            jd(f"jdbc b{i}: fold")
-            rep.apply_batch(batch, events=parsed, summary=summary)
-            jd(f"jdbc b{i}: ship")
-            sink.after_apply(batch_id=f"batch-{i}")
-        jd(None)
+        rep.replay(
+            bronze, _lsn_batch_ix(lo, step), len(range(lo, hi + 1, step)),
+            maintainers=[sink], label="jdbc",
+        )
         # the RESULT is the live target read back over JDBC — value parity
         # against the oracle proves the delete+insert reconcile transaction
         # reproduced the folded state exactly
@@ -1787,20 +1726,8 @@ def cdc_jdbc_multi_table_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     con.close()
     root = tempfile.mkdtemp(prefix="connemara_multisink_")
     try:
-        cust_spec = TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
-        ord_spec = TableSpec(
-            database=ORDERS_CDC_SPEC.database,
-            schema=ORDERS_CDC_SPEC.schema,
-            table=ORDERS_CDC_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in ORDERS_CDC_SPEC.columns],
-            pk_cols=list(ORDERS_CDC_SPEC.pk_cols),
-        )
+        cust_spec = _fresh_spec(CUSTOMER_SPEC)
+        ord_spec = _fresh_spec(ORDERS_CDC_SPEC)
         store = BucketStore(spark, root, n_buckets=32)
         store.write(cust_spec, cust_snap)
         store.write(ord_spec, ord_snap)
@@ -1823,25 +1750,13 @@ def cdc_jdbc_multi_table_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         jd = spark.sparkContext.setJobDescription
         jd("jdbcmulti: bootstrap")
         sink.bootstrap_load_all(batch_id="bootstrap")
+        jd(None)
         lo, hi = _event_lsn_bounds(spark, sf_dir)  # footer stats, no Spark job
         step = max((hi - lo) // 2 + 1, 1)
-        # one parse + checkpoint, sliced per batch (see _ivm_replay);
-        # all batch summaries on one job
-        jd("jdbcmulti: parse")
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        jd("jdbcmulti: summaries")
-        summaries = rep.batch_summaries(parsed_all, _lsn_batch_ix(lo, step))
-        for i, b0 in enumerate(range(lo, hi + 1, step)):
-            in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            batch = bronze.filter(in_batch)
-            parsed = parsed_all.filter(in_batch)
-            summary = summaries.get(i, rep.empty_summary())
-            sink.before_apply(parsed, buckets=summary[2])
-            jd(f"jdbcmulti b{i}: fold")
-            rep.apply_batch(batch, events=parsed, summary=summary)
-            jd(f"jdbcmulti b{i}: ship")
-            sink.after_apply(batch_id=f"batch-{i}")
-        jd(None)
+        rep.replay(
+            bronze, _lsn_batch_ix(lo, step), len(range(lo, hi + 1, step)),
+            maintainers=[sink], label="jdbcmulti",
+        )
         # both live targets read back and projected onto one shape: the
         # hash covers every column of both tables' final state
         cust = spark.read.jdbc(url, "customer", properties=props).select(
@@ -1966,20 +1881,8 @@ def cdc_two_source_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = tempfile.mkdtemp(prefix="connemara_twosrc_")
-    spec_a = TableSpec(
-        database="db1",
-        schema="public",
-        table="customer",
-        columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-        pk_cols=["c_custkey"],
-    )
-    spec_b = TableSpec(
-        database="db2",
-        schema="public",
-        table="orders",
-        columns=[ColumnSpec(c.name, c.pg_type) for c in ORDERS_CDC_SPEC.columns],
-        pk_cols=["o_orderkey"],
-    )
+    spec_a = _fresh_spec(CUSTOMER_SPEC)
+    spec_b = _fresh_spec(ORDERS_CDC_SPEC, database="db2")
     store = BucketStore(spark, root, n_buckets=32)
     store.write(spec_a, cust_snap)
     store.write(spec_b, ord_snap)
@@ -2002,22 +1905,12 @@ def cdc_two_source_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = _event_lsn_bounds(spark, sf_dir)  # footer stats, no Spark job
     step = max((hi - lo) // 2 + 1, 1)
     try:
-        # the maintainer protocol exactly as StreamingReplayer drives it:
-        # ONE localCheckpoint-pinned parse for the whole stream, sliced per
-        # batch (row-wise parse; see _ivm_replay) and shared by summary,
-        # touched-key pin and apply — parse_batch applies the slot
-        # restriction, so the rogue stream never reaches the fold OR the
-        # view's touched-key set
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        summaries = rep.batch_summaries(parsed_all, _lsn_batch_ix(lo, step))
-        for i, b0 in enumerate(range(lo, hi + 1, step)):
-            in_batch = (F.col("lsn_start") >= b0) & (F.col("lsn_start") < b0 + step)
-            batch = bronze.filter(in_batch)
-            parsed = parsed_all.filter(in_batch)
-            summary = summaries.get(i, rep.empty_summary())
-            view.before_apply(parsed)
-            rep.apply_batch(batch, events=parsed, summary=summary)
-            view.after_apply()
+        # parse_batch applies the slot restriction, so the rogue stream
+        # never reaches the fold OR the view's touched-key set
+        rep.replay(
+            bronze, _lsn_batch_ix(lo, step), len(range(lo, hi + 1, step)),
+            maintainers=[view],
+        )
         return view.read_view().localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -2095,8 +1988,6 @@ _TWO_SOURCE_DDL_JOIN_ORACLE = """
     "surviving the rename under the new name",
 )
 def cdc_two_source_ddl_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime as _dt
-    import json as _json
     import shutil
     import tempfile
 
@@ -2126,42 +2017,16 @@ def cdc_two_source_ddl_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bronze subtree is analyzed once, inside that job)
     bronze = cust_bronze.unionByName(ord_bronze)
     ddl_lsn = 2 * rename_from - 2
-    ts = _dt.datetime(2024, 6, 1)
-    ddl_row = spark.createDataFrame(
-        [
-            (
-                ts, "db1", "slot_db1", ddl_lsn, ddl_lsn + 1000, ts,
-                _json.dumps(
-                    {
-                        "kind": "insert",
-                        "schema": "public",
-                        "table": "sql_ddl_statements",
-                        "columnnames": ["id", "current_query", "search_path", "command_tags"],
-                        "columnvalues": [
-                            str(ddl_lsn),
-                            "ALTER TABLE public.customer RENAME COLUMN "
-                            "c_mktsegment TO c_segment",
-                            '"$user", public',
-                            "{DDL}",
-                        ],
-                    }
-                ),
-            )
-        ],
-        schema=bronze.schema,
+    bronze = _with_ddl_event(
+        bronze,
+        ddl_lsn,
+        "ALTER TABLE public.customer RENAME COLUMN "
+        "c_mktsegment TO c_segment",
     )
     root = tempfile.mkdtemp(prefix="connemara_twosrc_ddl_")
     try:
-        spec_a = TableSpec(
-            database="db1", schema="public", table="customer",
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=["c_custkey"],
-        )
-        spec_b = TableSpec(
-            database="db2", schema="public", table="orders",
-            columns=[ColumnSpec(c.name, c.pg_type) for c in ORDERS_CDC_SPEC.columns],
-            pk_cols=["o_orderkey"],
-        )
+        spec_a = _fresh_spec(CUSTOMER_SPEC)
+        spec_b = _fresh_spec(ORDERS_CDC_SPEC, database="db2")
         store = ParquetStore(spark, root)
         store.write(spec_a, cust_snap)
         store.write(spec_b, ord_snap)
@@ -2183,81 +2048,48 @@ def cdc_two_source_ddl_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         hi_lsn = 2 * hi + 1
         mid2 = ddl_lsn + max((hi_lsn - ddl_lsn) // 2, 1)
-        # ONE parse + checkpoint for the whole interleaved stream, sliced
-        # per batch (row-wise parse; see _ivm_replay); the 1-row DDL event
-        # is parsed separately (a driver-local frame) and unioned into its
-        # batch's parsed slice exactly where its bronze row would sit
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        parsed_ddl = rep.parse_batch(ddl_row)
-        cut1 = F.col("lsn_start") < ddl_lsn // 2
-        cut2 = (F.col("lsn_start") >= ddl_lsn // 2) & (F.col("lsn_start") < ddl_lsn)
-        # the DDL rides a batch that also carries post-DDL DML from
-        # BOTH sources (payloads already under the new column name)
-        cut3 = (F.col("lsn_start") > ddl_lsn) & (F.col("lsn_start") <= mid2)
-        cut4 = F.col("lsn_start") > mid2
-        batches = [
-            # two pre-DDL batches so the view is genuinely maintained (not
-            # bootstrap-only) before the DDL hits it
-            (bronze.filter(cut1), parsed_all.filter(cut1)),
-            (bronze.filter(cut2), parsed_all.filter(cut2)),
-            (
-                bronze.filter(cut3).unionByName(ddl_row),
-                parsed_all.filter(cut3).unionByName(parsed_ddl),
-            ),
-            (bronze.filter(cut4), parsed_all.filter(cut4)),
-        ]
-        # all four batch summaries in ONE job over checkpoint ∪ DDL row —
-        # the CASE below is the row-wise twin of cut1..cut4 (the DDL event
-        # itself sits at lsn == ddl_lsn, which only batch 3's union admits).
-        # Grid-parity invariant the `<= mid2 -> 2` arm depends on: parsed_all
-        # rows occupy lsn % 4 == 0 (customer) or odd lsns (orders), so the
-        # ddl_lsn slot (% 4 == 2) admits ONLY the unioned parsed_ddl row —
-        # a parsed_all row there would be summarized into batch 2 yet
-        # excluded from every applied slice (cut2 is < ddl_lsn, cut3 is
-        # > ddl_lsn). Assert it so a future edit of the rename_from
-        # rounding cannot silently overcount batch 2's summary.
-        assert ddl_lsn % 4 == 2, (
-            f"ddl_lsn {ddl_lsn} must sit on the % 4 == 2 slot neither "
-            "source stream occupies"
-        )
+        # two pre-DDL batches so the view is genuinely maintained (not
+        # bootstrap-only) before the DDL hits it; the DDL rides batch 2
+        # with post-DDL DML from BOTH sources (payloads already under the
+        # new column name)
         bix = (
             F.when(F.col("lsn_start") < ddl_lsn // 2, 0)
             .when(F.col("lsn_start") < ddl_lsn, 1)
             .when(F.col("lsn_start") <= mid2, 2)
             .otherwise(3)
         )
-        summaries = rep.batch_summaries(
-            parsed_all.unionByName(parsed_ddl), bix
-        )
+        # a step per batch, NOT replay: the view is rebuilt between batches
+        # once check_schema trips. One checkpointed parse, sliced per batch.
+        parsed_all = rep.parse_batch(bronze).localCheckpoint()
         stale_seen = False
-        for i, (batch, parsed) in enumerate(batches):
-            summary = summaries.get(i, rep.empty_summary())
-            view.before_apply(parsed)
-            metrics = rep.apply_batch(batch, events=parsed, summary=summary)
-            if getattr(metrics, "ddl_executed", 0):
-                # the StreamingReplayer contract: verify view columns
-                # survived the DDL BEFORE patching
-                try:
-                    view.check_schema(cat)
-                except RuntimeError:
-                    stale_seen = True
-                    # documented remediation: drop and rebuild against
-                    # the evolved spec — the rebuilt view bootstraps
-                    # from current store state on its next batch
-                    evolved = cat.get("db1", "public", "customer")
-                    assert [c.name for c in evolved.columns][-1] == "c_segment"
-                    view = MaintainedTwoTableJoinView(
-                        spark, store, evolved, spec_b,
-                        key_a="c_custkey", key_b="o_orderkey",
-                        view_cols=[
-                            "c_custkey", "c_name", "c_nationkey", "c_acctbal",
-                            "c_segment",
-                            "o_custkey", "o_orderstatus", "o_totalprice",
-                        ],
-                        view_dir=f"{root}/view2",
-                    )
-                    continue  # the broken view is never patched
-            view.after_apply()
+        for i in range(4):
+            try:
+                rep.step(
+                    bronze.filter(bix == i),
+                    parsed=parsed_all.filter(bix == i),
+                    maintainers=[view],
+                )
+            except RuntimeError as exc:
+                # step runs check_schema after the DDL, BEFORE any patch
+                if "rebuild the view" not in str(exc):
+                    raise
+                stale_seen = True
+                # documented remediation: drop and rebuild against the
+                # evolved spec — the rebuilt view bootstraps from current
+                # store state on its next batch; the broken view is never
+                # patched
+                evolved = cat.get("db1", "public", "customer")
+                assert [c.name for c in evolved.columns][-1] == "c_segment"
+                view = MaintainedTwoTableJoinView(
+                    spark, store, evolved, spec_b,
+                    key_a="c_custkey", key_b="o_orderkey",
+                    view_cols=[
+                        "c_custkey", "c_name", "c_nationkey", "c_acctbal",
+                        "c_segment",
+                        "o_custkey", "o_orderstatus", "o_totalprice",
+                    ],
+                    view_dir=f"{root}/view2",
+                )
         if not stale_seen:
             raise RuntimeError(
                 "the rename must trip check_schema's staleness contract"
@@ -2445,42 +2277,9 @@ def cdc_jdbc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the DDL event sits at the free odd LSN just below the first post-DDL
     # event (lsn = 2*event_id keeps odds free), so the single stream is
     # LSN-monotone: ... pre-DDL DML < DDL < post-DDL DML ...
-    import datetime as _dt
-    import json as _json
-
     ddl_lsn = 2 * note_from - 1
-    ts = _dt.datetime(2024, 6, 1)
-    ddl_row = spark.createDataFrame(
-        [
-            (
-                ts,
-                "db1",
-                "slot_db1",
-                ddl_lsn,
-                ddl_lsn + 1000,
-                ts,
-                _json.dumps(
-                    {
-                        "kind": "insert",
-                        "schema": "public",
-                        "table": "sql_ddl_statements",
-                        "columnnames": [
-                            "id",
-                            "current_query",
-                            "search_path",
-                            "command_tags",
-                        ],
-                        "columnvalues": [
-                            str(ddl_lsn),
-                            "ALTER TABLE public.customer ADD COLUMN c_note text",
-                            '"$user", public',
-                            "{DDL}",
-                        ],
-                    }
-                ),
-            )
-        ],
-        schema=bronze.schema,
+    bronze = _with_ddl_event(
+        bronze, ddl_lsn, "ALTER TABLE public.customer ADD COLUMN c_note text"
     )
     dbname = f"connemara_evolve_{uuid.uuid4().hex}"
     url = f"jdbc:derby:memory:{dbname}"
@@ -2496,13 +2295,7 @@ def cdc_jdbc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     con.close()
     root = tempfile.mkdtemp(prefix="connemara_evolvesink_")
     try:
-        spec = TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = BucketStore(spark, root, n_buckets=32)
         store.write(spec, snapshot)
         cat = EngineCatalog()
@@ -2515,37 +2308,16 @@ def cdc_jdbc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             staging_partitions=1,
         )
         sink.bootstrap_load(batch_id="bootstrap")
-        # batch 1: pre-DDL DML only; batch 2: the DDL event AND the
-        # post-DDL DML in ONE batch — the apply cuts at the barrier.
-        # ONE parse + checkpoint, sliced per batch (see _ivm_replay); the
-        # 1-row DDL event parses driver-locally into its batch's slice.
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        parsed_ddl = rep.parse_batch(ddl_row)
-        pre, post = F.col("lsn_start") < ddl_lsn, F.col("lsn_start") > ddl_lsn
-        batches = [
-            (bronze.filter(pre), parsed_all.filter(pre)),
-            (
-                bronze.filter(post).unionByName(ddl_row),
-                parsed_all.filter(post).unionByName(parsed_ddl),
-            ),
-        ]
-        # both batch summaries in one job (DDL row rides batch 1's slice)
-        summaries = rep.batch_summaries(
-            parsed_all.unionByName(parsed_ddl),
+        # batch 0: pre-DDL DML only; batch 1: the DDL event AND the
+        # post-DDL DML in ONE batch — the apply cuts at the barrier, and
+        # step's check_schema makes the target follow the DDL BEFORE the
+        # batch's slice ships
+        rep.replay(
+            bronze,
             F.when(F.col("lsn_start") < ddl_lsn, 0).otherwise(1),
+            2,
+            maintainers=[sink],
         )
-        for i, (batch, parsed) in enumerate(batches):
-            summary = summaries.get(i, rep.empty_summary())
-            sink.before_apply(
-                parsed, buckets=(summary[2] or {}).get(("db1", "public", "customer"))
-            )
-            metrics = rep.apply_batch(batch, events=parsed, summary=summary)
-            if metrics.ddl_executed:
-                # the streaming driver's exact protocol: DDL evolved the
-                # catalog mid-batch, so the target follows BEFORE the
-                # batch's slice ships (driver.py:207-211)
-                sink.check_schema(cat)
-            sink.after_apply(batch_id=f"batch-{i}")
         return (
             spark.read.jdbc(url, "customer", properties=props)
             .select(*[c.name for c in cat.get("db1", "public", "customer").columns])
@@ -2664,8 +2436,6 @@ def _rename_column_oracle(sf_dir: str) -> str:
     oracle_fn=_rename_column_oracle,
 )
 def cdc_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime as _dt
-    import json as _json
     import shutil
     import tempfile
 
@@ -2677,74 +2447,27 @@ def cdc_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename_from = lo + (hi - lo) // 2 + 1  # first post-DDL event_id
     bronze = _renaming_customer_bronze(spark, sf_dir, rename_from)
     ddl_lsn = 2 * rename_from - 1
-    ts = _dt.datetime(2024, 6, 1)
-    ddl_row = spark.createDataFrame(
-        [
-            (
-                ts,
-                "db1",
-                "slot_db1",
-                ddl_lsn,
-                ddl_lsn + 1000,
-                ts,
-                _json.dumps(
-                    {
-                        "kind": "insert",
-                        "schema": "public",
-                        "table": "sql_ddl_statements",
-                        "columnnames": [
-                            "id",
-                            "current_query",
-                            "search_path",
-                            "command_tags",
-                        ],
-                        "columnvalues": [
-                            str(ddl_lsn),
-                            "ALTER TABLE public.customer RENAME COLUMN "
-                            "c_mktsegment TO c_segment",
-                            '"$user", public',
-                            "{DDL}",
-                        ],
-                    }
-                ),
-            )
-        ],
-        schema=bronze.schema,
+    bronze = _with_ddl_event(
+        bronze,
+        ddl_lsn,
+        "ALTER TABLE public.customer RENAME COLUMN "
+        "c_mktsegment TO c_segment",
     )
     root = tempfile.mkdtemp(prefix="connemara_rename_")
     try:
-        spec = TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
         cat.register(spec)
         rep = Replayer(spark, cat, store)
-        # batch 1: pre-DDL DML only; batch 2: the RENAME event AND the
+        # batch 0: pre-DDL DML only; batch 1: the RENAME event AND the
         # post-DDL DML (already decoded under the NEW name) in ONE batch.
-        # ONE parse + checkpoint, sliced per batch (see _ivm_replay).
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        parsed_ddl = rep.parse_batch(ddl_row)
-        pre, post = F.col("lsn_start") < ddl_lsn, F.col("lsn_start") > ddl_lsn
-        batches = [
-            (bronze.filter(pre), parsed_all.filter(pre)),
-            (
-                bronze.filter(post).unionByName(ddl_row),
-                parsed_all.filter(post).unionByName(parsed_ddl),
-            ),
-        ]
-        summaries = rep.batch_summaries(
-            parsed_all.unionByName(parsed_ddl),
+        rep.replay(
+            bronze,
             F.when(F.col("lsn_start") < ddl_lsn, 0).otherwise(1),
+            2,
         )
-        for i, (batch, parsed) in enumerate(batches):
-            summary = summaries.get(i, rep.empty_summary())
-            rep.apply_batch(batch, events=parsed, summary=summary)
         evolved = cat.get("db1", "public", "customer")
         assert [c.name for c in evolved.columns][-1] == "c_segment"
         return (
@@ -2864,8 +2587,6 @@ def _drop_column_oracle(sf_dir: str) -> str:
     oracle_fn=_drop_column_oracle,
 )
 def cdc_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime as _dt
-    import json as _json
     import shutil
     import tempfile
 
@@ -2877,74 +2598,24 @@ def cdc_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_from = lo + (hi - lo) // 2 + 1  # first post-DDL event_id
     bronze = _dropping_customer_bronze(spark, sf_dir, drop_from)
     ddl_lsn = 2 * drop_from - 1
-    ts = _dt.datetime(2024, 6, 1)
-    ddl_row = spark.createDataFrame(
-        [
-            (
-                ts,
-                "db1",
-                "slot_db1",
-                ddl_lsn,
-                ddl_lsn + 1000,
-                ts,
-                _json.dumps(
-                    {
-                        "kind": "insert",
-                        "schema": "public",
-                        "table": "sql_ddl_statements",
-                        "columnnames": [
-                            "id",
-                            "current_query",
-                            "search_path",
-                            "command_tags",
-                        ],
-                        "columnvalues": [
-                            str(ddl_lsn),
-                            "ALTER TABLE public.customer DROP COLUMN "
-                            "c_mktsegment",
-                            '"$user", public',
-                            "{DDL}",
-                        ],
-                    }
-                ),
-            )
-        ],
-        schema=bronze.schema,
+    bronze = _with_ddl_event(
+        bronze, ddl_lsn, "ALTER TABLE public.customer DROP COLUMN c_mktsegment"
     )
     root = tempfile.mkdtemp(prefix="connemara_dropcol_")
     try:
-        spec = TableSpec(
-            database=CUSTOMER_SPEC.database,
-            schema=CUSTOMER_SPEC.schema,
-            table=CUSTOMER_SPEC.table,
-            columns=[ColumnSpec(c.name, c.pg_type) for c in CUSTOMER_SPEC.columns],
-            pk_cols=list(CUSTOMER_SPEC.pk_cols),
-        )
+        spec = _fresh_spec(CUSTOMER_SPEC)
         store = ParquetStore(spark, root)
         store.write(spec, snapshot)
         cat = EngineCatalog()
         cat.register(spec)
         rep = Replayer(spark, cat, store)
-        # batch 1: pre-DDL DML only; batch 2: the DROP event AND the
+        # batch 0: pre-DDL DML only; batch 1: the DROP event AND the
         # post-DDL DML (already narrowed to four columns) in ONE batch.
-        # ONE parse + checkpoint, sliced per batch (see _ivm_replay).
-        parsed_all = rep.parse_batch(bronze).localCheckpoint()
-        parsed_ddl = rep.parse_batch(ddl_row)
-        pre, post = F.col("lsn_start") < ddl_lsn, F.col("lsn_start") > ddl_lsn
-        batches = [
-            (bronze.filter(pre), parsed_all.filter(pre)),
-            (
-                bronze.filter(post).unionByName(ddl_row),
-                parsed_all.filter(post).unionByName(parsed_ddl),
-            ),
-        ]
-        summaries = rep.batch_summaries(
-            parsed_all.unionByName(parsed_ddl),
+        rep.replay(
+            bronze,
             F.when(F.col("lsn_start") < ddl_lsn, 0).otherwise(1),
+            2,
         )
-        for i, (batch, parsed) in enumerate(batches):
-            summary = summaries.get(i, rep.empty_summary())
-            rep.apply_batch(batch, events=parsed, summary=summary)
         evolved = cat.get("db1", "public", "customer")
         assert [c.name for c in evolved.columns] == [
             "c_custkey",

@@ -28,9 +28,10 @@ id already in the ledger is skipped before any work, and the ledger
 insert commits atomically WITH the data, so a crash either applied
 nothing or recorded the application.
 
-Protocol: ``before_apply(parsed_events)`` pins the batch's touched keys
-(same hook as the view maintainers — StreamingReplayer drives this class
-via ``maintainers=[...]``); ``after_apply()`` ships and merges.
+Protocol: ``before_apply(parsed_events, buckets=None)`` pins the batch's
+touched keys (same hook as the view maintainers — ``Replayer.step`` drives
+this class via ``maintainers=[...]``); ``after_apply(batch_id=None)`` ships
+and merges.
 
 ``JdbcMultiApplySink`` extends the discipline across SEVERAL target
 tables with ONE reconcile transaction — the reference's per-source-
@@ -45,6 +46,7 @@ import logging
 from pyspark.sql import functions as F
 
 from connemara_spark.operators.ivm import touched_keys
+from connemara_spark.pipeline import run_legs
 
 _log = logging.getLogger(__name__)
 
@@ -71,19 +73,6 @@ def _sql_state(exc) -> str | None:
         get_cause = getattr(java_exc, "getCause", None)
         java_exc = get_cause() if get_cause is not None else None
     return None
-
-
-def _run_legs(thunks):
-    """Run independent per-table legs (each a zero-arg callable submitting
-    its own Spark jobs) concurrently, preserving input order in the
-    results; single-leg lists run inline. First failure propagates — the
-    caller's batch retry is idempotent (ledger skip / replacement)."""
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as ex:
-        return list(ex.map(lambda t: t(), thunks))
 
 
 def _with_write_defaults(properties: dict[str, str] | None) -> dict[str, str]:
@@ -346,7 +335,7 @@ class JdbcApplySink(_JdbcLedgerBase):
         # a distributed sink defaults to the cautious half of that)
         self.follow_destructive = follow_destructive
         self.type_overrides = type_overrides or {}
-        self._touched = None
+        self._touched = self._touched_buckets = None
         self._ensure_ledger()
         # auto-assigned batch ids must survive process restarts: a fresh
         # counter starting at 1 would collide with ledger entries from the
@@ -354,15 +343,16 @@ class JdbcApplySink(_JdbcLedgerBase):
         # the highest committed sequence instead
         self._batch_seq = self._max_committed_seq()
 
-    # -- maintainer protocol (driven by StreamingReplayer) -----------------
-    def before_apply(self, parsed_events, buckets: list[int] | None = None) -> None:
+    # -- maintainer protocol (driven by Replayer.step) ---------------------
+    def before_apply(self, parsed_events, buckets: dict | None = None) -> None:
         # lazy pin: derives from the immutable (cached) parsed batch only,
         # so post-apply evaluation sees identical keys — and the pin costs
         # zero jobs (ivm.MaintainedTwoTableJoinView.before_apply).
-        # ``buckets``: this table's touched-bucket ids from the batch
-        # summary, when the driver loop has them (see _stage_slice).
+        # ``buckets``: the batch summary's {(db, schema, table): touched
+        # bucket ids}; this table's entry spares the staging read its
+        # buckets_of collect (see _stage_slice)
         self._touched = touched_keys(parsed_events, self.spec)
-        self._touched_buckets = buckets
+        self._touched_buckets = (buckets or {}).get(self.spec.qualified_key)
 
     def after_apply(self, batch_id: str | None = None) -> None:
         """Ship and merge the batch. With an explicit ``batch_id`` (one
@@ -379,9 +369,7 @@ class JdbcApplySink(_JdbcLedgerBase):
             batch_id = f"seq-{self._batch_seq}"
         try:
             self.apply_touched(
-                self._touched,
-                batch_id=batch_id,
-                buckets=getattr(self, "_touched_buckets", None),
+                self._touched, batch_id=batch_id, buckets=self._touched_buckets
             )
         finally:
             self._touched = self._touched_buckets = None
@@ -670,7 +658,7 @@ class JdbcMultiApplySink(_JdbcLedgerBase):
 
         # each table stages to ITS OWN staging table — independent
         # distributed writes, submitted concurrently (see apply_touched_all)
-        staged = _run_legs(
+        staged = run_legs(
             [(lambda s=spec, t=target: stage_one(s, t)) for spec, target in self.targets]
         )
         con = self._connect()
@@ -721,7 +709,7 @@ class JdbcMultiApplySink(_JdbcLedgerBase):
         # max(tables), not sum(tables). Only the single reconcile
         # TRANSACTION below is inherently serial (that is the atomicity
         # guarantee, not a bottleneck: it is set-based DML at the target).
-        staged = _run_legs(
+        staged = run_legs(
             [
                 (lambda leg=leg: stage_one(*leg))
                 for leg in legs

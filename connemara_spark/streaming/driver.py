@@ -5,9 +5,13 @@ Maps the reference's two daemons onto Structured Streaming (SURVEY §3.2/3.3):
 - the C WAL receiver's role (protocol → spool) is played by whatever lands
   bronze files (a Debezium-style connector, Kafka sink, file drop); the
   engine reads the landing zone as a stream — S1's idiomatic mapping.
-- the Perl replayer's role is the batch core (`Replayer.apply_batch`) called
-  from ``foreachBatch`` — one microbatch == one spool pass == one commit
-  barrier (W2/W5 are implicit in Spark's microbatch model).
+- the Perl replayer's role is the engine's one per-batch protocol,
+  ``Replayer.step`` (parse, summary, maintainer pins, DDL-barrier apply,
+  schema checks, concurrent maintainer patches), called once from
+  ``foreachBatch`` — one microbatch == one spool pass == one commit barrier
+  (W2/W5 are implicit in Spark's microbatch model). ``_foreach_batch`` adds
+  only what is streaming-specific: segment-path expansion, the watermark
+  filter, the batch cache and the watermark advance.
 
 Exactly-once (W3, the replication-origin analog): the streaming checkpoint
 dedups source files, and a per-(database, slot) **LSN high-watermark** file
@@ -33,17 +37,6 @@ from pyspark.sql import functions as F
 from connemara_spark.catalog import EngineCatalog
 from connemara_spark.events import BRONZE_SCHEMA
 from connemara_spark.pipeline import Replayer
-
-
-def _accepts_batch_id(maintainer) -> bool:
-    """Whether the maintainer's after_apply takes a batch_id kwarg (the
-    JDBC sink does; the view maintainers don't)."""
-    import inspect
-
-    try:
-        return "batch_id" in inspect.signature(maintainer.after_apply).parameters
-    except (TypeError, ValueError):
-        return False
 
 
 class LsnWatermark:
@@ -191,35 +184,13 @@ class StreamingReplayer:
         # Cache the batch once; measured 17.4s -> 13.7s on a 100k-event
         # drain (and 5.6s -> 3.2s on a 10k incremental batch). Bounded by the microbatch size (W6 backpressure).
         fresh = self.watermark.filter_applied(bronze).persist()
-        parsed = None
         try:
-            summary = None
-            if self.maintainers:
-                # ONE parse shared with the apply, with the same slot/standard
-                # filters — maintainers must never see events the replayer
-                # drops. Cache it and run the batch summary FIRST so the
-                # cache fill lands on that job and every maintainer pin
-                # (touched-keys localCheckpoint) rides the warm cache.
-                parsed = self.replayer.parse_batch(fresh).persist()
-                summary = self.replayer._batch_summary(parsed)
-                for m in self.maintainers:
-                    m.before_apply(parsed)
-            metrics = self.replayer.apply_batch(
-                fresh, events=parsed, summary=summary
+            self.replayer.step(
+                fresh,
+                maintainers=self.maintainers,
+                batch_id=f"stream-{batch_id}" if self.deterministic_sink_ids else None,
+                label=f"stream b{batch_id}",
             )
-            if metrics.ddl_executed:
-                # mid-stream DDL may have evolved a maintained view's base
-                # table: verify each view's columns survived BEFORE
-                # patching, so a dropped/renamed aggregate column fails
-                # loudly here instead of silently null-filling the view
-                for m in self.maintainers:
-                    if hasattr(m, "check_schema"):
-                        m.check_schema(self.replayer.catalog)
-            for m in self.maintainers:
-                if self.deterministic_sink_ids and _accepts_batch_id(m):
-                    m.after_apply(batch_id=f"stream-{batch_id}")
-                else:
-                    m.after_apply()
             maxes = (
                 fresh.groupBy("database", "source_slotname")
                 .agg(F.max("lsn_start").alias("max_lsn"))
@@ -230,8 +201,6 @@ class StreamingReplayer:
             )
             self.batches_applied += 1
         finally:
-            if parsed is not None:
-                parsed.unpersist()
             fresh.unpersist()
 
     def start(self, *, available_now: bool = False, processing_time: str = "15 seconds"):

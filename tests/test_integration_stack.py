@@ -109,16 +109,21 @@ def test_full_stack_life_story(spark, tmp_path):
 
     # 4. crash between store-advance and view-write; restart converges
     class Crash:
-        def before_apply(self, parsed):
-            pass
+        """Wraps the view: the store advances, the view write never runs."""
 
-        def after_apply(self):
+        def __init__(self, view):
+            self.view = view
+
+        def before_apply(self, parsed, buckets=None):
+            self.view.before_apply(parsed, buckets=buckets)
+
+        def after_apply(self, batch_id=None):
             raise RuntimeError("injected crash")
 
     seg([make_event(spec, "update", lsn=16, row={"id": 1, "grp": "b", "amount": 100.0}, old_key={"id": 1})],
         "seg-004")
     with pytest.raises(Exception, match="injected crash"):
-        make_sr([Crash(), view]).run_until_drained()
+        make_sr([Crash(view)]).run_until_drained()
     view = make_view()  # process death: fresh objects, same dirs
     make_sr([view]).run_until_drained()
     check(view)

@@ -471,24 +471,28 @@ def test_streaming_crash_between_store_advance_and_view_write_recovers(spark, tm
     assert view._meta()["version"] == 1
 
     class CrashAfterStoreAdvance:
-        """Maintainer ordered AFTER the view's before_apply but whose
-        after_apply fires FIRST — the view's write never happens, the
-        store's apply already did: exactly the crash window."""
+        """Wraps the view: its pin runs, the store's apply lands, then the
+        patch dies before the view's write — exactly the crash window.
+        (Maintainer patches run concurrently, so a SEPARATE crashing
+        maintainer would not stop the view's own patch from landing.)"""
 
-        def before_apply(self, parsed):
-            pass
+        def __init__(self, view):
+            self.view = view
 
-        def after_apply(self):
+        def before_apply(self, parsed, buckets=None):
+            self.view.before_apply(parsed, buckets=buckets)
+
+        def after_apply(self, batch_id=None):
             raise RuntimeError("injected crash between store advance and view write")
 
     seg([make_event(spec, "update", lsn=3, row={"id": 1, "grp": "b", "amount": 11.0}, old_key={"id": 1}),
          make_event(spec, "insert", lsn=4, row={"id": 5, "grp": "a", "amount": 2.0})],
         "seg-002")
-    crasher = CrashAfterStoreAdvance()
+    crasher = CrashAfterStoreAdvance(view)
     # fail-fast (W9): the injected error kills the query; awaitTermination
     # surfaces it as a StreamingQueryException wrapping our RuntimeError
     with pytest.raises(Exception, match="injected crash"):
-        make_sr([crasher, view]).run_until_drained()
+        make_sr([crasher]).run_until_drained()
     # store advanced, view did not, stream checkpoint did not commit
     assert view._meta()["version"] == 1
     assert store.current_version(spec.target_name) > 1

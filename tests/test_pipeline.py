@@ -475,3 +475,107 @@ def test_batch_summaries_equal_per_batch(spark, tmp_path):
     # matches _batch_summary over an empty slice
     assert rep.batch_summaries(parsed.filter(F.lit(False)), F.lit(0)) == {}
     assert rep.empty_summary() == rep._batch_summary(parsed.filter(F.lit(False)))
+
+
+def _sales_engine(spark, tmp_path):
+    spec = TableSpec(
+        database="db1", schema="public", table="sales",
+        columns=[ColumnSpec("id", "bigint"), ColumnSpec("grp", "text"),
+                 ColumnSpec("amount", "double precision")],
+        pk_cols=["id"],
+    )
+    cat = EngineCatalog()
+    cat.register(spec)
+    spec = cat.get("db1", "public", "sales")
+    store = ParquetStore(spark, str(tmp_path / "silver"))
+    return spec, store, Replayer(spark, cat, store)
+
+
+def test_step_concurrent_patches_do_not_leak_session_config(spark, tmp_path):
+    """step patches its maintainers concurrently inside ONE static-plan
+    scope: every patch sees AQE off, and afterwards the session's AQE and
+    shuffle-partition settings equal their values before the step —
+    whether the patches pass or one of them raises."""
+    from connemara_spark.operators.ivm import MaintainedMinMaxView, MaintainedTopKView
+
+    spec, store, rep = _sales_engine(spark, tmp_path)
+    mm = MaintainedMinMaxView(
+        spark, store, spec, group_col="grp", val_col="amount",
+        view_dir=str(tmp_path / "mm"),
+    )
+    tk = MaintainedTopKView(
+        spark, store, spec, group_col="grp", val_col="amount",
+        k=2, view_dir=str(tmp_path / "tk"),
+    )
+    seen = []
+
+    class Probe:
+        def before_apply(self, parsed, buckets=None):
+            pass
+
+        def after_apply(self, batch_id=None):
+            seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    assert before["spark.sql.adaptive.enabled"] == "true"
+
+    def batch(lsn0):
+        return bronze_df(spark, [
+            make_event(spec, "insert", lsn=lsn0 + i,
+                       row={"id": lsn0 + i, "grp": "ab"[i % 2], "amount": float(i)})
+            for i in range(4)
+        ])
+
+    rep.step(batch(1), maintainers=[mm, tk, Probe()])
+    assert seen == ["false"]
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert {r["grp"] for r in mm.read_view().collect()} == {"a", "b"}
+
+    def boom():
+        raise RuntimeError("injected patch failure")
+
+    tk._after_apply_impl = boom
+    with pytest.raises(RuntimeError, match="injected patch failure"):
+        rep.step(batch(10), maintainers=[mm, tk])
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_replay_rejects_batch_index_outside_range(spark, engine):
+    """Rows indexed outside 0..n_batches-1 would never be applied: replay
+    fails loudly instead of dropping them."""
+    from pyspark.sql import functions as F
+
+    cat, store, rep = engine
+    spec = cat.get("db1", "public", "items")
+    bronze = bronze_df(spark, [
+        make_event(spec, "insert", lsn=lsn, row={"id": lsn, "v": "x"})
+        for lsn in (1, 2, 3)
+    ])
+    with pytest.raises(ValueError, match="outside 0..1"):
+        rep.replay(bronze, F.col("lsn_start").cast("int") - 1, 2)
+    metrics = rep.replay(bronze, (F.col("lsn_start") > 1).cast("int"), 2)
+    assert [m.tables_touched for m in metrics] == [1, 1]
+    assert sorted(r["id"] for r in store.read(spec).collect()) == [1, 2, 3]
+
+
+def test_no_hand_rolled_replay_loops():
+    """The per-batch protocol has ONE implementation (Replayer.step /
+    Replayer.replay): the registry and the streaming driver must not
+    drive its phases themselves."""
+    import pathlib
+    import re
+
+    import connemara_spark.streaming.driver as driver
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "connemara_spark"
+    banned = re.compile(r"apply_batch\(|batch_summaries\(|\.before_apply\(|\.after_apply\(")
+    for rel in ("queries.py", "streaming/driver.py"):
+        src = (root / rel).read_text()
+        hits = [
+            f"{rel}:{n}: {line.strip()}"
+            for n, line in enumerate(src.splitlines(), 1)
+            if banned.search(line)
+        ]
+        assert not hits, "drive batches through Replayer.step/replay:\n" + "\n".join(hits)
+    assert not hasattr(driver, "_accepts_batch_id")

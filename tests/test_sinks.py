@@ -786,3 +786,46 @@ def test_multi_table_bootstrap_load_all_is_one_atomic_transaction(spark, tmp_pat
     assert _table(spark, url, "SELECT id, bal FROM accounts") == {
         i: float(i) for i in range(5)
     }
+
+
+def test_streaming_sink_ships_with_summary_bucket_hints(spark, tmp_path, monkeypatch):
+    """Through the streaming driver, the sink's staging read prunes to the
+    batch summary's touched buckets: a drain never calls the store's
+    ``buckets_of`` (a driver collect per batch), and the Derby target still
+    mirrors the store."""
+    from connemara_spark.sources.replication import write_segment
+    from connemara_spark.streaming import StreamingReplayer
+
+    url, spec, store, rep, sink = _setup(spark, tmp_path, "sinkhints1")
+    assert sink.bootstrap_load()
+    calls = []
+    real = store.buckets_of
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(store, "buckets_of", counting)
+
+    def drain(events, name):
+        write_segment(str(tmp_path / "spool"), [dict(e) for e in events], name)
+        StreamingReplayer(
+            spark, rep.catalog, store,
+            landing_dir=str(tmp_path / "spool"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            landing_format="wal_spool",
+            maintainers=[sink],
+        ).run_until_drained()
+
+    drain([
+        make_event(spec, "update", lsn=1, row={"id": 2, "v": "patched", "n": 99}, old_key={"id": 2}),
+        make_event(spec, "delete", lsn=2, old_key={"id": 5}),
+        make_event(spec, "insert", lsn=3, row={"id": 100, "v": "new", "n": 7}),
+    ], "seg-001")
+    drain([
+        make_event(spec, "update", lsn=4, row={"id": 100, "v": "newer", "n": 8}, old_key={"id": 100}),
+    ], "seg-002")
+    assert calls == []
+    got = _target_rows(spark, url)
+    assert got == {r["id"]: (r["v"], r["n"]) for r in store.read(spec).collect()}
+    assert got[100] == ("newer", 8) and got[2] == ("patched", 99) and 5 not in got
