@@ -161,35 +161,47 @@ def apply_view_delta(old_view: DataFrame, delta: DataFrame) -> DataFrame:
 
 from contextlib import contextmanager
 
+# Events one patch shuffle partition carries (see _static_patch_plan).
+_PATCH_EVENTS_PER_PARTITION = 100_000
+
 
 @contextmanager
-def _static_patch_plan(spark):
-    """Run a maintainer patch with AQE OFF, restoring the session setting
-    after. The patch plans are static-shaped by construction — every join
-    side that should broadcast carries an explicit hint, and the delta
-    legs are |Δ|-bounded — so AQE has nothing to re-plan; what it does add
-    on a microbatch is one scheduler job per query stage (measured: 99 →
-    57 jobs, 14.5s → 10.7s for four MinMax patches at sf0.1; the broadcast
-    materialization jobs dominate). At 100 TB the same logic holds: the
-    patch's only table-sized leg (the rare extremum-exhaustion recompute)
-    is already an explicit broadcast semi join that prunes at the scan.
+def _static_patch_plan(spark, n_events: int):
+    """Run a batch's maintainer patches with AQE OFF and a shuffle width
+    derived from the batch's event count, restoring both session settings
+    after. ``Replayer.step`` enters it ONCE around all of a batch's
+    concurrent patches (per-leg scopes would restore each other's values).
 
-    With AQE off, every patch exchange runs at the session's full
-    ``spark.sql.shuffle.partitions`` — task-count overhead AQE coalescing
-    would otherwise remove. Patch frames are |Δ|-bounded (touched keys /
-    touched groups) at ANY table size, so the exchange width is pinned to
-    ``SPARK_GRAFT_PATCH_SHUFFLE`` (default 8) independently of the core
-    count: the knob tracks delta volume, not cluster size — a deployment
-    with huge per-batch deltas raises the env, the plan shape is
-    unchanged. Results are partition-count invariant (aggregations and
-    equi-joins only)."""
-    import os
+    The patch plans are static-shaped by construction — joins that must
+    broadcast carry an explicit hint, the rest are shuffle-hash joins
+    building on the batch-sized side — so AQE has nothing to re-plan;
+    what it does add on a microbatch is one scheduler job per query stage
+    (measured: 99 → 57 jobs, 14.5s → 10.7s for four MinMax patches at
+    sf0.1).
 
-    patch_parts = os.environ.get("SPARK_GRAFT_PATCH_SHUFFLE", "8")
+    With AQE off, every patch exchange runs at ``spark.sql.shuffle.partitions``.
+    Most of what the exchanges carry grows with the batch: the touched
+    keys and their rows, the per-(group, value) and per-group frames — a
+    few narrow rows per event. Two things do not: a version-anchored
+    view's touched-bucket reads, which are shuffled whole only while they
+    are small (``_SHUFFLE_TOUCHED_READ_BYTES``, see ``_delta_sources``),
+    and the min/max and top-k base joins, which shuffle the whole view
+    (one row per group). The width is ``ceil(n_events / 100_000)``, so a
+    2k-event batch patches at width 1 (OPTIMIZATION_r12.md: a fixed width
+    of 32 instead of 8 already made the 25-group registry patch slower).
+    Measured on a 4-core host, min/max + top-k patch wall on a 174 MB,
+    16-bucket table (median of 3 batches, each run spreading 2-6 s):
+    200k events 8.2 / 8.7 / 8.4 / 8.7 s at widths 1 / 2 / 4 / 8, 400k
+    events 14.3 / 11.9 / 11.9 / 14.4 s. Width 1 is not measurably worse
+    up to 200k events; above that the widths are within the runs' noise,
+    so the constant bounds a task's share of a large batch rather than
+    tracking a measured optimum. Results are partition-count invariant
+    (aggregations and equi-joins only)."""
+    width = max(1, -(-n_events // _PATCH_EVENTS_PER_PARTITION))
     before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     before_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", patch_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         yield
     finally:
@@ -198,21 +210,21 @@ def _static_patch_plan(spark):
 
 
 def _patch_gate(s, g: str):
-    """One tiny action on the checkpointed per-group patch frame ``s``
-    (columns ``g`` + ``__rescan``, |touched groups| rows) returning
-    ``(touched group values, rescan group values)``.
+    """The action that materialises the per-group patch frame ``s``
+    (columns ``g`` + ``__rescan``, |touched groups| rows, lazily
+    local-checkpointed by the caller) and returns ``(touched group
+    values, rescan group values)``.
 
-    This REPLACES the former ``count()`` rescan gate at the same cost —
-    one scheduler job over checkpoint blocks — and returns strictly more:
-    with the group values on the driver, the write plan can prune the
-    keep side and the rescan leg with literal IN-lists instead of two
-    broadcast semi/anti joins. Each broadcast exchange is its own
-    scheduler job plus planning work, and in a per-batch maintenance
-    protocol those driver costs ARE the bill (the data legs are
-    |Δ|-bounded). Callers fall back to the broadcast-join shape above
-    ``SPARK_GRAFT_PATCH_GROUP_LITERALS`` (default 4096) — at production
-    delta sizes the broadcast plan is the right one, and the gate frame
-    stays delta-bounded either way."""
+    It is the first of the patch's two jobs: the collect computes ``s``
+    once into checkpoint blocks, which the write (the second job) reads
+    back with the lineage severed. With the group values on the driver,
+    the write prunes the keep side and the rescan leg with literal
+    IN-lists instead of broadcast semi/anti joins (each broadcast
+    exchange is its own scheduler job), and a batch that exhausts no
+    extremum never schedules the rescan leg at all. Callers fall back to
+    the broadcast-join shape above ``SPARK_GRAFT_PATCH_GROUP_LITERALS``
+    (default 4096) — at production delta sizes the broadcast plan is the
+    right one, and the gate frame stays delta-bounded either way."""
     rows = s.select(g, "__rescan").collect()
     return [r[0] for r in rows], [r[0] for r in rows if r[1]]
 
@@ -243,6 +255,102 @@ def _vread(view, path: str) -> DataFrame:
     df = view.spark.read.parquet(path)
     view._vschema = df.schema
     return df
+
+
+def _table_buckets(buckets: dict | None, spec) -> list[int] | None:
+    """``spec``'s touched-bucket ids from the batch summary's
+    ``{(db, schema, table): ids}`` (``before_apply``'s ``buckets``), or
+    None — read unpruned — when the caller priced none. A table absent
+    from a given dict had no DML in the batch, exactly as the fold
+    reads it (``Replayer._apply_dml_segment``)."""
+    return None if buckets is None else buckets.get(spec.qualified_key, [])
+
+
+# Touched-bucket read bytes up to which a view patch shuffles the reads to
+# the touched keys instead of broadcasting the keys (see _delta_sources).
+_SHUFFLE_TOUCHED_READ_BYTES = 4 << 20
+
+
+def _delta_sources(view, m: dict) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(old, old_t, new_t)`` of a version-anchored patch: ``old`` is the
+    store version the view last incorporated (committed metadata; the
+    pre-apply pin only for the very first batch — on a first-batch retry
+    the pin is post-batch, old == new, the delta is empty and the
+    bootstrap base already contains the batch), ``old_t``/``new_t`` are
+    the old and current states' rows at the batch's touched keys.
+
+    At steady state with the summary's bucket ids, both reads prune to
+    the touched buckets at path selection: the diff inspects touched keys
+    only, and a bucket is the complete per-key world for everything in
+    it. The bootstrap batch (``m["version"] == 0``) reads full — its base
+    aggregate needs the whole old state.
+
+    The touched-key semi join is shaped by what it reads (the current
+    state's bytes over the touched buckets, or the whole table). Up to
+    ``_SHUFFLE_TOUCHED_READ_BYTES`` it is a shuffle-hash join building on
+    the touched keys: a stage of the consuming job, not a job of its own,
+    but it shuffles both reads whole. Above it the touched keys are
+    broadcast (one job) and the reads are filtered in their own scan
+    tasks, so only the touched rows are shuffled. Measured on a 4-core
+    host, min/max + top-k patch wall for 2k-event batches that touch all
+    16 buckets, shuffled vs broadcast (median of 5 batches; of 3 at
+    174 MB): 0.7 MB 1.86 vs 1.73 s, 4.4 MB 1.64 vs 1.67 s, 17 MB 2.65 vs
+    1.85 s, 44 MB 3.09 vs 2.47 s, 174 MB 6.08 vs 3.31 s — the broadcast's
+    job costs about what shuffling 4 MB does, and the shuffle grows with
+    the touched buckets."""
+    spec, store = view.spec, view.store
+    applied = m["store_version"] if m["version"] > 0 else view._v_pre
+    bks = view._buckets if m["version"] > 0 else None
+    if not applied:
+        old = view.spark.createDataFrame([], spec.spark_schema())
+    elif bks is None:
+        old = store.read_version(spec, applied)
+    else:
+        old = store.read_version(spec, applied, buckets=bks)
+    new = store.read(spec) if bks is None else store.read_buckets(spec, bks)
+    touched = (
+        view._touched.hint("shuffle_hash")
+        if store.table_bytes(spec, buckets=bks) <= _SHUFFLE_TOUCHED_READ_BYTES
+        else F.broadcast(view._touched)
+    )
+    pk = list(spec.pk_cols)
+    old_t, new_t = (df.join(touched, on=pk, how="left_semi") for df in (old, new))
+    return old, old_t, new_t
+
+
+def _commit_view_version(view, frame: DataFrame, meta: dict) -> None:
+    """Write ``frame`` as version ``meta["version"]`` of the view, then
+    advance CURRENT to ``meta`` (write-then-advance: a crash in between
+    leaves CURRENT on the committed previous version, which a retry
+    re-reads). The one commit path of every maintained view.
+
+    A view version is rewritten whole every batch and differs from the
+    previous one by one batch's delta, so the previous version's bytes
+    size it: one file per ``spark.sql.files.maxPartitionBytes`` (the read
+    split — a smaller file is one read task anyway). Left at the frame's
+    own width, the write fans out to one file per task of its last stage
+    (the previous version's files plus every patch partition), each a
+    task, a file commit and a later footer read, for views of a few dozen
+    rows. The first version (no previous one) writes at the frame's own
+    width."""
+    import json
+    import os
+
+    v = meta["version"]
+    prev = os.path.join(view.view_dir, f"v{v - 1:06d}")
+    if os.path.isdir(prev):
+        size = sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(prev)
+            for f in files
+        )
+        split = view.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        frame = frame.coalesce(max(1, -(-size // split)))
+    frame.write.mode("overwrite").parquet(os.path.join(view.view_dir, f"v{v:06d}"))
+    tmp = os.path.join(view.view_dir, "CURRENT.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(view.view_dir, "CURRENT"))
 
 
 def gc_view_versions(view_dir: str, *, keep_last: int = 2) -> list[int]:
@@ -425,14 +533,9 @@ class MaintainedTwoTableJoinView:
         # never the store — so post-apply evaluation sees identical keys.
         self._touched = ta.union(tb).distinct()
 
-    def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
     def _patch_frame(self):
         """Build (current version, patched view frame) WITHOUT committing —
-        ``_after_apply_impl`` writes it; plan audits explain it."""
+        ``after_apply`` writes it; plan audits explain it."""
         import os
 
         v0 = self._current()
@@ -466,19 +569,9 @@ class MaintainedTwoTableJoinView:
         kept = base.join(t, base[self.key_a] == t["__k"], "left_anti")
         return v0, kept.unionByName(repl)
 
-    def _after_apply_impl(self) -> None:
-        import json
-        import os
-
+    def after_apply(self, batch_id: str | None = None) -> None:
         v0, patched = self._patch_frame()
-        v = v0 + 1
-        patched.write.mode("overwrite").parquet(
-            os.path.join(self.view_dir, f"v{v:06d}")
-        )
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
+        _commit_view_version(self, patched, {"version": v0 + 1})
         self._touched = None
 
 
@@ -492,9 +585,10 @@ class MaintainedAggView:
     ``before_apply(parsed_events)`` pins the batch's touched keys and the
     pre-apply store version; ``after_apply()`` diffs the table's state
     BETWEEN STORE VERSIONS at the touched keys and merges the -old/+new
-    group deltas into the materialized aggregate. Every view accepts the
-    shared maintainer signature's ``buckets`` / ``batch_id`` keywords and
-    ignores them (their patches are version-anchored, not ledgered).
+    group deltas into the materialized aggregate. ``buckets`` (the batch
+    summary's touched-bucket ids) prunes the diff's version reads;
+    ``batch_id`` is ignored (the patch is version-anchored, not
+    ledgered).
 
     Crash recovery is version-anchored (the ParquetStore-native variant
     of the join view's replacement patch): the view pointer persists the
@@ -542,6 +636,7 @@ class MaintainedAggView:
         os.makedirs(view_dir, exist_ok=True)
         self._touched = None
         self._v_pre = None
+        self._buckets = None
 
     def _meta(self) -> dict:
         import json
@@ -593,29 +688,19 @@ class MaintainedAggView:
     def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
         # lazy pin (see MaintainedTwoTableJoinView.before_apply): derives
         # from the immutable cached batch only, so evaluating it after the
-        # store advanced yields identical keys at zero extra jobs
+        # store advanced yields identical keys at zero extra jobs.
+        # ``buckets``: the batch summary's touched-bucket ids, which prune
+        # the patch's version reads (see _delta_sources)
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
+        self._buckets = _table_buckets(buckets, self.spec)
 
     def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
-    def _after_apply_impl(self) -> None:
-        import json
-        import os
-
         m, patched, v_now = self._patch_frame()
-        v = m["version"] + 1
-        patched.write.mode("overwrite").parquet(
-            os.path.join(self.view_dir, f"v{v:06d}")
+        _commit_view_version(
+            self, patched, {"version": m["version"] + 1, "store_version": v_now}
         )
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "store_version": v_now}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
-        self._touched = self._v_pre = None
+        self._touched = self._v_pre = self._buckets = None
 
     def _patch_frame(self):
         """Build (meta, patched view frame, store version) WITHOUT
@@ -625,41 +710,9 @@ class MaintainedAggView:
         from connemara_spark.operators.apply import group_agg_net, merge_group_agg
 
         m = self._meta()
-        # the store version this view last incorporated: committed metadata
-        # when it exists; the pre-apply pin only for the very first batch
-        # (on a first-batch retry the pin is post-batch — then old == new,
-        # the delta is empty, and the bootstrap aggregate below already
-        # contains the batch: still correct)
-        applied = m["store_version"] if m["version"] > 0 else self._v_pre
-        # Steady state over a bucketed silver store: prune BOTH version
-        # reads to the touched keys' buckets at path selection — the diff
-        # below only inspects touched keys, and a bucket is the complete
-        # per-key world for everything in it, so untouched buckets of
-        # either version are never listed or read. The bootstrap batch
-        # (m["version"] == 0) still reads full: its base aggregate needs
-        # the whole old state.
-        prune = hasattr(self.store, "buckets_of") and m["version"] > 0
-        if prune:
-            bks = self.store.buckets_of(self.spec, self._touched)
-            old = (
-                self.store.read_version(self.spec, applied, buckets=bks)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new = self.store.read_buckets(self.spec, bks)
-        else:
-            old = (
-                self.store.read_version(self.spec, applied)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new = self.store.read(self.spec)
+        old, old_t, new_t = _delta_sources(self, m)
         v_now = self.store.current_version(self.spec.target_name)
 
-        pk = list(self.spec.pk_cols)
-        t = F.broadcast(self._touched)  # touched_keys output is distinct
-        old_t = old.join(t, on=pk, how="left_semi")
-        new_t = new.join(t, on=pk, how="left_semi")
         # JOIN-FREE delta: the group aggregate is distributive, so the
         # per-key old↔new pairing a full-outer diff join would produce is
         # algebraically irrelevant — old touched rows contribute (-1,-val),
@@ -807,12 +860,6 @@ class MaintainedJoinView:
         self._touched = touched_keys(parsed_events, self.spec)
 
     def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
-    def _after_apply_impl(self) -> None:
-        import json
         import os
 
         # bucketed silver store: the new-state read prunes to the touched
@@ -844,15 +891,7 @@ class MaintainedJoinView:
             else _vread(self, os.path.join(self.view_dir, f"v{v0:06d}"))
         )
         kept = base.join(t, base[self.key_a] == t["__k"], "left_anti")
-        patched = kept.unionByName(repl)
-        v = self._current() + 1
-        patched.write.mode("overwrite").parquet(
-            os.path.join(self.view_dir, f"v{v:06d}")
-        )
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
+        _commit_view_version(self, kept.unionByName(repl), {"version": v0 + 1})
         self._old = self._touched = None
 
 
@@ -871,25 +910,31 @@ class MaintainedMinMaxView:
     - deletes/inserts AT the extremum adjust its multiplicity;
     - only when the multiplicity hits zero with no insert taking over is
       the group's aggregate recomputed — and then from the CURRENT state
-      restricted to exactly those groups (a broadcast semi join the scan
-      can push down), never a full-view rescan.
+      restricted to exactly those groups (a literal IN-list filter the
+      scan can push down), never a full-view rescan.
 
     Everything else mirrors ``MaintainedAggView``: the Replayer maintainer
-    protocol (``before_apply`` pins touched keys + pre-apply store
-    version, ``after_apply`` patches), version-anchored crash recovery
-    (the view pointer records the store version it incorporates; the diff
-    is always old-version → current), and touched-bucket pruning on a
-    BucketStore for the delta legs. The recompute leg deliberately reads
-    the FULL current state (pruned only by the group semi join): the
-    touched keys' buckets do not contain a touched GROUP's other rows.
+    protocol (``before_apply`` pins touched keys, the pre-apply store
+    version and the summary's touched-bucket ids, ``after_apply``
+    patches), version-anchored crash recovery (the view pointer records
+    the store version it incorporates; the diff is always old-version →
+    current), and touched-bucket pruning on a BucketStore for the delta
+    legs. The recompute leg deliberately reads the FULL current state
+    (pruned only by the group filter): the touched keys' buckets do not
+    contain a touched GROUP's other rows.
+
+    A patch is two Spark jobs: the gate collect that computes the
+    per-group patch frame (see ``_patch_gate``) and the view write (which
+    also runs the recompute leg when one fires). A third, the touched-key
+    broadcast, joins them when the touched buckets are large (see
+    ``_delta_sources``).
 
     At 100 TB: the delta legs are |Δ|-bounded; the recompute leg's
     frequency is bounded by actual extremum-exhaustion events (data-, not
     size-, driven), and its cost is one pushed-down filtered scan per
-    affected batch. ``last_recompute_groups`` (always recorded since r10 —
-    the count is one cheap job over the checkpointed patch summary, and it
-    doubles as the skip condition for scheduling the recompute leg at all)
-    exposes how often it fires.
+    affected batch. ``last_recompute_groups`` (always recorded: the gate
+    returns the rescan groups, and they double as the skip condition for
+    scheduling the recompute leg at all) exposes how often it fires.
     """
 
     def __init__(
@@ -920,6 +965,7 @@ class MaintainedMinMaxView:
         os.makedirs(view_dir, exist_ok=True)
         self._touched = None
         self._v_pre = None
+        self._buckets = None
 
     # -- protocol plumbing shared with MaintainedAggView ---------------
     def _meta(self) -> dict:
@@ -945,24 +991,20 @@ class MaintainedMinMaxView:
 
     def _full_agg(self, state: DataFrame) -> DataFrame:
         """(group, n_rows, min_val, min_cnt, max_val, max_cnt) from
-        scratch: one per-(group, value) count, then min_by/max_by picks
-        the extremum's multiplicity — two map-side-combined shuffles, no
-        join."""
+        scratch: one per-(group, value) count, then ONE per-group
+        aggregation over it — the row count sums every value's count (NULL
+        values included), min_by/max_by pick the extremum's multiplicity
+        and skip NULL values, so an all-NULL group gets NULL extrema. Two
+        map-side-combined shuffles, no join."""
         per_val = state.groupBy(
             F.col(self.group_col), self._val().alias("__v")
         ).agg(F.count(F.lit(1)).alias("__c"))
-        nn = per_val.filter(F.col("__v").isNotNull())
-        counts = state.groupBy(self.group_col).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
-        mm = nn.groupBy(self.group_col).agg(
+        return per_val.groupBy(self.group_col).agg(
+            F.sum("__c").alias("n_rows"),
             F.min("__v").alias("min_val"),
             F.min_by("__c", "__v").alias("min_cnt"),
             F.max("__v").alias("max_val"),
             F.max_by("__c", "__v").alias("max_cnt"),
-        )
-        return counts.join(mm, self.group_col, "left").select(
-            self.group_col, "n_rows", "min_val", "min_cnt", "max_val", "max_cnt"
         )
 
     def _prep(self) -> dict:
@@ -1090,58 +1132,28 @@ class MaintainedMinMaxView:
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
     def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
+        # lazy pins (see MaintainedAggView.before_apply)
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
+        self._buckets = _table_buckets(buckets, self.spec)
 
     def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
-    def _after_apply_impl(self) -> None:
-        import json
-        import os
-
         m, patched, v_now = self._patch_frame()
-        v = m["version"] + 1
-        vdir = os.path.join(self.view_dir, f"v{v:06d}")
-        patched.write.mode("overwrite").parquet(vdir)
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "store_version": v_now}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
-        self._touched = self._v_pre = None
+        _commit_view_version(
+            self, patched, {"version": m["version"] + 1, "store_version": v_now}
+        )
+        self._touched = self._v_pre = self._buckets = None
 
     # -- the patch ------------------------------------------------------
     def _patch_frame(self):
         import os
 
         m = self._meta()
-        applied = m["store_version"] if m["version"] > 0 else self._v_pre
-        prune = hasattr(self.store, "buckets_of") and m["version"] > 0
-        if prune:
-            bks = self.store.buckets_of(self.spec, self._touched)
-            old = (
-                self.store.read_version(self.spec, applied, buckets=bks)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new_t_src = self.store.read_buckets(self.spec, bks)
-        else:
-            old = (
-                self.store.read_version(self.spec, applied)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new_t_src = self.store.read(self.spec)
+        old, old_t, new_t = _delta_sources(self, m)
         v_now = self.store.current_version(self.spec.target_name)
 
-        pk = list(self.spec.pk_cols)
-        t = F.broadcast(self._touched)
         g = self.group_col
         prep = self._prep()  # batch-invariant Column trees (see _prep)
-        old_t = old.join(t, on=pk, how="left_semi")
-        new_t = new_t_src.join(t, on=pk, how="left_semi")
 
         # the batch as a signed value multiset at the touched keys: old
         # rows leave (-1), new rows arrive (+1) — state diff, not event
@@ -1156,20 +1168,23 @@ class MaintainedMinMaxView:
         # re-join), removing two shuffle exchanges and a join from every
         # patch. __ds is the net signed multiplicity at the value; __ins
         # counts the batch's insert rows at it (for the takeover
-        # multiplicity). Left lazy: the whole patch runs as ONE action (the
-        # view write), and the two consumers below (touched_groups, d) share
-        # this subtree via exchange reuse instead of a checkpoint job.
+        # multiplicity).
         per_val = deltas.groupBy(g, "__v").agg(*prep["per_val_aggs"])
-        touched_groups = per_val.select(g).distinct()
 
         base = (
             self._full_agg(old)
             if m["version"] == 0
             else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
         )
-        # the view rows that can change, with their extremum bookkeeping
-        base_t = base.join(F.broadcast(touched_groups), g, "left_semi")
-        d = per_val.join(base_t.select(*prep["base_sel"]), g, "left")
+        # each touched value with its group's extremum bookkeeping: a
+        # shuffle join building on the batch-sized side. It reads AND
+        # shuffles the whole view (one row per group) at the patch width;
+        # pruning the view first with a broadcast of the touched groups
+        # would be a job of its own. A view with millions of groups pays
+        # that shuffle every batch (see _static_patch_plan).
+        d = per_val.hint("shuffle_hash").join(
+            base.select(*prep["base_sel"]), g, "left"
+        )
         s = d.groupBy(g).agg(*prep["s_aggs"])
 
         s = s.withColumn("__n_new", prep["n_new"]).withColumn(
@@ -1182,16 +1197,15 @@ class MaintainedMinMaxView:
             ).select(*prep["rows_sel"])
 
         # ONE materialization for the whole patch: `s` is |touched groups|-
-        # sized and every downstream consumer — the keep-side anti join's
-        # group set, the patched rows, the rescan gate and the rescan group
-        # list — reads this checkpoint instead of re-deriving the delta
-        # subtree (the former shape also checkpointed per_val separately and
-        # re-built touched_groups from it on the write side).
-        s = s.localCheckpoint()
-        # tiny gating job on the checkpointed frame (see _patch_gate): in
-        # the common batch (no extremum exhausted) it lets us skip
+        # sized and every downstream consumer — the keep side's group set,
+        # the patched rows, the rescan gate and the rescan group list —
+        # reads this checkpoint instead of re-deriving the delta subtree.
+        # Lazy: the gate's collect below is the job that computes it (see
+        # _patch_gate); the write is the patch's only other job.
+        s = s.localCheckpoint(eager=False)
+        # in the common batch (no extremum exhausted) the gate lets us skip
         # SCHEDULING the whole recompute subtree — a full-store scan plus
-        # three aggregation exchanges that would produce zero rows — and
+        # two aggregation exchanges that would produce zero rows — and
         # below the literal cap it also removes both write-side broadcast
         # exchanges (each its own scheduler job per batch).
         tg_vals, rescan_vals = _patch_gate(s, g)
@@ -1240,11 +1254,12 @@ class MaintainedTopKView:
     Only when a group's stored list falls below ``min(k, n_rows)`` — the
     buffer burned through faster than arrivals refilled it — is that
     group re-aggregated, from the current state restricted to exactly
-    those groups (broadcast semi join + per-group window, output bounded
-    at ``k + slack`` rows per group). Everything else follows the
+    those groups (literal IN-list filter + per-group window, output
+    bounded at ``k + slack`` rows per group). Everything else follows the
     ``MaintainedMinMaxView`` protocol: version-anchored recovery,
     touched-bucket pruning for the delta legs, full-state read only on
-    the rescan leg.
+    the rescan leg, two Spark jobs per patch (gate collect, view write;
+    plus the touched-key broadcast over large touched buckets).
 
     Ordering is (value DESC, pk ASC) — total and engine-independent, so
     the exploded view is value-hash-gateable. ``group_col`` and the pk
@@ -1286,6 +1301,7 @@ class MaintainedTopKView:
         os.makedirs(view_dir, exist_ok=True)
         self._touched = None
         self._v_pre = None
+        self._buckets = None
 
     # -- protocol plumbing (MaintainedMinMaxView shape) -----------------
     def _meta(self) -> dict:
@@ -1330,21 +1346,18 @@ class MaintainedTopKView:
         )
 
     def _full_agg(self, state: DataFrame) -> DataFrame:
-        """(group, n_rows, top) from scratch: per-group window row_number
-        bounds the collected list at k+slack BEFORE any collect_list, so
-        the build never materializes a whole group in one array."""
-        g = self.group_col
+        """(group, n_rows, top) from scratch in ONE per-group pass: a
+        window row_number ranks every row (NULL values last), and one
+        aggregation over the ranked rows counts them and collects only
+        the non-NULL top k+slack — the build never materializes a whole
+        group in one array, and needs no counts-to-list join."""
         prep = self._prep()
-        rows = state.select(*prep["fa_rows_sel"])
-        counts = rows.groupBy(g).agg(F.count(F.lit(1)).alias("n_rows"))
-        top = (
-            rows.filter(F.col("__v").isNotNull())
+        return (
+            state.select(*prep["fa_rows_sel"])
             .withColumn("__rn", prep["fa_rn"])
-            .filter(F.col("__rn") <= self.k + self.slack)
-            .groupBy(g)
-            .agg(prep["fa_top_agg"])
+            .groupBy(self.group_col)
+            .agg(F.count(F.lit(1)).alias("n_rows"), prep["fa_top_agg"])
         )
-        return counts.join(top, g, "left").select(*prep["fa_final_sel"])
 
     def _prep(self) -> dict:
         """Batch-invariant Column trees of the patch and the full
@@ -1443,16 +1456,17 @@ class MaintainedTopKView:
                 ],
                 "fa_rn": F.row_number().over(w),
                 "fa_top_agg": F.array_sort(
+                    # collect_list skips the NULLs of rows outside the top
                     F.collect_list(
-                        F.struct(F.col("__v").alias("v"), F.col("__id").alias("id"))
+                        F.when(
+                            (F.col("__rn") <= lim) & F.col("__v").isNotNull(),
+                            F.struct(
+                                F.col("__v").alias("v"), F.col("__id").alias("id")
+                            ),
+                        )
                     ),
                     self._cmp,
                 ).alias("top"),
-                "fa_final_sel": [
-                    F.col(g),
-                    F.col("n_rows"),
-                    F.coalesce("top", F.array().cast(empty_top)).alias("top"),
-                ],
             }
 
         return _prepared(
@@ -1475,81 +1489,45 @@ class MaintainedTopKView:
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
     def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
+        # lazy pins (see MaintainedAggView.before_apply)
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
+        self._buckets = _table_buckets(buckets, self.spec)
 
     def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
-    def _after_apply_impl(self) -> None:
-        import json
-        import os
-
         m, patched, v_now = self._patch_frame()
-        v = m["version"] + 1
-        patched.write.mode("overwrite").parquet(
-            os.path.join(self.view_dir, f"v{v:06d}")
+        _commit_view_version(
+            self, patched, {"version": m["version"] + 1, "store_version": v_now}
         )
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "store_version": v_now}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
-        self._touched = self._v_pre = None
+        self._touched = self._v_pre = self._buckets = None
 
     # -- the patch ------------------------------------------------------
     def _patch_frame(self):
         import os
 
-        from pyspark.sql.window import Window
-
         m = self._meta()
-        applied = m["store_version"] if m["version"] > 0 else self._v_pre
-        prune = hasattr(self.store, "buckets_of") and m["version"] > 0
-        if prune:
-            bks = self.store.buckets_of(self.spec, self._touched)
-            old = (
-                self.store.read_version(self.spec, applied, buckets=bks)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new_t_src = self.store.read_buckets(self.spec, bks)
-        else:
-            old = (
-                self.store.read_version(self.spec, applied)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new_t_src = self.store.read(self.spec)
+        old, old_t, new_t = _delta_sources(self, m)
         v_now = self.store.current_version(self.spec.target_name)
 
         g = self.group_col
-        pk = list(self.spec.pk_cols)
         prep = self._prep()  # batch-invariant Column trees (see _prep)
-        t = F.broadcast(self._touched)
-        old_t = old.join(t, on=pk, how="left_semi")
-        new_t = new_t_src.join(t, on=pk, how="left_semi")
 
         # per-group batch summary: touched pks (to evict from stored
         # lists), surviving new pairs (to merge), and the row-count delta
         deltas = old_t.select(*prep["delta_old"]).unionByName(
             new_t.select(*prep["delta_new"])
         )
-        # left lazy: the patch materializes ONCE, at the folded `s` frame
-        # below — the two consumers of this per-group fold (touched_groups'
-        # semi join and s's left side) share the subtree via exchange reuse
-        # inside that one checkpoint job
         per_group = deltas.groupBy(g).agg(*prep["per_group_aggs"])
-        touched_groups = per_group.select(g)
 
         base = (
             self._full_agg(old)
             if m["version"] == 0
             else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
         )
-        base_t = base.join(F.broadcast(touched_groups), g, "left_semi")
-        s = per_group.join(base_t, g, "left")
+        # each touched group with its stored list: a shuffle join building
+        # on the batch-sized side that shuffles the whole view — see
+        # MaintainedMinMaxView._patch_frame
+        s = per_group.hint("shuffle_hash").join(base, g, "left")
 
         # Trust model for the merged list (prep["merged"]): the old stored
         # list held the group's true top-s, so every UNSTORED old row has
@@ -1567,22 +1545,23 @@ class MaintainedTopKView:
         # runner-up); truncation shrinks the buffer until a rescan refills
         # it. Rescan when any of the first min(k, n') positions is unsafe
         # or the list runs short.
+        # lazily checkpointed: the gate's collect is the job that computes
+        # it, the write reads it back (see MaintainedMinMaxView._patch_frame)
         s = (
             s.withColumn("__merged", prep["merged"])
             .withColumn("__n_new", prep["n_new"])
             .withColumn("__rescan", prep["needs_rescan"])
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
 
         patched_rows = s.filter(
             (F.col("__n_new") > 0) & ~F.col("__rescan")
         ).select(*prep["patched_sel"])
-        # tiny checkpointed-frame job (see _patch_gate): on the common
-        # batch (buffer never burned below k) it skips scheduling the
-        # whole recompute subtree (full-store scan + window +
-        # collect_list), and below the literal cap the write plan prunes
-        # by IN-list instead of two broadcast exchanges (each a scheduler
-        # job per batch).
+        # the gate (see _patch_gate): on the common batch (buffer never
+        # burned below k) it skips scheduling the whole recompute subtree
+        # (full-store scan + window + collect_list), and below the literal
+        # cap the write plan prunes by IN-list instead of two broadcast
+        # exchanges (each a scheduler job per batch).
         tg_vals, rescan_vals = _patch_gate(s, g)
         self.last_recompute_groups = len(rescan_vals)
         lit = len(tg_vals) <= _group_literal_cap()
@@ -1695,6 +1674,7 @@ class MaintainedDistinctCountView:
         )
         self._touched = None
         self._v_pre = None
+        self._buckets = None
 
     # -- protocol plumbing (MaintainedAggView shape) --------------------
     def _meta(self) -> dict:
@@ -1820,18 +1800,12 @@ class MaintainedDistinctCountView:
         return gc_view_versions(self.view_dir, keep_last=keep_last)
 
     def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
+        # lazy pins (see MaintainedAggView.before_apply)
         self._touched = touched_keys(parsed_events, self.spec)
         self._v_pre = self.store.current_version(self.spec.target_name)
+        self._buckets = _table_buckets(buckets, self.spec)
 
     def after_apply(self, batch_id: str | None = None) -> None:
-        # static plan for the whole patch (see _static_patch_plan)
-        with _static_patch_plan(self.spark):
-            self._after_apply_impl()
-
-    def _after_apply_impl(self) -> None:
-        import json
-        import os
-
         m, patched, v_now, new_support, bks = self._patch_frame()
         # support first, summary second, pointer last: every crash window
         # replays against the versions the pointer still records
@@ -1847,15 +1821,12 @@ class MaintainedDistinctCountView:
         else:
             self.sstore.write_partial(self.sspec, new_support, buckets=bks)
             sv = self.sstore.current_version(self.sspec.target_name)
-        v = m["version"] + 1
-        patched.write.mode("overwrite").parquet(
-            os.path.join(self.view_dir, f"v{v:06d}")
+        _commit_view_version(
+            self,
+            patched,
+            {"version": m["version"] + 1, "store_version": v_now, "support_version": sv},
         )
-        tmp = os.path.join(self.view_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "store_version": v_now, "support_version": sv}, fh)
-        os.replace(tmp, os.path.join(self.view_dir, "CURRENT"))
-        self._touched = self._v_pre = None
+        self._touched = self._v_pre = self._buckets = None
 
     def gc_support(self, *, keep_last: int = 2) -> list[int]:
         """Retire old support versions (reference-counted); keep_last >= 2
@@ -1868,31 +1839,11 @@ class MaintainedDistinctCountView:
         import os
 
         m = self._meta()
-        applied = m["store_version"] if m["version"] > 0 else self._v_pre
-        prune = hasattr(self.store, "buckets_of") and m["version"] > 0
-        if prune:
-            base_bks = self.store.buckets_of(self.spec, self._touched)
-            old = (
-                self.store.read_version(self.spec, applied, buckets=base_bks)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new = self.store.read_buckets(self.spec, base_bks)
-        else:
-            old = (
-                self.store.read_version(self.spec, applied)
-                if applied
-                else self.spark.createDataFrame([], self.spec.spark_schema())
-            )
-            new = self.store.read(self.spec)
+        old, old_t, new_t = _delta_sources(self, m)
         v_now = self.store.current_version(self.spec.target_name)
 
-        pk = list(self.spec.pk_cols)
-        t = F.broadcast(self._touched)
         g = self.group_col
         prep = self._prep()  # batch-invariant Column trees (see _prep)
-        old_t = old.join(t, on=pk, how="left_semi")
-        new_t = new.join(t, on=pk, how="left_semi")
 
         # the batch as a signed value multiset at the touched keys (state
         # diff, not event rows — TOAST updates and PK splits are already

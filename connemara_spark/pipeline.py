@@ -18,7 +18,11 @@ registry fixtures all run it; nothing else drives the phases below:
    commit-all → replay-DDL-alone → DISCARD protocol
 5. after DDL, every maintainer's ``check_schema`` — before any patch
 6. every maintainer's ``after_apply(batch_id=...)``, concurrently, under
-   one static-plan session scope
+   one static-plan session scope whose shuffle width the batch's event
+   count sets
+
+``BatchMetrics.phase_s`` reports each step's wall seconds per phase
+(``summary`` = 1-3, ``fold`` = 4-5, ``patch`` = 6).
 
 ``Replayer.replay(bronze, batch_ix, n_batches)`` runs a whole stream cut
 into batches by one integer Column: one checkpointed parse, one summary
@@ -28,6 +32,7 @@ job for all batches, then ``step`` per slice.
 from __future__ import annotations
 
 import re
+import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
@@ -248,6 +253,21 @@ class ParquetStore:
         # rebuild), so no caller can silently read the wrong column
         return self.spark.read.schema(spec.spark_schema()).parquet(d)
 
+    def table_bytes(self, spec: TableSpec, buckets=None) -> int:
+        """On-disk bytes of the CURRENT version (driver-side stat walk, no
+        Spark job). A flat store has no buckets: ``buckets`` is always None
+        for it (the batch summary prices none) and the whole table counts."""
+        import os
+
+        v = self.current_version(spec.target_name)
+        if v is None:
+            return 0
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(self._dir(spec.target_name, v))
+            for f in files
+        )
+
     def gc_versions(
         self, spec: TableSpec, *, keep_last: int = 1, min_age_seconds: float = 0.0
     ) -> list[int]:
@@ -360,6 +380,11 @@ class BatchMetrics:
     # table-folds routed through the hot-key-bounded fold this batch
     bounded_folds: int = 0
     actions: list[str] = field(default_factory=list)
+    # Replayer.step's wall seconds per phase: "summary" (the summary job
+    # when the step runs it, plus the maintainers' pins), "fold" (apply
+    # and post-DDL schema checks), "patch" (the concurrent maintainer
+    # patches)
+    phase_s: dict[str, float] = field(default_factory=dict)
 
 
 class Replayer:
@@ -594,11 +619,13 @@ class Replayer:
             if owned:
                 parsed = self.parse_batch(bronze).persist()
             try:
+                t0 = time.monotonic()
                 if summary is None:
                     phase("summary")
                     summary = self._batch_summary(parsed)
                 for m in maintainers:
                     m.before_apply(parsed, buckets=summary[2])
+                t1 = time.monotonic()
                 phase("fold")
                 metrics = self.apply_batch(bronze, events=parsed, summary=summary)
                 if metrics.ddl_executed:
@@ -608,6 +635,7 @@ class Replayer:
                     for m in maintainers:
                         if hasattr(m, "check_schema"):
                             m.check_schema(self.catalog)
+                t2 = time.monotonic()
 
                 def patch(m):
                     phase(f"patch:{type(m).__name__}")
@@ -623,8 +651,13 @@ class Replayer:
                     # scope around all of them: per-leg scopes entered
                     # concurrently would restore each other's patched
                     # values and leave AQE off for the session.
-                    with _static_patch_plan(self.spark):
+                    with _static_patch_plan(self.spark, sum(summary[1].values())):
                         run_legs([partial(patch, m) for m in maintainers])
+                metrics.phase_s = {
+                    "summary": t1 - t0,
+                    "fold": t2 - t1,
+                    "patch": time.monotonic() - t2,
+                }
                 return metrics
             finally:
                 if owned:

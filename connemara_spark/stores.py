@@ -278,17 +278,18 @@ class BucketStore:
             manifest["buckets"][str(b)] = v if b in written else None
         self._commit(name, v, manifest)
 
-    def table_bytes(self, spec: TableSpec) -> int:
+    def table_bytes(self, spec: TableSpec, buckets: list[int] | None = None) -> int:
         """On-disk bytes of the CURRENT snapshot (the hosted bucket files
-        only — not historical versions): driver-side stat walk over the
-        manifest's paths, no Spark job. Sizes the maintenance policy's
-        rebucket decision (bytes per bucket vs the executor envelope)."""
+        only — not historical versions), or of its ``buckets`` only:
+        driver-side stat walk over the manifest's paths, no Spark job.
+        Sizes the maintenance policy's rebucket decision (bytes per bucket
+        vs the executor envelope) and a view patch's touched-bucket read."""
         cur = self.current_version(spec.target_name)
         if cur is None:
             return 0
         total = 0
         for d in self._paths(
-            spec.target_name, self._manifest(spec.target_name, cur)
+            spec.target_name, self._manifest(spec.target_name, cur), buckets
         ):
             for root, _dirs, files in os.walk(d):
                 total += sum(os.path.getsize(os.path.join(root, f)) for f in files)

@@ -342,11 +342,7 @@ def test_maintained_agg_view_over_bucket_store(spark, tmp_path):
     )
 
     def run_batch(events):
-        b = _bronze(spark, events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(_bronze(spark, events), maintainers=[view])
 
     run_batch([
         make_event(spec, "insert", lsn=1, row={"id": 1, "grp": "a", "amount": 4.0}),
@@ -727,11 +723,7 @@ def test_maintained_view_stays_correct_across_rebucket(spark, tmp_path):
     )
 
     def run_batch(events):
-        b = _bronze(spark, events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(_bronze(spark, events), maintainers=[view])
 
     run_batch([
         make_event(spec, "insert", lsn=i, row={"id": i, "grp": "ab"[i % 2], "amount": float(i)})

@@ -194,11 +194,7 @@ def test_maintained_view_retry_after_post_apply_crash(spark, tmp_path):
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(bronze(events), maintainers=[view])
 
     def check():
         a = store.read(spec)
@@ -324,11 +320,7 @@ def test_maintained_agg_view_retry_after_post_apply_crash(spark, tmp_path):
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(bronze(events), maintainers=[view])
 
     run_batch([
         make_event(spec, "insert", lsn=1, row={"id": 1, "grp": "a", "amount": 10.0}),
@@ -891,11 +883,7 @@ def test_maintained_distinct_view_retry_after_support_orphan_crash(spark, tmp_pa
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(bronze(events), maintainers=[view])
 
     run_batch([
         make_event(spec, "insert", lsn=1, row={"id": 1, "grp": "a", "amount": 5.0}),
@@ -1024,11 +1012,7 @@ def test_maintained_distinct_view_support_gc_keeps_view_live(spark, tmp_path):
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(bronze(events), maintainers=[view])
 
     lsn = 0
     for batch in range(5):
@@ -1082,11 +1066,7 @@ def test_maintained_distinct_view_noop_batch_skips_support_write(spark, tmp_path
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        view.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        view.after_apply()
+        rep.step(bronze(events), maintainers=[view])
 
     run_batch([
         make_event(spec, "insert", lsn=1, row={"id": 1, "grp": "a", "amount": 5.0}),
@@ -1151,13 +1131,7 @@ def test_gc_view_versions_bounds_disk_and_keeps_views_live(spark, tmp_path):
         )
 
     def run_batch(events):
-        b = bronze(events)
-        parsed = rep.parse_batch(b)
-        for v in (agg, mm):
-            v.before_apply(parsed)
-        rep.apply_batch(b, events=parsed)
-        for v in (agg, mm):
-            v.after_apply()
+        rep.step(bronze(events), maintainers=[agg, mm])
 
     lsn = 0
     for batch in range(4):
@@ -1410,3 +1384,208 @@ def test_minmax_topk_patch_broadcast_fallback(spark, tmp_path, monkeypatch):
     sr.run_until_drained()
     check()
     assert tk.last_recompute_groups == 1
+
+
+def _bucketed_sales_views(spark, tmp_path):
+    """A BucketStore-backed sales table and one view of each
+    version-anchored kind (min/max, top-k, aggregate, distinct count)."""
+    from connemara_spark.catalog import ColumnSpec, EngineCatalog, TableSpec
+    from connemara_spark.operators.ivm import (
+        MaintainedAggView,
+        MaintainedDistinctCountView,
+        MaintainedMinMaxView,
+        MaintainedTopKView,
+    )
+    from connemara_spark.stores import BucketStore
+
+    spec = TableSpec(
+        database="db1", schema="public", table="sales",
+        columns=[ColumnSpec("id", "bigint"), ColumnSpec("grp", "text"),
+                 ColumnSpec("amount", "double precision")],
+        pk_cols=["id"],
+    )
+    cat = EngineCatalog()
+    cat.register(spec)
+    spec = cat.get("db1", "public", "sales")
+    store = BucketStore(spark, str(tmp_path / "silver"), n_buckets=8)
+    views = {
+        "mm": MaintainedMinMaxView(
+            spark, store, spec, group_col="grp", val_col="amount",
+            view_dir=str(tmp_path / "mm"),
+        ),
+        "tk": MaintainedTopKView(
+            spark, store, spec, group_col="grp", val_col="amount",
+            k=2, slack=1, val_type="double", view_dir=str(tmp_path / "tk"),
+        ),
+        "agg": MaintainedAggView(
+            spark, store, spec, group_col="grp", sum_col="amount",
+            view_dir=str(tmp_path / "agg"),
+        ),
+        "dc": MaintainedDistinctCountView(
+            spark, store, spec, group_col="grp", val_col="amount",
+            val_pg_type="double precision", view_dir=str(tmp_path / "dc"),
+            support_buckets=4,
+        ),
+    }
+    return cat, spec, store, views
+
+
+def _assert_views_equal_recompute(store, spec, views):
+    from pyspark.sql import functions as F
+
+    state = store.read(spec)
+    for name in views.keys() & {"mm", "agg", "dc"}:
+        v = views[name]
+        want = sorted(map(repr, v._full_agg(state).collect()))
+        got = sorted(map(repr, v.read_view().collect()))
+        assert got == want, (name, got, want)
+    tk = views["tk"]
+
+    def tops(df):
+        return sorted(
+            (r["grp"], r["n_rows"], [(float(p["v"]), p["id"]) for p in r["top"]])
+            for r in df.collect()
+        )
+
+    want = tops(tk._full_agg(state).select(
+        "grp", "n_rows", F.slice("top", 1, tk.k).alias("top")))
+    assert tops(tk.read_view()) == want
+
+
+def test_streaming_views_prune_with_summary_bucket_ids(spark, tmp_path, monkeypatch):
+    """Through the streaming driver, every version-anchored view prunes its
+    patch reads with the batch summary's touched-bucket ids: a drain over
+    a BucketStore never calls the base store's ``buckets_of`` (a driver
+    collect per view per batch), and every view equals a full recompute
+    after every drain."""
+    from connemara_spark.sources.replication import write_segment
+    from connemara_spark.streaming import StreamingReplayer
+    from connemara_spark.testing import make_event
+
+    cat, spec, store, views = _bucketed_sales_views(spark, tmp_path)
+    calls = []
+    real = store.buckets_of
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(store, "buckets_of", counting)
+
+    def drain(events, name):
+        write_segment(str(tmp_path / "spool"), [dict(e) for e in events], name)
+        StreamingReplayer(
+            spark, cat, store,
+            landing_dir=str(tmp_path / "spool"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            landing_format="wal_spool",
+            maintainers=list(views.values()),
+        ).run_until_drained()
+
+    drain([
+        make_event(spec, "insert", lsn=i,
+                   row={"id": i, "grp": "abc"[i % 3], "amount": float(i % 5)})
+        for i in range(1, 19)
+    ], "seg-001")
+    _assert_views_equal_recompute(store, spec, views)
+    # steady state: group-moving update, deletes of a group's extrema
+    # (rescan legs), an insert and a NULL value
+    drain([
+        make_event(spec, "update", lsn=19, row={"id": 4, "grp": "c", "amount": 7.5},
+                   old_key={"id": 4}),
+        make_event(spec, "delete", lsn=20, old_key={"id": 3}),
+        make_event(spec, "delete", lsn=21, old_key={"id": 9}),
+        make_event(spec, "delete", lsn=22, old_key={"id": 15}),
+        make_event(spec, "insert", lsn=23, row={"id": 40, "grp": "b", "amount": 2.25}),
+        make_event(spec, "insert", lsn=24, row={"id": 41, "grp": "a", "amount": None}),
+    ], "seg-002")
+    _assert_views_equal_recompute(store, spec, views)
+    drain([
+        make_event(spec, "update", lsn=25, row={"id": 40, "grp": "b", "amount": 9.0},
+                   old_key={"id": 40}),
+    ], "seg-003")
+    _assert_views_equal_recompute(store, spec, views)
+    assert calls == []
+
+
+def _patch_job_counts(spark, tmp_path):
+    """Step three batches through all four version-anchored views over a
+    BucketStore — the last one exhausts a min/max extremum, so the rescan
+    leg fires — and return the (min/max, top-k) patches' Spark job counts
+    on that batch, after checking every view against a full recompute."""
+    import uuid
+
+    from connemara_spark.events import BRONZE_SCHEMA
+    from connemara_spark.pipeline import Replayer
+    from connemara_spark.testing import make_event
+
+    def bronze_df(spark, events):
+        return spark.createDataFrame(
+            [tuple(e[f.name] for f in BRONZE_SCHEMA.fields) for e in events],
+            schema=BRONZE_SCHEMA,
+        )
+
+    cat, spec, store, views = _bucketed_sales_views(spark, tmp_path)
+    rep = Replayer(spark, cat, store)
+    mm, tk = views["mm"], views["tk"]
+    sc = spark.sparkContext
+    groups = {}
+
+    def in_job_group(view, name):
+        run = view.after_apply
+
+        def after_apply(batch_id=None):
+            gid = groups[name] = f"{name}-{uuid.uuid4().hex}"
+            sc.setJobGroup(gid, gid)
+            try:
+                run(batch_id=batch_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        view.after_apply = after_apply
+
+    in_job_group(mm, "mm")
+    in_job_group(tk, "tk")
+
+    def jobs(name):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(groups[name]))
+
+    maintainers = list(views.values())
+    rep.step(bronze_df(spark, [
+        make_event(spec, "insert", lsn=i,
+                   row={"id": i, "grp": "ab"[i % 2], "amount": float(i)})
+        for i in range(1, 13)
+    ]), maintainers=maintainers)
+    rep.step(bronze_df(spark, [
+        make_event(spec, "insert", lsn=13, row={"id": 13, "grp": "a", "amount": 6.5}),
+    ]), maintainers=maintainers)
+    # group b's minimum (1.0, id 1) is unique: deleting it exhausts the
+    # extremum and the min/max patch must rescan the group
+    rep.step(bronze_df(spark, [
+        make_event(spec, "delete", lsn=14, old_key={"id": 1}),
+        make_event(spec, "update", lsn=15, row={"id": 4, "grp": "a", "amount": 20.0},
+                   old_key={"id": 4}),
+    ]), maintainers=maintainers)
+    assert mm.last_recompute_groups == 1
+    _assert_views_equal_recompute(store, spec, views)
+    return jobs("mm"), jobs("tk")
+
+
+def test_minmax_topk_patch_is_two_jobs(spark, tmp_path):
+    """The min/max and top-k patches each submit exactly TWO Spark jobs per
+    steady-state batch — the gate collect that computes the per-group
+    patch frame and the view write — even on a batch that exhausts a
+    min/max extremum, where the write also carries the rescan leg."""
+    assert _patch_job_counts(spark, tmp_path) == (2, 2)
+
+
+def test_large_touched_reads_broadcast_the_touched_keys(spark, tmp_path, monkeypatch):
+    """Above ``_SHUFFLE_TOUCHED_READ_BYTES`` of touched-bucket reads, the
+    patches filter those reads with a broadcast of the touched keys
+    instead of shuffling them whole: one more job per patch (the
+    broadcast), and every view still equals a full recompute."""
+    from connemara_spark.operators import ivm
+
+    monkeypatch.setattr(ivm, "_SHUFFLE_TOUCHED_READ_BYTES", 0)
+    assert _patch_job_counts(spark, tmp_path) == (3, 3)

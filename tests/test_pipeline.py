@@ -532,13 +532,51 @@ def test_step_concurrent_patches_do_not_leak_session_config(spark, tmp_path):
     assert {k: spark.conf.get(k) for k in keys} == before
     assert {r["grp"] for r in mm.read_view().collect()} == {"a", "b"}
 
-    def boom():
+    def boom(batch_id=None):
         raise RuntimeError("injected patch failure")
 
-    tk._after_apply_impl = boom
+    tk.after_apply = boom
     with pytest.raises(RuntimeError, match="injected patch failure"):
         rep.step(batch(10), maintainers=[mm, tk])
     assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_step_reports_phase_wall_times(spark, tmp_path):
+    """BatchMetrics.phase_s carries each step's wall seconds per phase:
+    the summary, the fold and the (concurrent) patch, each measured
+    between the step's phase boundaries — so they cover the patch a slow
+    maintainer spends and never sum past the step's own wall time. A step
+    handed its summary by ``replay`` reports the same phases."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    spec, store, rep = _sales_engine(spark, tmp_path)
+
+    class Slow:
+        def before_apply(self, parsed, buckets=None):
+            pass
+
+        def after_apply(self, batch_id=None):
+            time.sleep(0.3)
+
+    bronze = bronze_df(spark, [
+        make_event(spec, "insert", lsn=i, row={"id": i, "grp": "a", "amount": 1.0})
+        for i in range(1, 4)
+    ])
+    t0 = time.monotonic()
+    m = rep.step(bronze, maintainers=[Slow()])
+    wall = time.monotonic() - t0
+    assert set(m.phase_s) == {"summary", "fold", "patch"}
+    assert m.phase_s["summary"] > 0 and m.phase_s["fold"] > 0
+    assert m.phase_s["patch"] >= 0.3
+    assert sum(m.phase_s.values()) <= wall
+
+    (r,) = rep.replay(bronze_df(spark, [
+        make_event(spec, "insert", lsn=9, row={"id": 9, "grp": "b", "amount": 2.0})
+    ]), F.lit(0), 1)
+    assert set(r.phase_s) == {"summary", "fold", "patch"}
+    assert r.phase_s["patch"] < 0.3  # no maintainers
 
 
 def test_replay_rejects_batch_index_outside_range(spark, engine):

@@ -422,19 +422,21 @@ def test_pipeline_per_batch_plans_pass_lints(spark, sf_dir):
             "cdc_two_source_join_view/view_patch",
         }
         # fold frames: exactly ONE parse site. The view patch pins the
-        # touched keys against BOTH version reads (two semi-joins), so its
-        # raw dataflow holds two sites — in the registry query both ride
-        # the cached parse and one ReusedExchange broadcast, so runtime
-        # parses stay 1; the lint bounds the sites so a regression to
-        # 4 (the pre-r7 delta self-union) is caught.
+        # touched keys against BOTH version reads (two shuffle-hash semi
+        # joins), so its raw dataflow holds two sites — in the registry
+        # query both ride the cached parse and share one shuffle exchange
+        # of the keys (ReusedExchange), so runtime parses stay 1; the lint
+        # bounds the sites so a regression to 4 (the pre-r7 delta
+        # self-union) is caught.
         want_sites = {
             "cdc_apply_customer_bucketed/steady_fold": 1,
             "cdc_maintained_agg_view/steady_fold": 1,
             "cdc_maintained_agg_view/view_patch": 2,
-            # the min/max patch checkpoints its delta multiset (four legs
-            # reference it), which severs the parse subtree from the
-            # returned frame's plan — the runtime parse rides the shared
-            # cached batch in the registry query exactly like the others
+            # the min/max patch checkpoints its per-group patch frame (the
+            # gate, the keep side, the patched rows and the rescan list
+            # read it), which severs the parse subtree from the returned
+            # frame's plan — the runtime parse rides the shared cached
+            # batch in the registry query exactly like the others
             "cdc_maintained_minmax_view/view_patch": 0,
             # same checkpoint-severed lineage as the minmax patch
             "cdc_maintained_topk_view/view_patch": 0,

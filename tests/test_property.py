@@ -307,3 +307,65 @@ def test_inlined_bucket_pricing_equals_buckets_of(
         ).distinct().collect()
     )
     assert got == want
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c"]),
+            st.one_of(st.none(), st.integers(min_value=-3, max_value=3)),
+        ),
+        max_size=30,
+    )
+)
+def test_minmax_full_agg_equals_python_recompute(rows):
+    """``MaintainedMinMaxView._full_agg`` is the oracle several view tests
+    compare the maintained view against, so it gets its own independent
+    check: for any rows, each group's (n_rows, min_val, min_cnt, max_val,
+    max_cnt) equals a plain-Python recompute. NULL values count toward
+    n_rows but never toward an extremum; every draw also carries an
+    all-NULL group and a group with tied minima and maxima."""
+    import tempfile
+    from decimal import Decimal
+
+    from connemara_spark.operators.ivm import MaintainedMinMaxView
+
+    spark = _get_spark()
+    rows = rows + [
+        ("all_null", None), ("all_null", None),
+        ("ties", 2), ("ties", -1), ("ties", 2), ("ties", None), ("ties", -1), ("ties", 0),
+    ]
+    spec = TableSpec(
+        database="db1", schema="public", table="mm",
+        columns=[ColumnSpec("id", "bigint"), ColumnSpec("grp", "text"),
+                 ColumnSpec("amount", "integer")],
+        pk_cols=["id"],
+    )
+    state = spark.createDataFrame(
+        [(i, g, v) for i, (g, v) in enumerate(rows)], spec.spark_schema()
+    )
+    with tempfile.TemporaryDirectory() as d:
+        view = MaintainedMinMaxView(
+            spark, None, spec, group_col="grp", val_col="amount", view_dir=d
+        )
+        got = {
+            r["grp"]: (r["n_rows"], r["min_val"], r["min_cnt"], r["max_val"], r["max_cnt"])
+            for r in view._full_agg(state).collect()
+        }
+    want = {}
+    for g in {g for g, _ in rows}:
+        vals = [v for gg, v in rows if gg == g]
+        nn = [Decimal(v) for v in vals if v is not None]
+        if nn:
+            lo, hi = min(nn), max(nn)
+            want[g] = (len(vals), lo, nn.count(lo), hi, nn.count(hi))
+        else:
+            want[g] = (len(vals), None, None, None, None)
+    assert got == want
+    assert got["all_null"] == (2, None, None, None, None)
+    assert got["ties"][2] >= 2 and got["ties"][4] >= 2
