@@ -54,16 +54,6 @@ PAYLOAD_SCHEMA = T.StructType(
     ]
 )
 
-# Whole-transaction envelope (the receiver's MT_FIRST/REGULAR/LAST framing,
-# connemara_replication.c:33-104): {"xid":N,"timestamp":"...","change":[...]}
-TX_SCHEMA = T.StructType(
-    [
-        T.StructField("xid", T.LongType()),
-        T.StructField("timestamp", T.StringType()),
-        T.StructField("change", T.ArrayType(PAYLOAD_SCHEMA)),
-    ]
-)
-
 
 def malformed_payload_pred() -> Column:
     """A spool row is malformed when it carries a payload that does not
@@ -172,39 +162,6 @@ def parse_events(
     return parsed.select(
         *[guarded if c == "op" else c for c in parsed.columns]
     )
-
-
-def parse_transactions(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Whole wal2json transaction documents -> one row per change event.
-
-    Replaces the C receiver's chunk framing (P1, connemara_replication.c:
-    33-104,736-754) and tx-header extraction (P2, :106-157): ``from_json``
-    the envelope, ``explode`` the change array, carry xid + commit timestamp.
-    """
-    tx = raw.withColumn("_tx", F.from_json(F.col(payload_col), TX_SCHEMA))
-    exploded = tx.select(
-        F.col("_tx.xid").alias("xid"),
-        F.to_timestamp(F.col("_tx.timestamp")).alias("xid_timestamp"),
-        F.posexplode(F.col("_tx.change")).alias("change_index", "ev"),
-        *[c for c in raw.columns if c != payload_col],
-    )
-    return exploded.select(
-        "*",
-        F.col("ev.kind").alias("op"),
-        F.col("ev.schema").alias("schema"),
-        F.col("ev.table").alias("table"),
-        F.col("ev.columnnames").alias("columnnames"),
-        F.col("ev.columnvalues").alias("columnvalues"),
-        F.col("ev.oldkeys").alias("oldkeys"),
-    ).drop("ev")
-
-
-def record_map(columnnames: str | Column = "columnnames", columnvalues: str | Column = "columnvalues") -> Column:
-    """names→values zip (P4): the Perl hash-slice ``@record{@names}=@values``
-    (replay.pl:287,395,938) as a native map column."""
-    n = F.col(columnnames) if isinstance(columnnames, str) else columnnames
-    v = F.col(columnvalues) if isinstance(columnvalues, str) else columnvalues
-    return F.map_from_arrays(n, v)
 
 
 def standard_filters(events: DataFrame) -> DataFrame:

@@ -155,28 +155,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int = 5,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures computed entirely per-row: each of the
-    ``num_hashes`` affine permutations is an ``array_min(transform(...))``
-    over the document's in-row shingle-hash array — NO explode, NO shuffle.
-    A sketch is a per-document map-side computation; keeping it row-local
-    means signature cost scales embarrassingly with executors and the only
-    shuffle in an LSH pipeline is the band bucket join.
-    Output: (id, sig array<bigint>)."""
-    hashed = df.select(
-        F.col(id_col).alias("id"), word_shingle_hashes(text_col, k).alias("hs")
-    )
-    return hashed.select("id", minhash_sig_expr("hs", num_hashes=num_hashes, seed=seed).alias("sig"))
-
-
 def minhash_sig_expr(hs_col: str, *, num_hashes: int = 64, seed: int = 42) -> Column:
     """Signature expression over an array<bigint> shingle-hash column.
 

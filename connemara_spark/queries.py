@@ -3228,13 +3228,16 @@ def _stream_state_width(
     across partitions up to the key count, unlike the per-partition state
     commits the byte-derived width bounds. The width is therefore raised
     to at least ``min(session, python_keys)`` so high-cardinality keyed
-    state (LSH buckets, content hashes) is not serialized onto the byte
-    floor, while shard-keyed operators (keys == shards, e.g. 8) keep the
-    narrow width that their commit cost wants. Measured both ways at
-    sf0.1/local[32]: doc_stream_neardup_md5 (~8 bucket keys/doc) 12.8s at
-    width 8 vs 7.7s at 32; doc_stream_dedup (1 key/doc) 4.4 vs 3.7; the
+    state (content hashes) is not serialized onto the byte floor, while
+    shard-keyed operators (keys == shards, e.g. 8) keep the narrow width
+    that their commit cost wants. Measured both ways at sf0.1/local[32]:
+    doc_stream_dedup (1 key/doc) 4.4s at width 8 vs 3.7s at 32; the
     8-shard bottomk/heavy-bigram drains regress at 32 (2.9→3.3, 3.3→3.7),
-    hence the hint rather than a blanket session width."""
+    hence the hint rather than a blanket session width. JVM-stateful
+    drains pass no hint: doc_stream_neardup_md5's stream-stream join runs
+    no per-key Python (it took 12.8s at width 8 vs 7.7s at 32 while its
+    LSH buckets were Python state), and each extra partition adds the
+    join's four state-store commits per batch."""
     import os as _os
 
     env = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
@@ -3331,11 +3334,12 @@ def _drain_to_table(
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
     """,
-    "near-dup candidates on ingest (STREAMING, applyInPandasWithState): "
+    "near-dup candidates on ingest (STREAMING, stream-stream self-join): "
     "the corpus lands as two ingest-ordered segments; each doc's md5-family "
     "LSH band rows (md5_band_rows — per-row projections, streaming-safe) "
-    "feed lsh_candidates_stream, whose per-bucket member state emits one "
-    "candidate pair per new arrival x existing member; the drained distinct "
+    "feed lsh_candidates_stream, a JVM symmetric hash join of the band-row "
+    "stream with itself that emits each pair once per shared bucket as the "
+    "later doc lands; the drained distinct "
     "pair set must equal the batch band self-join's candidates exactly "
     "(same hash family as minhash_lsh_dedup_md5, before verification) — "
     "LSH recall on ingest with no nightly O(corpus) join",
@@ -3367,11 +3371,9 @@ def doc_stream_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drained = _drain_to_table(
             spark, cands, _os.path.join(root, "ckpt"),
-            # ~8 band-bucket state keys per doc: Python-stateful, needs
-            # CPU width (see _stream_state_width)
-            state_width=_stream_state_width(
-                spark, land, python_keys=8 * (int(row["hi"]) - int(row["lo"]) + 1)
-            ),
+            # JVM join state: each width pays 4 state-store commits per
+            # batch, so the width follows bytes, not bucket count
+            state_width=_stream_state_width(spark, land),
         )
         # batch-side dedup of the intrinsic cross-band/cross-batch repeats
         # (the verify stage does this join anyway at scale)

@@ -1,4 +1,5 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
+"""Custom stateful streaming operators (mostly ``applyInPandasWithState``;
+uncapped ``lsh_candidates_stream`` is a JVM stream-stream join).
 
 The reference holds per-key state imperatively inside worker threads
 (prepared-statement caches, per-PK apply order — replay.pl:540-611); on
@@ -358,7 +359,7 @@ LSH_CAND_SCHEMA = "id_a long, id_b long"
 _LSH_STATE_SCHEMA = "members array<bigint>"
 
 
-def _lsh_cand_fn(max_members: int | None):
+def _lsh_cand_fn(max_members: int):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -371,7 +372,7 @@ def _lsh_cand_fn(max_members: int | None):
         for i in ids:
             if i in seen:
                 continue  # re-streamed doc: pairs already emitted
-            if max_members is None or len(members) < max_members:
+            if len(members) < max_members:
                 for m in members:
                     lo, hi = (m, i) if m < i else (i, m)
                     a_out.append(lo)
@@ -396,45 +397,72 @@ def lsh_candidates_stream(
     """Near-dup candidates on ingest: LSH bucket membership as STREAMING
     state. Input is a stream of ``(id, band, bh)`` band rows (any hash
     family — ``md5_band_rows`` for the oracle-checkable md5 one,
-    the xxhash64 bands of ``minhash_lsh_pairs`` at scale); every bucket
-    ``(band, bh)`` keeps its member ids in the state store and each NEW
-    arrival emits one candidate pair per existing member — exactly the
-    pairs the batch band self-join would produce, delivered as data lands
+    the xxhash64 bands of ``minhash_lsh_pairs`` at scale); each candidate
+    pair ``(id_a < id_b)`` sharing a bucket ``(band, bh)`` is emitted once
+    per shared bucket as the later of the two lands — the same multiset of
+    pairs the batch band self-join produces, delivered as data lands
     instead of in a nightly O(corpus) job.
 
-    Duplicate emissions across bands/batches are intrinsic to LSH (a pair
-    can share several buckets); dedup them batch-side where the exact-
-    Jaccard verification joins shingle sets back anyway — chaining a
-    streaming dropDuplicates here would just double state for no recall
-    gain.
+    Uncapped (the default) this IS that self-join, run as a JVM
+    stream-stream inner join of the band-row stream with itself on
+    ``band``, ``bh`` and ``a.id < b.id``: per microbatch Spark's symmetric
+    hash join emits new x old plus new x new, so no Python runs per
+    bucket. State is every band row, held on BOTH sides of the join —
+    O(corpus band rows), about 4-5x the per-bucket member lists a Python
+    operator keeps (a 4-segment, 1,200-doc drain at 4 state partitions
+    checkpointed 2.0 MB in 266 files against 0.44 MB in 68). Inner joins
+    need no watermark, so nothing is evicted.
+    A RE-STREAMED doc repeats its pairs (its band rows join again); dedup
+    them batch-side like the cross-band/cross-batch repeats intrinsic to
+    LSH (a pair can share several buckets) — the exact-Jaccard
+    verification joins shingle sets back anyway, and a streaming
+    dropDuplicates here would only add state. The join reads the stream
+    as two sources (one per side; when both read the same files, the
+    second side's shuffle is reused), so Spark refuses to restart a
+    checkpoint written by the earlier ``applyInPandasWithState`` form of
+    this operator, which had one source: drain such queries before
+    upgrading.
 
-    State per bucket is its member-id list — O(corpus band rows) total,
-    the same footprint the batch join shuffles every night, held once
-    instead. ``max_members`` caps degenerate buckets (boilerplate text
-    collapsing thousands of docs into one bucket emits O(n^2) pairs that
-    exact verification would mostly reject): beyond the cap new arrivals
-    neither join nor extend the bucket, trading recall inside known-junk
-    buckets for bounded state — the same guard as the batch path's
-    ``max_shingle_freq``. Uncapped by default (the oracle contract is
-    exact equality with the batch band join); at crawl scale use
-    ``max_members=256`` — tools/stream_lsh_probe.py measured the cap
+    ``max_members`` caps degenerate buckets (boilerplate text collapsing
+    thousands of docs into one bucket emits O(n^2) pairs that exact
+    verification would mostly reject): beyond the cap new arrivals neither
+    join nor extend the bucket, trading recall inside known-junk buckets
+    for bounded state — the same guard as the batch path's
+    ``max_shingle_freq``. The cap counts ARRIVALS per bucket, which no JVM
+    streaming operator can do in append mode, so capped streams still run
+    per-bucket member lists in Python (``applyInPandasWithState``;
+    re-streamed docs emit nothing there). Uncapped by default (the oracle
+    contract is exact equality with the batch band join); at crawl scale
+    use ``max_members=256`` — tools/stream_lsh_probe.py measured the cap
     turning 10 planted 10k-member mega-buckets' ~500M-pair quadratic into
     10·C(cap,2) ≈ 0.2-3% of emissions at zero wall-time cost, while every
     true (small) near-dup cluster survives intact (SCALE.md)."""
-    return (
-        band_rows.select(
+
+    def side(id_name: str) -> DataFrame:
+        return band_rows.select(
             F.col("band").cast("int").alias("band"),
             F.col("bh").cast("string").alias("bh"),
-            F.col("id").cast("long").alias("id"),
+            F.col("id").cast("long").alias(id_name),
         )
-        .groupBy("band", "bh")
-        .applyInPandasWithState(
+
+    if max_members is not None:
+        return side("id").groupBy("band", "bh").applyInPandasWithState(
             _lsh_cand_fn(max_members),
             outputStructType=LSH_CAND_SCHEMA,
             stateStructType=_LSH_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+    # each side is its own source, and both advance over the same files;
+    # the sides differ only in the id column's name, so in a batch where
+    # they read the same files their shuffles canonicalize equal and Spark
+    # plans the second as a ReusedExchange: the band rows are computed and
+    # shuffled once, not per side
+    return (
+        side("id_a")
+        .join(side("id_b"), ["band", "bh"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
     )
 
 

@@ -1,4 +1,5 @@
-"""applyInPandasWithState operators: streaming sessionization + counters."""
+"""Stateful streaming operators (``streaming/stateful.py``): sessionization,
+counters, sketches and the dedup-on-ingest family."""
 
 from __future__ import annotations
 
@@ -6,6 +7,7 @@ import datetime as dt
 import glob
 import os
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -211,71 +213,95 @@ def test_exact_dedup_stream_first_arrival_wins(spark, tmp_path):
     assert got == {2: None, 5: 2, 1: None, 9: 2, 3: None, 20: 2, 7: 1}
 
 
-def test_lsh_candidates_stream_equals_batch_band_join(spark, tmp_path):
-    """Drained streaming candidates == the batch band self-join's pairs,
-    regardless of how the corpus is segmented; a re-streamed doc emits no
-    duplicate pairs; max_members caps a degenerate bucket."""
-    from connemara_spark.operators.dedup import md5_band_rows
-    from connemara_spark.streaming.stateful import lsh_candidates_stream
+DOC_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+)
 
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog today"),
-        (2, "the quick brown fox jumps over the lazy dog tonight"),
-        (3, "completely different text about spark streaming state stores"),
-        (4, "the quick brown fox jumps over the lazy dog today"),
-        (5, "another unrelated document mentioning embedded derby targets"),
-    ]
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    batch_df = spark.createDataFrame(docs, schema)
-    bands = md5_band_rows(batch_df, "doc_id", "text", k=5, num_hashes=16, bands=8)
-    a, b = bands.alias("a"), bands.alias("b")
-    want = sorted(
-        (r["id_a"], r["id_b"])
-        for r in a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .collect()
-    )
-    assert want  # planted near-dups must produce candidates
+LSH_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog today"),
+    (2, "the quick brown fox jumps over the lazy dog tonight"),
+    (3, "completely different text about spark streaming state stores"),
+    (4, "the quick brown fox jumps over the lazy dog today"),
+    (5, "another unrelated document mentioning embedded derby targets"),
+    (6, "the quick brown fox jumps over the lazy cat today"),
+    (7, "completely different text about spark streaming state machines"),
+]
 
+
+def _land_docs(spark, tmp_path, segments, start=0):
+    """Land each row list as one ingest-ordered parquet file (seg-NNNN,
+    increasing mtime) in ``tmp_path/in``; returns that directory."""
     land = str(tmp_path / "in")
-    os.makedirs(land)
-
-    def seg(rows, i):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
+    os.makedirs(land, exist_ok=True)
+    for i, rows in enumerate(segments, start):
+        df = spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1)
         st = str(tmp_path / f"st{i}")
         df.write.parquet(st)
         part = glob.glob(os.path.join(st, "part-*.parquet"))[0]
         dst = os.path.join(land, f"seg-{i:04d}.parquet")
         os.rename(part, dst)
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    return land
 
-    seg(docs[:2], 0)
-    seg(docs[2:4] + [docs[0]], 1)  # doc 1 RE-STREAMED: no duplicate pairs
-    seg(docs[4:], 2)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(land)
-    )
-    q = (
-        lsh_candidates_stream(
-            md5_band_rows(stream, "doc_id", "text", k=5, num_hashes=16, bands=8)
+
+def _lsh_bands(df):
+    from connemara_spark.operators.dedup import md5_band_rows
+
+    return md5_band_rows(df, "doc_id", "text", k=5, num_hashes=16, bands=8)
+
+
+def _band_join_pairs(spark, docs):
+    """The batch band self-join's pairs as a multiset — one per shared
+    bucket, no distinct."""
+    bands = _lsh_bands(spark.createDataFrame(docs, DOC_SCHEMA))
+    a, b = bands.alias("a"), bands.alias("b")
+    return Counter(
+        (r[0], r[1])
+        for r in a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.id") < F.col("b.id")),
         )
-        .writeStream.format("memory")
-        .queryName("lshcand_t1")
+        .select("a.id", "b.id")
+        .collect()
+    )
+
+
+def _lsh_stream(spark, land, **kw):
+    from connemara_spark.streaming.stateful import lsh_candidates_stream
+
+    stream = (
+        spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).parquet(land)
+    )
+    return lsh_candidates_stream(_lsh_bands(stream), **kw)
+
+
+def _drain_memory(frame, name, ckpt):
+    q = (
+        frame.writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    assert q.exception() is None
+    assert q.awaitTermination(120)
+    assert q.exception() is None, str(q.exception())
+    return q
+
+
+def test_lsh_candidates_stream_equals_batch_band_join(spark, tmp_path):
+    """Drained streaming candidates == the batch band self-join's pairs,
+    regardless of how the corpus is segmented; a re-streamed doc adds no
+    new distinct pair; max_members caps a degenerate bucket."""
+    docs = LSH_DOCS[:5]
+    want = sorted(_band_join_pairs(spark, docs))
+    assert want  # planted near-dups must produce candidates
+
+    # doc 1 RE-STREAMED in segment 1: its pairs repeat, no new pair appears
+    land = _land_docs(spark, tmp_path, [docs[:2], docs[2:4] + [docs[0]], docs[4:]])
+    _drain_memory(_lsh_stream(spark, land), "lshcand_t1", str(tmp_path / "ckpt"))
     got = sorted(
         {(r["id_a"], r["id_b"]) for r in spark.table("lshcand_t1").collect()}
     )
@@ -284,22 +310,75 @@ def test_lsh_candidates_stream_equals_batch_band_join(spark, tmp_path):
 
     # cap: a bucket at max_members stops joining/growing — with cap 1 the
     # second member of every bucket is ignored, so NO pairs at all
-    q2 = (
-        lsh_candidates_stream(
-            md5_band_rows(stream, "doc_id", "text", k=5, num_hashes=16, bands=8),
-            max_members=1,
-        )
-        .writeStream.format("memory")
-        .queryName("lshcand_t2")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
+    _drain_memory(
+        _lsh_stream(spark, land, max_members=1), "lshcand_t2", str(tmp_path / "ckpt2")
     )
-    q2.awaitTermination(120)
-    assert q2.exception() is None
     assert spark.table("lshcand_t2").count() == 0
     spark.catalog.dropTempView("lshcand_t2")
+
+
+def test_lsh_candidates_stream_plan_is_jvm_join(spark, tmp_path):
+    """Uncapped, the operator is a JVM stream-stream self-join: the
+    executed plan has a StreamingSymmetricHashJoin whose second side reuses
+    the first side's shuffle (band rows computed once per batch), and no
+    Python-stateful operator."""
+    land = _land_docs(spark, tmp_path, [LSH_DOCS[:3], LSH_DOCS[3:]])
+    q = _drain_memory(_lsh_stream(spark, land), "lshplan_t", str(tmp_path / "ckpt"))
+    spark.catalog.dropTempView("lshplan_t")
+    plan = q._jsq.explainInternal(False)
+    assert "StreamingSymmetricHashJoin" in plan
+    assert "ReusedExchange" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+
+
+def test_lsh_candidates_stream_multiset_equals_batch_join(spark, tmp_path):
+    """Over three segments every pair is emitted exactly once per shared
+    bucket: the drained MULTISET equals the batch band self-join without
+    distinct (pairs sharing several bands repeat in both)."""
+    want = _band_join_pairs(spark, LSH_DOCS)
+    assert max(want.values()) > 1  # some pair shares several buckets
+    land = _land_docs(spark, tmp_path, [LSH_DOCS[:2], LSH_DOCS[2:5], LSH_DOCS[5:]])
+    _drain_memory(_lsh_stream(spark, land), "lshms_t", str(tmp_path / "ckpt"))
+    got = Counter(
+        (r["id_a"], r["id_b"]) for r in spark.table("lshms_t").collect()
+    )
+    spark.catalog.dropTempView("lshms_t")
+    assert got == want
+
+
+def test_lsh_candidates_stream_checkpoint_restart_resumes_state(spark, tmp_path):
+    """The join state survives a query restart from the checkpoint: a
+    SECOND availableNow run (fresh query, same checkpoint) reads only the
+    new segment and pairs its docs with members that landed BEFORE the
+    restart; the union of both runs equals the batch join's multiset."""
+    out = str(tmp_path / "out")  # file sink: supports checkpoint recovery
+
+    def drain():
+        q = (
+            _lsh_stream(spark, str(tmp_path / "in"))
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None, str(q.exception())
+        return Counter(tuple(r) for r in spark.read.parquet(out).select("id_a", "id_b").collect())
+
+    first, later = LSH_DOCS[:3], LSH_DOCS[3:]
+    _land_docs(spark, tmp_path, [first])
+    before = drain()
+    assert before == _band_join_pairs(spark, first)
+
+    _land_docs(spark, tmp_path, [later], start=1)
+    after = drain()
+    assert after == _band_join_pairs(spark, LSH_DOCS)
+    old_ids = {d for d, _ in first}
+    new_ids = {d for d, _ in later}
+    # new docs paired with members from before the restart
+    assert any(a in old_ids and b in new_ids for a, b in after - before)
 
 
 @pytest.mark.slow  # endurance: see pytest.ini — run with -m 'slow or not slow'
@@ -473,24 +552,12 @@ def test_dedup_family_provider_agnostic_rocksdb(spark, tmp_path):
         state_store_provider,
     )
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    land = str(tmp_path / "in")
-    os.makedirs(land)
     rows = [(i, f"body-{i % 40}") for i in range(120)]
-    for s in range(3):
-        df = spark.createDataFrame(rows[s * 40 : (s + 1) * 40], schema).coalesce(1)
-        st = str(tmp_path / f"st{s}")
-        df.write.parquet(st)
-        part = glob.glob(os.path.join(st, "part-*.parquet"))[0]
-        dst = os.path.join(land, f"seg-{s:04d}.parquet")
-        os.rename(part, dst)
-        os.utime(dst, (1_700_000_000 + s, 1_700_000_000 + s))
+    land = _land_docs(spark, tmp_path, [rows[s * 40 : (s + 1) * 40] for s in range(3)])
 
     def drain(tag: str, provider: str | None):
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(DOC_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(land)
         )
@@ -525,7 +592,7 @@ def test_dedup_family_provider_agnostic_rocksdb(spark, tmp_path):
     # second family: the bottom-k sampler's keyed state under RocksDB
     def drain_bk(tag: str, provider: str | None):
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(DOC_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(land)
         )
@@ -547,6 +614,19 @@ def test_dedup_family_provider_agnostic_rocksdb(spark, tmp_path):
         return got
 
     assert drain_bk("dflt", None) == drain_bk("rock", ROCKSDB_STATE_PROVIDER)
+
+    # third family: the LSH candidate join's band-row state under RocksDB
+    def drain_lsh(tag: str, provider: str | None):
+        name = f"lsh_{tag}"
+        with state_store_provider(spark, provider):
+            _drain_memory(_lsh_stream(spark, land), name, str(tmp_path / f"lsh_ckpt_{tag}"))
+        got = sorted(tuple(r) for r in spark.table(name).collect())
+        spark.catalog.dropTempView(name)
+        return got
+
+    lsh_default = drain_lsh("dflt", None)
+    assert lsh_default  # repeated bodies share every bucket
+    assert lsh_default == drain_lsh("rock", ROCKSDB_STATE_PROVIDER)
 
 
 def test_heavy_hitters_stream_candidates_cover_and_recount_exact(spark, tmp_path):
