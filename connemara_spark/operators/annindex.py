@@ -44,6 +44,7 @@ from connemara_spark.operators.similarity import (
     ivf_centroids_lit,
     pq_train_codebooks,
 )
+from connemara_spark.stores import atomic_write_json
 
 _META = "META.json"
 
@@ -51,10 +52,7 @@ _META = "META.json"
 def _commit_meta(index_dir: str, meta: dict) -> None:
     """Atomically publish META (write-then-rename): the single commit
     point every mutation in this module funnels through."""
-    tmp = os.path.join(index_dir, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(index_dir, _META))
+    atomic_write_json(os.path.join(index_dir, _META), meta)
 
 
 def _mutation_log(meta: dict) -> list[list[str]]:
@@ -250,10 +248,7 @@ def build_ann_index(
         meta["centroids"] = [[float(x) for x in c] for c in centroids]
     if bootstrap_batch is not None:
         meta["bootstrap_batch"] = bootstrap_batch
-    tmp = os.path.join(index_dir, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(index_dir, _META))
+    _commit_meta(index_dir, meta)
     return meta
 
 

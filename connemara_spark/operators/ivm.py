@@ -23,8 +23,13 @@ the full table and only the diff is |Δ|-cheap.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from connemara_spark.session import scoped_conf
+from connemara_spark.stores import VersionedDir
 
 
 def join_view_delta(
@@ -159,18 +164,16 @@ def apply_view_delta(old_view: DataFrame, delta: DataFrame) -> DataFrame:
     return old_view.exceptAll(dels).unionByName(inss)
 
 
-from contextlib import contextmanager
-
 # Events one patch shuffle partition carries (see _static_patch_plan).
 _PATCH_EVENTS_PER_PARTITION = 100_000
 
 
-@contextmanager
 def _static_patch_plan(spark, n_events: int):
     """Run a batch's maintainer patches with AQE OFF and a shuffle width
     derived from the batch's event count, restoring both session settings
-    after. ``Replayer.step`` enters it ONCE around all of a batch's
-    concurrent patches (per-leg scopes would restore each other's values).
+    after (``scoped_conf``). ``Replayer.step`` enters it ONCE around all
+    of a batch's concurrent patches (per-leg scopes would restore each
+    other's values).
 
     The patch plans are static-shaped by construction — joins that must
     broadcast carry an explicit hint, the rest are shuffle-hash joins
@@ -198,15 +201,15 @@ def _static_patch_plan(spark, n_events: int):
     tracking a measured optimum. Results are partition-count invariant
     (aggregations and equi-joins only)."""
     width = max(1, -(-n_events // _PATCH_EVENTS_PER_PARTITION))
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    before_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before)
-        spark.conf.set("spark.sql.shuffle.partitions", before_parts)
+    return scoped_conf(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(width)},
+    )
+
+
+# Touched groups up to which a min/max or top-k patch prunes with literal
+# IN-lists instead of broadcast joins (see _gated_patch).
+_PATCH_GROUP_LITERALS = 4096
 
 
 def _patch_gate(s, g: str):
@@ -222,17 +225,11 @@ def _patch_gate(s, g: str):
     IN-lists instead of broadcast semi/anti joins (each broadcast
     exchange is its own scheduler job), and a batch that exhausts no
     extremum never schedules the rescan leg at all. Callers fall back to
-    the broadcast-join shape above ``SPARK_GRAFT_PATCH_GROUP_LITERALS``
-    (default 4096) — at production delta sizes the broadcast plan is the
-    right one, and the gate frame stays delta-bounded either way."""
+    the broadcast-join shape above ``_PATCH_GROUP_LITERALS`` touched
+    groups — at production delta sizes the broadcast plan is the right
+    one, and the gate frame stays delta-bounded either way."""
     rows = s.select(g, "__rescan").collect()
     return [r[0] for r in rows], [r[0] for r in rows if r[1]]
-
-
-def _group_literal_cap() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PATCH_GROUP_LITERALS", "4096"))
 
 
 def _not_in_groups(col, values):
@@ -242,19 +239,43 @@ def _not_in_groups(col, values):
     return ~F.coalesce(col.isin(*values), F.lit(False))
 
 
-def _vread(view, path: str) -> DataFrame:
-    """Read one view version directory with the view's schema cached on
-    the maintainer instance: the schema is invariant across versions of
-    one view, so only the FIRST read in a maintainer's lifetime pays the
-    parquet footer-inference job (each uncached read costs a 1-task
-    inference job plus a driver gap — several per batch across the
-    patch ladder)."""
-    sch = getattr(view, "_vschema", None)
-    if sch is not None:
-        return view.spark.read.schema(sch).parquet(path)
-    df = view.spark.read.parquet(path)
-    view._vschema = df.schema
-    return df
+def _gated_patch(view, s, base: DataFrame, rows_sel: list) -> DataFrame:
+    """The write side of a min/max or top-k patch over its lazily
+    checkpointed per-group frame ``s`` (group, ``__n_new``, ``__rescan``
+    and the columns ``rows_sel`` projects): the base view minus the
+    touched groups, plus the patched rows of every surviving group that
+    needs no rescan, plus — only when the gate reports one — the rescan
+    leg. The rescan leg MUST see a group's whole world: ``_full_agg`` of
+    the full current state (the touched keys' buckets do not contain a
+    touched GROUP's other rows), pruned to the rescan groups.
+
+    Up to ``_PATCH_GROUP_LITERALS`` touched groups the keep side and the
+    rescan leg prune with literal IN-lists (pushed into the scan); above
+    it with broadcast anti/semi joins."""
+    g = view.group_col
+    tg_vals, rescan_vals = _patch_gate(s, g)
+    view.last_recompute_groups = len(rescan_vals)
+    lit = len(tg_vals) <= _PATCH_GROUP_LITERALS
+    kept = (
+        (base.filter(_not_in_groups(F.col(g), tg_vals)) if tg_vals else base)
+        if lit
+        else base.join(F.broadcast(s.select(g)), g, "left_anti")
+    )
+    rows = s.filter((F.col("__n_new") > 0) & ~F.col("__rescan")).select(*rows_sel)
+    patched = kept.unionByName(rows)
+    if rescan_vals:
+        state = view.store.read(view.spec)
+        state = (
+            state.filter(F.col(g).isin(*rescan_vals))
+            if lit
+            else state.join(
+                F.broadcast(s.filter(F.col("__rescan")).select(g)),
+                g,
+                "left_semi",
+            )
+        )
+        patched = patched.unionByName(view._full_agg(state))
+    return patched
 
 
 def _table_buckets(buckets: dict | None, spec) -> list[int] | None:
@@ -264,6 +285,18 @@ def _table_buckets(buckets: dict | None, spec) -> list[int] | None:
     from a given dict had no DML in the batch, exactly as the fold
     reads it (``Replayer._apply_dml_segment``)."""
     return None if buckets is None else buckets.get(spec.qualified_key, [])
+
+
+def _state_at(view, v: int | None, buckets: list[int] | None = None) -> DataFrame:
+    """The view's table as of store version ``v`` (empty when the table
+    had no version yet), pruned to ``buckets`` at path selection when
+    given."""
+    spec, store = view.spec, view.store
+    if not v:
+        return view.spark.createDataFrame([], spec.spark_schema())
+    if buckets is None:
+        return store.read_version(spec, v)
+    return store.read_version(spec, v, buckets=buckets)
 
 
 # Touched-bucket read bytes up to which a view patch shuffles the reads to
@@ -301,12 +334,7 @@ def _delta_sources(view, m: dict) -> tuple[DataFrame, DataFrame, DataFrame]:
     spec, store = view.spec, view.store
     applied = m["store_version"] if m["version"] > 0 else view._v_pre
     bks = view._buckets if m["version"] > 0 else None
-    if not applied:
-        old = view.spark.createDataFrame([], spec.spark_schema())
-    elif bks is None:
-        old = store.read_version(spec, applied)
-    else:
-        old = store.read_version(spec, applied, buckets=bks)
+    old = _state_at(view, applied, bks)
     new = store.read(spec) if bks is None else store.read_buckets(spec, bks)
     touched = (
         view._touched.hint("shuffle_hash")
@@ -318,74 +346,180 @@ def _delta_sources(view, m: dict) -> tuple[DataFrame, DataFrame, DataFrame]:
     return old, old_t, new_t
 
 
-def _commit_view_version(view, frame: DataFrame, meta: dict) -> None:
-    """Write ``frame`` as version ``meta["version"]`` of the view, then
-    advance CURRENT to ``meta`` (write-then-advance: a crash in between
-    leaves CURRENT on the committed previous version, which a retry
-    re-reads). The one commit path of every maintained view.
+class MaintainedView:
+    """The lifecycle every maintained view shares — reuse the prior
+    answer, pay only for the delta (driven by ``Replayer.step`` /
+    ``StreamingReplayer`` via ``maintainers=[...]``):
 
-    A view version is rewritten whole every batch and differs from the
-    previous one by one batch's delta, so the previous version's bytes
-    size it: one file per ``spark.sql.files.maxPartitionBytes`` (the read
-    split — a smaller file is one read task anyway). Left at the frame's
-    own width, the write fans out to one file per task of its last stage
-    (the previous version's files plus every patch partition), each a
-    task, a file commit and a later footer read, for views of a few dozen
-    rows. The first version (no previous one) writes at the frame's own
-    width."""
-    import json
-    import os
+    - ``before_apply(parsed_events, buckets)`` pins the batch's touched
+      keys, the pre-apply store version and the summary's touched-bucket
+      ids. The key pin is lazy, NOT localCheckpoint'd: both drivers keep
+      ``parsed_events`` cached until ``after_apply`` returns, so it costs
+      zero jobs here and each consumer evaluates the |delta|-sized
+      distinct over the warm cache (an eager pin was one whole job per
+      maintainer per batch). It derives from the IMMUTABLE parsed batch
+      only — never the store — so post-apply evaluation sees identical
+      keys.
+    - ``after_apply(batch_id)`` builds the patched view (``_patch_frame``)
+      and commits it: the frame is written as the next version of
+      ``view_dir`` and then the view's CURRENT pointer advances to the
+      next meta (``VersionedDir``'s write-then-advance). A crash in
+      between leaves CURRENT on the previous version, which the retried
+      batch re-reads; ``batch_id`` is ignored (the patch is
+      version-anchored, not ledgered).
+    - ``read_view()`` reads the CURRENT version (before the first patch:
+      the full recompute ``_full_agg`` of the current store).
+    - ``check_schema(catalog)`` fails loudly when DDL removed or renamed
+      a column the view projects; ``gc_view`` retires old versions.
 
-    v = meta["version"]
-    prev = os.path.join(view.view_dir, f"v{v - 1:06d}")
-    if os.path.isdir(prev):
-        size = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(prev)
-            for f in files
-        )
-        split = view.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        frame = frame.coalesce(max(1, -(-size // split)))
-    frame.write.mode("overwrite").parquet(os.path.join(view.view_dir, f"v{v:06d}"))
-    tmp = os.path.join(view.view_dir, "CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(view.view_dir, "CURRENT"))
+    A subclass supplies its validation, ``_full_agg``, ``_patch_frame``
+    (→ ``(next pointer meta, patched frame)``, uncommitted — plan audits
+    explain it) and, where it differs, the hooks ``_touched_keys``,
+    ``_for_readers`` and ``_before_commit``. ``_meta0`` is the pointer
+    before the first commit; the version-anchored views' pointers also
+    record the store version they incorporate (``store_version``)."""
+
+    _kind = "view"
+    _meta0: dict = {"version": 0, "store_version": None}
+
+    def __init__(self, spark, store, view_dir: str, *needs):
+        """``needs``: one ``(spec, columns the view projects from it)``
+        pair per source table, the first being the view's own table."""
+        self.spark = spark
+        self.store = store
+        self.spec = needs[0][0]
+        self.view_dir = view_dir
+        self._vd = VersionedDir(view_dir)
+        # The projection contract, PINNED at construction. check_schema must
+        # compare the catalog against what this view was BUILT to project —
+        # the spec objects themselves are the catalog's live entries, which
+        # EngineCatalog.rename_column mutates in place (pk_cols included),
+        # so deriving the needed set from the spec at check time can never
+        # see a rename (the staleness check would silently pass and the
+        # next patch would fail or null-fill). Caught by the
+        # cdc_two_source_ddl_join_view gate.
+        self._needs = [
+            (spec, frozenset(spec.pk_cols) | set(cols)) for spec, cols in needs
+        ]
+        self._vschema = None
+        os.makedirs(view_dir, exist_ok=True)
+        self._touched = self._v_pre = self._buckets = None
+
+    # -- the lifecycle ---------------------------------------------------
+    def _meta(self) -> dict:
+        return self._vd.meta(dict(self._meta0))
+
+    def read_view(self) -> DataFrame:
+        m = self._meta()
+        if m["version"] == 0:
+            raw = self._full_agg(*(self.store.read(spec) for spec, _ in self._needs))
+        else:
+            raw = self._version(m["version"])
+        return self._for_readers(raw)
+
+    def check_schema(self, catalog) -> None:
+        """Fail LOUDLY when mid-stream DDL removed OR RENAMED a column this
+        view projects (driven after any batch that executed DDL). Without
+        the check, the pinned projection would read the dropped column out
+        of newer store files as NULLs and the view would drift silently.
+        An unrelated ADD COLUMN passes: the view's projection is a subset
+        either way."""
+        for spec, need in self._needs:
+            cur = catalog.get(spec.database, spec.schema, spec.table)
+            missing = sorted(need - set(cur.column_names))
+            if missing:
+                raise RuntimeError(
+                    f"maintained {self._kind} over {spec.target_name} lost "
+                    f"column(s) {missing} to DDL — drop and rebuild the view"
+                )
+
+    def gc_view(self, *, keep_last: int = 2) -> list[int]:
+        """Retire old view version directories — every batch writes one,
+        so an un-GC'd view_dir grows linearly with stream length. Keeps
+        the newest ``keep_last`` versions up to and including CURRENT; the
+        patch only ever reads the CURRENT version (its base), so
+        ``keep_last=1`` is already crash-safe — a retried batch re-reads
+        the committed CURRENT, never an older version. Returns the removed
+        version numbers."""
+        return self._vd.gc(self._vd.retained(keep_last))
+
+    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
+        self._touched = self._touched_keys(parsed_events)
+        self._v_pre = self.store.current_version(self.spec.target_name)
+        self._buckets = _table_buckets(buckets, self.spec)
+
+    def after_apply(self, batch_id: str | None = None) -> None:
+        nxt, patched = self._patch_frame()
+        self._before_commit(nxt)
+        self._commit(patched, nxt)
+        self._touched = self._v_pre = self._buckets = None
+
+    # -- hooks -----------------------------------------------------------
+    def _touched_keys(self, parsed_events: DataFrame) -> DataFrame:
+        return touched_keys(parsed_events, self.spec)
+
+    def _for_readers(self, raw: DataFrame) -> DataFrame:
+        return raw
+
+    def _before_commit(self, nxt: dict) -> None:
+        """Runs between the patch and the view write; may extend ``nxt``."""
+
+    # -- shared by the patches ---------------------------------------------
+    def _version(self, v: int) -> DataFrame:
+        """Committed version ``v`` of the view. The schema is invariant
+        across versions, so only the FIRST read in a maintainer's lifetime
+        pays the parquet footer-inference job (each uncached read costs a
+        1-task inference job plus a driver gap — several per batch across
+        the patch ladder)."""
+        path = self._vd.path(v)
+        if self._vschema is not None:
+            return self.spark.read.schema(self._vschema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._vschema = df.schema
+        return df
+
+    def _base(self, m: dict, *states: DataFrame) -> DataFrame:
+        """The view the patch starts from: the version ``m`` names, or —
+        before the first commit — ``_full_agg`` of ``states``."""
+        return self._full_agg(*states) if m["version"] == 0 else self._version(m["version"])
+
+    def _next(self, m: dict) -> dict:
+        """The pointer a patch of ``m`` commits: the next version, the
+        store version it incorporates (version-anchored views), every
+        other key carried forward."""
+        nxt = dict(m, version=m["version"] + 1)
+        if "store_version" in nxt:
+            nxt["store_version"] = self.store.current_version(self.spec.target_name)
+        return nxt
+
+    def _commit(self, frame: DataFrame, meta: dict) -> None:
+        """Write ``frame`` as version ``meta["version"]``, then advance
+        CURRENT to ``meta``.
+
+        A view version is rewritten whole every batch and differs from the
+        previous one by one batch's delta, so the previous version's bytes
+        size it: one file per ``spark.sql.files.maxPartitionBytes`` (the
+        read split — a smaller file is one read task anyway). Left at the
+        frame's own width, the write fans out to one file per task of its
+        last stage (the previous version's files plus every patch
+        partition), each a task, a file commit and a later footer read,
+        for views of a few dozen rows. The first version (no previous one)
+        writes at the frame's own width."""
+        v = meta["version"]
+        prev = self._vd.path(v - 1)
+        if os.path.isdir(prev):
+            size = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _dirs, files in os.walk(prev)
+                for f in files
+            )
+            split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            frame = frame.coalesce(max(1, -(-size // split)))
+        frame.write.mode("overwrite").parquet(self._vd.path(v))
+        self._vd.advance(meta)
 
 
-def gc_view_versions(view_dir: str, *, keep_last: int = 2) -> list[int]:
-    """Retire old materialized view version directories (``vNNNNNN``) —
-    every maintained view writes one per batch, so an un-GC'd view_dir
-    grows linearly with stream length. Keeps the newest ``keep_last``
-    versions up to and including CURRENT; the patch protocol only ever
-    reads the CURRENT version (its base), so ``keep_last=1`` is already
-    crash-safe — a retried batch re-reads the committed CURRENT, never an
-    older version. Returns the removed version numbers."""
-    import json
-    import os
-    import re
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (CURRENT must survive)")
-    ptr = os.path.join(view_dir, "CURRENT")
-    if not os.path.exists(ptr):
-        return []
-    with open(ptr) as fh:
-        current = json.load(fh)["version"]
-    removed = []
-    for e in sorted(os.listdir(view_dir)):
-        # {6,} not {6}: versions are written f"v{v:06d}", which grows to 7+
-        # digits past 1,000,000 — an exactly-6 match would silently stop
-        # retiring them right when a long-lived stream needs GC most
-        m = re.fullmatch(r"v(\d{6,})", e)
-        if m and int(m.group(1)) <= current - keep_last:
-            shutil.rmtree(os.path.join(view_dir, e))
-            removed.append(int(m.group(1)))
-    return removed
-
-
-class MaintainedTwoTableJoinView:
+class MaintainedTwoTableJoinView(MaintainedView):
     """Keep an equi-join view over TWO CDC-fed tables materialized and
     CURRENT — the consolidation engine's defining query (cross-source
     joins are the reference's reason to exist, docs/index.rst:9-12) as an
@@ -402,6 +536,9 @@ class MaintainedTwoTableJoinView:
     changed B row).
     """
 
+    _kind = "two-table join view"
+    _meta0 = {"version": 0}
+
     def __init__(
         self,
         spark,
@@ -414,8 +551,6 @@ class MaintainedTwoTableJoinView:
         view_cols: list[str],
         view_dir: str,
     ):
-        import os
-
         for spec, key, side in ((spec_a, key_a, "A"), (spec_b, key_b, "B")):
             if spec.pk_cols != [key]:
                 raise ValueError(
@@ -436,7 +571,7 @@ class MaintainedTwoTableJoinView:
             if c != key_a and c != key_b and c in cols_a and c in cols_b
         ]
         if ambiguous:
-            # _join would silently resolve these to the A side; a caller
+            # _full_agg would silently resolve these to the A side; a caller
             # expecting the B-side value would get wrong view contents with
             # no error — refuse instead
             raise ValueError(
@@ -444,42 +579,18 @@ class MaintainedTwoTableJoinView:
                 f"and {spec_b.target_name} — rename one side's column in its "
                 "spec or drop the ambiguous name from view_cols"
             )
-        self.spark = spark
-        self.store = store
+        super().__init__(
+            spark, store, view_dir,
+            (spec_a, {c for c in view_cols if c in cols_a}),
+            (spec_b, {c for c in view_cols if c in cols_b}),
+        )
         self.spec_a = spec_a
         self.spec_b = spec_b
         self.key_a = key_a
         self.key_b = key_b
         self.view_cols = view_cols
-        self.view_dir = view_dir
-        # The projection contract, PINNED at construction. check_schema must
-        # compare the catalog against what this view was BUILT to project —
-        # the spec objects themselves are the catalog's live entries, which
-        # EngineCatalog.rename_column mutates in place, so deriving the
-        # needed set from spec.columns at check time can never see a rename
-        # (the staleness check would silently pass and the next patch would
-        # fail or null-fill). Caught by the cdc_two_source_ddl_join_view
-        # gate.
-        self._need_a = frozenset(spec_a.pk_cols) | {
-            c for c in view_cols if c in cols_a
-        }
-        self._need_b = frozenset(spec_b.pk_cols) | {
-            c for c in view_cols if c in cols_b
-        }
-        os.makedirs(view_dir, exist_ok=True)
-        self._touched = None
 
-    def _current(self) -> int:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)["version"]
-        return 0
-
-    def _join(self, a: DataFrame, b: DataFrame) -> DataFrame:
+    def _full_agg(self, a: DataFrame, b: DataFrame) -> DataFrame:
         j = a.join(b, a[self.key_a] == b[self.key_b])
         return j.select(
             *[
@@ -488,68 +599,30 @@ class MaintainedTwoTableJoinView:
             ]
         )
 
-    def read_view(self) -> DataFrame:
-        import os
-
-        v = self._current()
-        if v == 0:
-            return self._join(
-                self.store.read(self.spec_a), self.store.read(self.spec_b)
-            )
-        return _vread(self, os.path.join(self.view_dir, f"v{v:06d}"))
-
-    def check_schema(self, catalog) -> None:
-        """Fail loudly when DDL removed OR RENAMED a column this view
-        projects from either table. The needed sets were pinned at
-        construction (``_need_a``/``_need_b``) — deriving them from the
-        spec objects here would race the catalog's in-place evolution and
-        miss every rename (see __init__)."""
-        for spec, need in ((self.spec_a, self._need_a), (self.spec_b, self._need_b)):
-            cur = catalog.get(spec.database, spec.schema, spec.table)
-            missing = sorted(need - set(cur.column_names))
-            if missing:
-                raise RuntimeError(
-                    f"maintained two-table join view lost column(s) {missing} "
-                    f"of {spec.target_name} to DDL — drop and rebuild the view"
-                )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
+    def _touched_keys(self, parsed_events: DataFrame) -> DataFrame:
         ta = touched_keys(parsed_events, self.spec_a).select(
             F.col(self.key_a).alias("__k")
         )
         tb = touched_keys(parsed_events, self.spec_b).select(
             F.col(self.key_b).alias("__k")
         )
-        # lazy, NOT localCheckpoint'd: both drivers of this protocol keep
-        # parsed_events cached until after_apply returns, so the pin costs
-        # zero jobs here and each consumer evaluates the |delta|-sized
-        # distinct over the warm cache (multi-batch pipelines are
-        # job-floor-bound; an eager pin was one whole job per maintainer
-        # per batch). Derivation is from the IMMUTABLE parsed batch only —
-        # never the store — so post-apply evaluation sees identical keys.
-        self._touched = ta.union(tb).distinct()
+        return ta.union(tb).distinct()
 
     def _patch_frame(self):
-        """Build (current version, patched view frame) WITHOUT committing —
-        ``after_apply`` writes it; plan audits explain it."""
-        import os
-
-        v0 = self._current()
+        m = self._meta()
         # steady state over a bucketed silver store: both new-state reads
         # prune to the touched keys' buckets at path selection (replacement
-        # only needs touched keys). The first materialization (v0 == 0)
-        # reads full — its base is the complete join.
-        prune = v0 > 0 and hasattr(self.store, "read_for_keys")
-        if prune:
-            new_a = self.store.read_for_keys(
-                self.spec_a, self._touched.select(F.col("__k").alias(self.key_a))
-            )
-            new_b = self.store.read_for_keys(
-                self.spec_b, self._touched.select(F.col("__k").alias(self.key_b))
+        # only needs touched keys). The first materialization reads full —
+        # its base is the complete join. The summary's bucket ids cannot
+        # stand in for read_for_keys here: the touched set is the union of
+        # BOTH tables' keys, so a key touched only on the B side can hash
+        # into an A bucket that A's own summary ids do not contain.
+        if m["version"] > 0 and hasattr(self.store, "read_for_keys"):
+            new_a, new_b = (
+                self.store.read_for_keys(
+                    spec, self._touched.select(F.col("__k").alias(key))
+                )
+                for spec, key in ((self.spec_a, self.key_a), (self.spec_b, self.key_b))
             )
         else:
             new_a = self.store.read(self.spec_a)
@@ -557,25 +630,16 @@ class MaintainedTwoTableJoinView:
         t = F.broadcast(self._touched)
         a_t = new_a.join(t, new_a[self.key_a] == t["__k"], "left_semi")
         b_t = new_b.join(t, new_b[self.key_b] == t["__k"], "left_semi")
-        repl = self._join(a_t, b_t)
-        base = (
-            # first materialization: full join of the CURRENT states (they
-            # already include this batch — replacement overwrites the
-            # touched keys either way, so this is retry-safe too)
-            self._join(new_a, new_b)
-            if v0 == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{v0:06d}"))
-        )
+        repl = self._full_agg(a_t, b_t)
+        # first materialization: full join of the CURRENT states (they
+        # already include this batch — replacement overwrites the touched
+        # keys either way, so this is retry-safe too)
+        base = self._base(m, new_a, new_b)
         kept = base.join(t, base[self.key_a] == t["__k"], "left_anti")
-        return v0, kept.unionByName(repl)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        v0, patched = self._patch_frame()
-        _commit_view_version(self, patched, {"version": v0 + 1})
-        self._touched = None
+        return self._next(m), kept.unionByName(repl)
 
 
-class MaintainedAggView:
+class MaintainedAggView(MaintainedView):
     """Keep a grouped aggregate ``(group, n_rows, total)`` over a CDC-fed
     table materialized and CURRENT, incrementally — the deployment shape
     of ``incremental_group_agg``: per microbatch the patch costs
@@ -603,6 +667,8 @@ class MaintainedAggView:
     raises), never silently.
     """
 
+    _kind = "aggregate"
+
     def __init__(
         self,
         spark,
@@ -615,46 +681,14 @@ class MaintainedAggView:
         sum_expr: str | None = None,
         view_dir: str,
     ):
-        import os
-
-        self.spark = spark
-        self.store = store
-        self.spec = spec
+        # sum_col, not sum_expr, is the DDL-tracked dependency
+        super().__init__(spark, store, view_dir, (spec, {group_col, sum_col}))
         self.group_col = group_col
         self.sum_col = sum_col
         # optional SQL expression summed INSTEAD of the bare column (e.g. a
-        # grid-exact money normalization); sum_col stays the DDL-tracked
-        # dependency for check_schema
+        # grid-exact money normalization)
         self.sum_expr = sum_expr or sum_col
         self.sum_type = sum_type
-        self.view_dir = view_dir
-        # projection contract PINNED at construction (mirrors
-        # MaintainedTwoTableJoinView): EngineCatalog.rename_column mutates
-        # spec.pk_cols in place, so deriving the need-set lazily from the
-        # live spec makes a PK rename structurally undetectable
-        self._need = frozenset(spec.pk_cols) | {group_col, sum_col}
-        os.makedirs(view_dir, exist_ok=True)
-        self._touched = None
-        self._v_pre = None
-        self._buckets = None
-
-    def _meta(self) -> dict:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)
-        return {"version": 0, "store_version": None}
-
-    def read_view(self) -> DataFrame:
-        import os
-
-        m = self._meta()
-        if m["version"] == 0:
-            return self._full_agg(self.store.read(self.spec))
-        return _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
 
     def _full_agg(self, state: DataFrame) -> DataFrame:
         return state.groupBy(self.group_col).agg(
@@ -664,54 +698,11 @@ class MaintainedAggView:
             .alias("total"),
         )
 
-    def check_schema(self, catalog) -> None:
-        """Fail LOUDLY when mid-stream DDL removed a column this view
-        aggregates (driven by StreamingReplayer after any batch that
-        executed DDL). Without the check, the pinned spec would keep
-        projecting the dropped column out of newer store files as NULLs
-        and the aggregate would drift silently — violating the view's
-        fail-loudly contract. An unrelated ADD COLUMN passes: the view's
-        projection is a subset either way."""
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        need = self._need
-        missing = sorted(need - set(cur.column_names))
-        if missing:
-            raise RuntimeError(
-                f"maintained aggregate over {self.spec.target_name} lost "
-                f"column(s) {missing} to DDL — drop and rebuild the view"
-            )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
-        # lazy pin (see MaintainedTwoTableJoinView.before_apply): derives
-        # from the immutable cached batch only, so evaluating it after the
-        # store advanced yields identical keys at zero extra jobs.
-        # ``buckets``: the batch summary's touched-bucket ids, which prune
-        # the patch's version reads (see _delta_sources)
-        self._touched = touched_keys(parsed_events, self.spec)
-        self._v_pre = self.store.current_version(self.spec.target_name)
-        self._buckets = _table_buckets(buckets, self.spec)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        m, patched, v_now = self._patch_frame()
-        _commit_view_version(
-            self, patched, {"version": m["version"] + 1, "store_version": v_now}
-        )
-        self._touched = self._v_pre = self._buckets = None
-
     def _patch_frame(self):
-        """Build (meta, patched view frame, store version) WITHOUT
-        committing — ``after_apply`` writes it; plan audits explain it."""
-        import os
-
         from connemara_spark.operators.apply import group_agg_net, merge_group_agg
 
         m = self._meta()
         old, old_t, new_t = _delta_sources(self, m)
-        v_now = self.store.current_version(self.spec.target_name)
 
         # JOIN-FREE delta: the group aggregate is distributive, so the
         # per-key old↔new pairing a full-outer diff join would produce is
@@ -723,28 +714,22 @@ class MaintainedAggView:
             old_t, new_t,
             group_col=self.group_col, sum_col=self.sum_expr, sum_type=self.sum_type,
         )
-        base = (
-            self._full_agg(old)
-            if m["version"] == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
-        )
         patched = merge_group_agg(
-            base, net, group_col=self.group_col, sum_type=self.sum_type
+            self._base(m, old), net, group_col=self.group_col, sum_type=self.sum_type
         )
-        return m, patched, v_now
+        return self._next(m), patched
 
 
-class MaintainedJoinView:
+class MaintainedJoinView(MaintainedView):
     """Keep an equi-join view ``A ⋈ dim`` materialized and CURRENT under a
     CDC stream, incrementally — the deployment shape of the delta rule:
     per microbatch, work scales with that batch's touched-key set, never
     the view.
 
     Protocol (driven by ``StreamingReplayer`` when passed via
-    ``maintainers=[...]``): ``before_apply(parsed_events)`` pins the OLD
-    state (the store's current version — ParquetStore reads are
-    version-pinned, so the frame stays old through the apply) and the
-    batch's touched keys; after the replayer applies the batch,
+    ``maintainers=[...]``): ``before_apply(parsed_events, buckets)`` pins
+    the batch's touched keys, the OLD state's store version and the
+    summary's touched-bucket ids; after the replayer applies the batch,
     ``after_apply()`` patches the materialized view (versioned parquet,
     same write-then-advance pointer discipline as the silver store).
 
@@ -761,6 +746,9 @@ class MaintainedJoinView:
     the touched set broadcasts and prunes the state before the join.
     """
 
+    _kind = "join view"
+    _meta0 = {"version": 0}
+
     def __init__(
         self,
         spark,
@@ -773,12 +761,6 @@ class MaintainedJoinView:
         view_cols: list[str],
         view_dir: str,
     ):
-        import os
-
-        self.spark = spark
-        self.store = store
-        self.spec = spec
-        self.dim = dim
         # The touched-key set is computed in PK space (touched_keys), and
         # join_view_delta prunes on key_a — those spaces must coincide or
         # the pruning silently misses changed rows and the view goes stale.
@@ -797,39 +779,14 @@ class MaintainedJoinView:
                 f"view_cols must include the join key {key_a!r} "
                 "(touched-key replacement deletes view rows by key)"
             )
+        mine = {c.name for c in spec.columns}
+        super().__init__(spark, store, view_dir, (spec, {c for c in view_cols if c in mine}))
+        self.dim = dim
         self.key_a = key_a
         self.key_b = key_b
         self.view_cols = view_cols
-        self.view_dir = view_dir
-        # pinned projection contract (see MaintainedTwoTableJoinView.__init__:
-        # the catalog mutates spec.columns in place on rename, so the needed
-        # set must be snapshotted at construction for check_schema to see it)
-        mine = {c.name for c in spec.columns}
-        self._need = frozenset(spec.pk_cols) | {c for c in view_cols if c in mine}
-        os.makedirs(view_dir, exist_ok=True)
-        self._old = None
-        self._touched = None
 
-    def _current(self) -> int:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)["version"]
-        return 0
-
-    def read_view(self) -> DataFrame:
-        import os
-
-        v = self._current()
-        if v == 0:
-            a = self.store.read(self.spec)
-            return self._join(a)
-        return _vread(self, os.path.join(self.view_dir, f"v{v:06d}"))
-
-    def _join(self, a: DataFrame) -> DataFrame:
+    def _full_agg(self, a: DataFrame) -> DataFrame:
         j = a.join(self.dim, a[self.key_a] == self.dim[self.key_b])
         return j.select(
             *[
@@ -838,37 +795,18 @@ class MaintainedJoinView:
             ]
         )
 
-    def check_schema(self, catalog) -> None:
-        """Fail loudly when DDL removed OR RENAMED a column this view
-        projects from its table (needed set pinned at construction — see
-        MaintainedTwoTableJoinView.check_schema)."""
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        missing = sorted(self._need - set(cur.column_names))
-        if missing:
-            raise RuntimeError(
-                f"maintained join view over {self.spec.target_name} lost "
-                f"column(s) {missing} to DDL — drop and rebuild the view"
-            )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
-        self._old = self.store.read(self.spec)  # version-pinned OLD state
-        # lazy pin (see MaintainedTwoTableJoinView.before_apply)
-        self._touched = touched_keys(parsed_events, self.spec)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        import os
-
-        # bucketed silver store: the new-state read prunes to the touched
-        # keys' buckets at path selection (replacement only needs touched
-        # keys; the semi join below narrows the bucket superset to them)
+    def _patch_frame(self):
+        m = self._meta()
+        v0 = m["version"]
+        # bucketed silver store at steady state: the new-state read prunes
+        # to the summary's touched-bucket ids at path selection (replacement
+        # only needs touched keys; the semi join below narrows the buckets
+        # to them)
+        bks = self._buckets if v0 > 0 else None
         new = (
-            self.store.read_for_keys(self.spec, self._touched)
-            if hasattr(self.store, "read_for_keys")
-            else self.store.read(self.spec)
+            self.store.read(self.spec)
+            if bks is None
+            else self.store.read_buckets(self.spec, bks)
         )
         t = F.broadcast(
             self._touched.select(
@@ -878,24 +816,18 @@ class MaintainedJoinView:
         # replacement rows: the NEW state's join restricted to touched keys
         # (semi-join prunes before the dim join — |Δ|-sized work)
         a_t = new.join(t, new[self.key_a] == t["__k"], "left_semi")
-        repl = self._join(a_t)
+        repl = self._full_agg(a_t)
         # base view: the materialized version if one exists, else the join
-        # of the PINNED OLD state (first materialization only; on a retry
-        # after a post-apply crash the pinned state may already contain the
-        # batch — harmless, replacement overwrites the touched keys either
-        # way)
-        v0 = self._current()
-        base = (
-            self._join(self._old)
-            if v0 == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{v0:06d}"))
-        )
+        # of the pre-apply state (first materialization only; on a retry
+        # after a post-apply crash the pinned version may already contain
+        # the batch — harmless, replacement overwrites the touched keys
+        # either way)
+        base = self._version(v0) if v0 else self._full_agg(_state_at(self, self._v_pre))
         kept = base.join(t, base[self.key_a] == t["__k"], "left_anti")
-        _commit_view_version(self, kept.unionByName(repl), {"version": v0 + 1})
-        self._old = self._touched = None
+        return self._next(m), kept.unionByName(repl)
 
 
-class MaintainedMinMaxView:
+class MaintainedMinMaxView(MaintainedView):
     """Keep a grouped ``(group, n_rows, min_val, max_val)`` view over a
     CDC-fed table materialized incrementally — the classic NON-self-
     maintainable aggregate (Gupta & Mumick's taxonomy: MIN/MAX under
@@ -937,6 +869,8 @@ class MaintainedMinMaxView:
     scheduling the recompute leg at all) exposes how often it fires.
     """
 
+    _kind = "min/max view"
+
     def __init__(
         self,
         spark,
@@ -947,44 +881,12 @@ class MaintainedMinMaxView:
         val_col: str,
         val_type: str = "decimal(12,2)",
         view_dir: str,
-        debug_counters: bool = False,
     ):
-        import os
-
-        self.spark = spark
-        self.store = store
-        self.spec = spec
+        super().__init__(spark, store, view_dir, (spec, {group_col, val_col}))
         self.group_col = group_col
         self.val_col = val_col
         self.val_type = val_type
-        self.view_dir = view_dir
-        self.debug_counters = debug_counters
         self.last_recompute_groups: int | None = None
-        # pinned projection contract (see MaintainedAggView.__init__)
-        self._need = frozenset(spec.pk_cols) | {group_col, val_col}
-        os.makedirs(view_dir, exist_ok=True)
-        self._touched = None
-        self._v_pre = None
-        self._buckets = None
-
-    # -- protocol plumbing shared with MaintainedAggView ---------------
-    def _meta(self) -> dict:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)
-        return {"version": 0, "store_version": None}
-
-    def read_view(self) -> DataFrame:
-        import os
-
-        m = self._meta()
-        if m["version"] == 0:
-            return self._full_agg(self.store.read(self.spec))
-        return _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
 
     def _val(self):
         return F.col(self.val_col).cast(self.val_type)
@@ -1117,40 +1019,9 @@ class MaintainedMinMaxView:
 
         return _prepared(("mm_patch", g, self.val_col, self.val_type), build)
 
-    def check_schema(self, catalog) -> None:
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        need = self._need
-        missing = sorted(need - set(cur.column_names))
-        if missing:
-            raise RuntimeError(
-                f"maintained min/max view over {self.spec.target_name} lost "
-                f"column(s) {missing} to DDL — drop and rebuild the view"
-            )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
-        # lazy pins (see MaintainedAggView.before_apply)
-        self._touched = touched_keys(parsed_events, self.spec)
-        self._v_pre = self.store.current_version(self.spec.target_name)
-        self._buckets = _table_buckets(buckets, self.spec)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        m, patched, v_now = self._patch_frame()
-        _commit_view_version(
-            self, patched, {"version": m["version"] + 1, "store_version": v_now}
-        )
-        self._touched = self._v_pre = self._buckets = None
-
-    # -- the patch ------------------------------------------------------
     def _patch_frame(self):
-        import os
-
         m = self._meta()
         old, old_t, new_t = _delta_sources(self, m)
-        v_now = self.store.current_version(self.spec.target_name)
 
         g = self.group_col
         prep = self._prep()  # batch-invariant Column trees (see _prep)
@@ -1171,11 +1042,7 @@ class MaintainedMinMaxView:
         # multiplicity).
         per_val = deltas.groupBy(g, "__v").agg(*prep["per_val_aggs"])
 
-        base = (
-            self._full_agg(old)
-            if m["version"] == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
-        )
+        base = self._base(m, old)
         # each touched value with its group's extremum bookkeeping: a
         # shuffle join building on the batch-sized side. It reads AND
         # shuffles the whole view (one row per group) at the patch width;
@@ -1187,55 +1054,26 @@ class MaintainedMinMaxView:
         )
         s = d.groupBy(g).agg(*prep["s_aggs"])
 
-        s = s.withColumn("__n_new", prep["n_new"]).withColumn(
-            "__rescan", prep["needs_rescan"]
-        )
-
-        def _rows(sf):
-            return sf.filter(
-                (F.col("__n_new") > 0) & ~F.col("__rescan")
-            ).select(*prep["rows_sel"])
-
         # ONE materialization for the whole patch: `s` is |touched groups|-
         # sized and every downstream consumer — the keep side's group set,
         # the patched rows, the rescan gate and the rescan group list —
         # reads this checkpoint instead of re-deriving the delta subtree.
-        # Lazy: the gate's collect below is the job that computes it (see
-        # _patch_gate); the write is the patch's only other job.
-        s = s.localCheckpoint(eager=False)
-        # in the common batch (no extremum exhausted) the gate lets us skip
+        # Lazy: the gate's collect is the job that computes it (see
+        # _patch_gate); the write is the patch's only other job. In the
+        # common batch (no extremum exhausted) the gate lets the write skip
         # SCHEDULING the whole recompute subtree — a full-store scan plus
         # two aggregation exchanges that would produce zero rows — and
         # below the literal cap it also removes both write-side broadcast
         # exchanges (each its own scheduler job per batch).
-        tg_vals, rescan_vals = _patch_gate(s, g)
-        self.last_recompute_groups = len(rescan_vals)
-        lit = len(tg_vals) <= _group_literal_cap()
-        kept = (
-            (base.filter(_not_in_groups(F.col(g), tg_vals)) if tg_vals else base)
-            if lit
-            else base.join(F.broadcast(s.select(g)), g, "left_anti")
+        s = (
+            s.withColumn("__n_new", prep["n_new"])
+            .withColumn("__rescan", prep["needs_rescan"])
+            .localCheckpoint(eager=False)
         )
-        patched = kept.unionByName(_rows(s))
-        if rescan_vals:
-            # the recompute leg MUST see the group's whole world: full
-            # current state (not the touched buckets), pruned by the group
-            # list (literal pushdown below the cap, broadcast semi above)
-            state = self.store.read(self.spec)
-            state = (
-                state.filter(F.col(g).isin(*rescan_vals))
-                if lit
-                else state.join(
-                    F.broadcast(s.filter(F.col("__rescan")).select(g)),
-                    g,
-                    "left_semi",
-                )
-            )
-            patched = patched.unionByName(self._full_agg(state))
-        return m, patched, v_now
+        return self._next(m), _gated_patch(self, s, base, prep["rows_sel"])
 
 
-class MaintainedTopKView:
+class MaintainedTopKView(MaintainedView):
     """Keep each group's TOP-K rows by a value column materialized
     incrementally — the BI leaderboard artifact ("top k accounts per
     segment"), and like MIN/MAX a NON-self-maintainable aggregate:
@@ -1266,6 +1104,8 @@ class MaintainedTopKView:
     must be non-null (CDC spec columns).
     """
 
+    _kind = "top-k view"
+
     def __init__(
         self,
         spark,
@@ -1278,53 +1118,21 @@ class MaintainedTopKView:
         slack: int | None = None,
         val_type: str = "decimal(12,2)",
         view_dir: str,
-        debug_counters: bool = False,
     ):
-        import os
-
-        self.spark = spark
-        self.store = store
-        self.spec = spec
+        if len(spec.pk_cols) != 1:
+            raise ValueError("MaintainedTopKView requires a single-column pk")
+        super().__init__(spark, store, view_dir, (spec, {group_col, val_col}))
         self.group_col = group_col
         self.val_col = val_col
         self.k = k
         self.slack = k if slack is None else slack
         self.val_type = val_type
-        self.view_dir = view_dir
-        self.debug_counters = debug_counters
         self.last_recompute_groups: int | None = None
-        if len(spec.pk_cols) != 1:
-            raise ValueError("MaintainedTopKView requires a single-column pk")
         self.pk = spec.pk_cols[0]
-        # pinned projection contract (see MaintainedAggView.__init__)
-        self._need = frozenset(spec.pk_cols) | {group_col, val_col}
-        os.makedirs(view_dir, exist_ok=True)
-        self._touched = None
-        self._v_pre = None
-        self._buckets = None
 
-    # -- protocol plumbing (MaintainedMinMaxView shape) -----------------
-    def _meta(self) -> dict:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)
-        return {"version": 0, "store_version": None}
-
-    def read_view(self) -> DataFrame:
+    def _for_readers(self, raw: DataFrame) -> DataFrame:
         """(group, n_rows, top array<struct<v, id>>) — top truncated to k
         for readers (the slack tail is maintenance state, not output)."""
-        import os
-
-        m = self._meta()
-        raw = (
-            self._full_agg(self.store.read(self.spec))
-            if m["version"] == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
-        )
         return raw.select(
             self.group_col,
             "n_rows",
@@ -1474,40 +1282,9 @@ class MaintainedTopKView:
             build,
         )
 
-    def check_schema(self, catalog) -> None:
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        need = self._need
-        missing = sorted(need - set(cur.column_names))
-        if missing:
-            raise RuntimeError(
-                f"maintained top-k view over {self.spec.target_name} lost "
-                f"column(s) {missing} to DDL — drop and rebuild the view"
-            )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
-        # lazy pins (see MaintainedAggView.before_apply)
-        self._touched = touched_keys(parsed_events, self.spec)
-        self._v_pre = self.store.current_version(self.spec.target_name)
-        self._buckets = _table_buckets(buckets, self.spec)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        m, patched, v_now = self._patch_frame()
-        _commit_view_version(
-            self, patched, {"version": m["version"] + 1, "store_version": v_now}
-        )
-        self._touched = self._v_pre = self._buckets = None
-
-    # -- the patch ------------------------------------------------------
     def _patch_frame(self):
-        import os
-
         m = self._meta()
         old, old_t, new_t = _delta_sources(self, m)
-        v_now = self.store.current_version(self.spec.target_name)
 
         g = self.group_col
         prep = self._prep()  # batch-invariant Column trees (see _prep)
@@ -1519,11 +1296,7 @@ class MaintainedTopKView:
         )
         per_group = deltas.groupBy(g).agg(*prep["per_group_aggs"])
 
-        base = (
-            self._full_agg(old)
-            if m["version"] == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
-        )
+        base = self._base(m, old)
         # each touched group with its stored list: a shuffle join building
         # on the batch-sized side that shuffles the whole view — see
         # MaintainedMinMaxView._patch_frame
@@ -1546,47 +1319,20 @@ class MaintainedTopKView:
         # it. Rescan when any of the first min(k, n') positions is unsafe
         # or the list runs short.
         # lazily checkpointed: the gate's collect is the job that computes
-        # it, the write reads it back (see MaintainedMinMaxView._patch_frame)
+        # it, the write reads it back (see MaintainedMinMaxView._patch_frame);
+        # on the common batch (buffer never burned below k) the gate skips
+        # scheduling the whole recompute subtree (full-store scan + window +
+        # collect_list)
         s = (
             s.withColumn("__merged", prep["merged"])
             .withColumn("__n_new", prep["n_new"])
             .withColumn("__rescan", prep["needs_rescan"])
             .localCheckpoint(eager=False)
         )
-
-        patched_rows = s.filter(
-            (F.col("__n_new") > 0) & ~F.col("__rescan")
-        ).select(*prep["patched_sel"])
-        # the gate (see _patch_gate): on the common batch (buffer never
-        # burned below k) it skips scheduling the whole recompute subtree
-        # (full-store scan + window + collect_list), and below the literal
-        # cap the write plan prunes by IN-list instead of two broadcast
-        # exchanges (each a scheduler job per batch).
-        tg_vals, rescan_vals = _patch_gate(s, g)
-        self.last_recompute_groups = len(rescan_vals)
-        lit = len(tg_vals) <= _group_literal_cap()
-        kept = (
-            (base.filter(_not_in_groups(F.col(g), tg_vals)) if tg_vals else base)
-            if lit
-            else base.join(F.broadcast(s.select(g)), g, "left_anti")
-        )
-        patched = kept.unionByName(patched_rows)
-        if rescan_vals:
-            state = self.store.read(self.spec)
-            state = (
-                state.filter(F.col(g).isin(*rescan_vals))
-                if lit
-                else state.join(
-                    F.broadcast(s.filter(F.col("__rescan")).select(g)),
-                    g,
-                    "left_semi",
-                )
-            )
-            patched = patched.unionByName(self._full_agg(state))
-        return m, patched, v_now
+        return self._next(m), _gated_patch(self, s, base, prep["patched_sel"])
 
 
-class MaintainedDistinctCountView:
+class MaintainedDistinctCountView(MaintainedView):
     """Keep a grouped ``(group, n_rows, n_distinct)`` view — COUNT
     DISTINCT, the textbook NON-DISTRIBUTIVE aggregate — materialized
     incrementally over a CDC-fed table (the consolidation store exists so
@@ -1625,6 +1371,9 @@ class MaintainedDistinctCountView:
     (``gc_support`` defaults to keep_last=2 for exactly that window).
     """
 
+    _kind = "distinct-count view"
+    _meta0 = {"version": 0, "store_version": None, "support_version": None}
+
     def __init__(
         self,
         spark,
@@ -1636,24 +1385,14 @@ class MaintainedDistinctCountView:
         val_pg_type: str = "integer",
         view_dir: str,
         support_buckets: int = 16,
-        debug_counters: bool = False,
     ):
-        import os
-
         from connemara_spark.catalog import ColumnSpec, TableSpec
         from connemara_spark.stores import BucketStore
 
-        self.spark = spark
-        self.store = store
-        self.spec = spec
+        super().__init__(spark, store, view_dir, (spec, {group_col, val_col}))
         self.group_col = group_col
         self.val_col = val_col
-        self.view_dir = view_dir
-        self.debug_counters = debug_counters
         self.last_touched_buckets: int | None = None
-        # pinned projection contract (see MaintainedAggView.__init__)
-        self._need = frozenset(spec.pk_cols) | {group_col, val_col}
-        os.makedirs(view_dir, exist_ok=True)
         gcol = next(c for c in spec.columns if c.name == group_col)
         # the support multiset: pk == (group, value) so the bucket key IS
         # the merge key — write_partial's stray-row check holds by
@@ -1672,28 +1411,9 @@ class MaintainedDistinctCountView:
         self.sstore = BucketStore(
             spark, os.path.join(view_dir, "support"), n_buckets=support_buckets
         )
-        self._touched = None
-        self._v_pre = None
-        self._buckets = None
-
-    # -- protocol plumbing (MaintainedAggView shape) --------------------
-    def _meta(self) -> dict:
-        import json
-        import os
-
-        ptr = os.path.join(self.view_dir, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)
-        return {"version": 0, "store_version": None, "support_version": None}
-
-    def read_view(self) -> DataFrame:
-        import os
-
-        m = self._meta()
-        if m["version"] == 0:
-            return self._full_agg(self.store.read(self.spec))
-        return _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
+        # the patch's new support state and its touched support buckets,
+        # written by _before_commit
+        self._support = None
 
     def _val(self):
         return F.col(self.val_col).cast(self.sspec.columns[1].spark_type)
@@ -1785,48 +1505,24 @@ class MaintainedDistinctCountView:
         sig = str(self.sspec.columns[1].spark_type)
         return _prepared(("dc_patch", g, self.val_col, sig), build)
 
-    def check_schema(self, catalog) -> None:
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        need = self._need
-        missing = sorted(need - set(cur.column_names))
-        if missing:
-            raise RuntimeError(
-                f"maintained distinct-count view over {self.spec.target_name} "
-                f"lost column(s) {missing} to DDL — drop and rebuild the view"
-            )
-
-    def gc_view(self, *, keep_last: int = 2) -> list[int]:
-        """Retire old view version directories (see gc_view_versions)."""
-        return gc_view_versions(self.view_dir, keep_last=keep_last)
-
-    def before_apply(self, parsed_events: DataFrame, buckets: dict | None = None) -> None:
-        # lazy pins (see MaintainedAggView.before_apply)
-        self._touched = touched_keys(parsed_events, self.spec)
-        self._v_pre = self.store.current_version(self.spec.target_name)
-        self._buckets = _table_buckets(buckets, self.spec)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        m, patched, v_now, new_support, bks = self._patch_frame()
-        # support first, summary second, pointer last: every crash window
-        # replays against the versions the pointer still records
+    def _before_commit(self, nxt: dict) -> None:
+        """Support first, summary second, pointer last (``after_apply``
+        writes the summary and advances the pointer after this): every
+        crash window replays against the versions the pointer still
+        records."""
+        new_support, bks = self._support
+        self._support = None
         if bks is None:
             self.sstore.write(self.sspec, new_support)
-            sv = self.sstore.current_version(self.sspec.target_name)
-        elif not bks:
+        elif bks:
+            self.sstore.write_partial(self.sspec, new_support, buckets=bks)
+        else:
             # no net support change (bks == []): write_partial would commit
             # a content-identical manifest, churning support versions and
-            # forcing more frequent gc_support for nothing — carry the
-            # pointer's existing support version forward instead
-            sv = m["support_version"]
-        else:
-            self.sstore.write_partial(self.sspec, new_support, buckets=bks)
-            sv = self.sstore.current_version(self.sspec.target_name)
-        _commit_view_version(
-            self,
-            patched,
-            {"version": m["version"] + 1, "store_version": v_now, "support_version": sv},
-        )
-        self._touched = self._v_pre = self._buckets = None
+            # forcing more frequent gc_support for nothing — ``nxt`` carries
+            # the pointer's existing support version forward instead
+            return
+        nxt["support_version"] = self.sstore.current_version(self.sspec.target_name)
 
     def gc_support(self, *, keep_last: int = 2) -> list[int]:
         """Retire old support versions (reference-counted); keep_last >= 2
@@ -1834,13 +1530,9 @@ class MaintainedDistinctCountView:
         window."""
         return self.sstore.gc_versions(self.sspec, keep_last=keep_last)
 
-    # -- the patch ------------------------------------------------------
     def _patch_frame(self):
-        import os
-
         m = self._meta()
         old, old_t, new_t = _delta_sources(self, m)
-        v_now = self.store.current_version(self.spec.target_name)
 
         g = self.group_col
         prep = self._prep()  # batch-invariant Column trees (see _prep)
@@ -1875,8 +1567,7 @@ class MaintainedDistinctCountView:
             base_support = self.sstore.read_version(
                 self.sspec, m["support_version"], buckets=bks
             )
-        if self.debug_counters:
-            self.last_touched_buckets = None if bks is None else len(bks)
+        self.last_touched_buckets = None if bks is None else len(bks)
 
         b = base_support.alias("b")
         n = net_pairs.alias("n")
@@ -1904,16 +1595,12 @@ class MaintainedDistinctCountView:
         y = dd.alias("y")
         gd = x.join(y, prep["gd_cond"], "full_outer").select(*prep["gd_sel"])
 
-        base = (
-            self._full_agg(old)
-            if m["version"] == 0
-            else _vread(self, os.path.join(self.view_dir, f"v{m['version']:06d}"))
-        )
-        bb = base.alias("b")
+        bb = self._base(m, old).alias("b")
         nn = gd.alias("n")
         patched = (
             bb.join(nn, prep["patched_cond"], "full_outer")
             .select(*prep["patched_sel"])
             .filter(F.col("n_rows") > 0)
         )
-        return m, patched, v_now, new_support, bks
+        self._support = (new_support, bks)
+        return self._next(m), patched

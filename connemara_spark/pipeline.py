@@ -46,6 +46,7 @@ from connemara_spark.ddl.executor import DDLExecutor
 from connemara_spark.ddl.rewriter import DDLAction, classify_ddl
 from connemara_spark.events import parse_events, slot_restriction, split_ddl_dml, standard_filters
 from connemara_spark.operators.apply import apply_changes, apply_changes_bounded
+from connemara_spark.stores import VersionedDir
 
 
 def parse_command_tags(tags: str | None) -> list[str]:
@@ -189,32 +190,16 @@ class ParquetStore:
         os.makedirs(root, exist_ok=True)
         self._versions: dict[str, int] = {}
 
+    def _vd(self, spec_name: str) -> VersionedDir:
+        return VersionedDir(f"{self.root}/{spec_name}")
+
     def _dir(self, spec_name: str, version: int) -> str:
-        return f"{self.root}/{spec_name}/v{version:06d}"
+        return self._vd(spec_name).path(version)
 
     def current_version(self, spec_name: str) -> int | None:
-        import json
-        import os
-
-        ptr = f"{self.root}/{spec_name}/CURRENT"
         if spec_name in self._versions:
             return self._versions[spec_name]
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)["version"]
-        return None
-
-    def _advance(self, spec_name: str, version: int) -> None:
-        import json
-        import os
-
-        ptr = f"{self.root}/{spec_name}/CURRENT"
-        os.makedirs(os.path.dirname(ptr), exist_ok=True)
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version}, fh)
-        os.replace(tmp, ptr)
-        self._versions[spec_name] = version
+        return self._vd(spec_name).current()
 
     def read(self, spec: TableSpec) -> DataFrame:
         v = self.current_version(spec.target_name)
@@ -287,51 +272,20 @@ class ParquetStore:
         consumers finish — or pass ``min_age_seconds`` so only directories
         untouched for that long are eligible, which bounds the race to
         pins older than the window."""
-        import os
-        import shutil
-        import time
-
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1 (CURRENT must survive)")
-        cur = self.current_version(spec.target_name)
-        if cur is None:
-            return []
-        keep = set(self.versions(spec)[-keep_last:]) | {cur}
-        removed = []
-        tdir = os.path.join(self.root, spec.target_name)
-        import re
-
-        now = time.time()
-        for e in os.listdir(tdir):
-            m = re.fullmatch(r"v(\d+)", e)
-            if m and (v := int(m.group(1))) <= cur and v not in keep:
-                d = os.path.join(tdir, e)
-                if min_age_seconds > 0 and now - os.path.getmtime(d) < min_age_seconds:
-                    continue
-                shutil.rmtree(d)
-                removed.append(v)
-        return sorted(removed)
+        vd = self._vd(spec.target_name)
+        return vd.gc(vd.retained(keep_last), min_age_seconds=min_age_seconds)
 
     def versions(self, spec: TableSpec) -> list[int]:
         """All retained COMMITTED versions, ascending (orphaned
         directories from crashed writes are excluded)."""
-        import os
-        import re
-
-        tdir = os.path.join(self.root, spec.target_name)
-        if not os.path.isdir(tdir):
-            return []
-        cur = self.current_version(spec.target_name) or 0
-        return sorted(
-            v
-            for e in os.listdir(tdir)
-            if (m := re.fullmatch(r"v(\d+)", e)) and (v := int(m.group(1))) <= cur
-        )
+        return self._vd(spec.target_name).versions()
 
     def write(self, spec: TableSpec, df: DataFrame) -> None:
-        v = (self.current_version(spec.target_name) or 0) + 1
-        df.write.mode("overwrite").parquet(self._dir(spec.target_name, v))
-        self._advance(spec.target_name, v)
+        name = spec.target_name
+        v = (self.current_version(name) or 0) + 1
+        df.write.mode("overwrite").parquet(self._dir(name, v))
+        self._vd(name).advance({"version": v})
+        self._versions[name] = v
 
     def create_table(self, spec: TableSpec) -> None:
         self.write(spec, self.spark.createDataFrame([], spec.spark_schema()))

@@ -111,7 +111,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         frames["cdc_maintained_agg_view/steady_fold"] = fold
         view.before_apply(parsed2v)
         rep.apply_batch(b2, events=parsed2v)
-        _, patched, _ = view._patch_frame()
+        _, patched = view._patch_frame()
         frames["cdc_maintained_agg_view/view_patch"] = patched
 
         # -- min/max view: the non-self-maintainable patch ----------------
@@ -134,7 +134,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         parsed2m = rep.parse_batch(b2)
         mm.before_apply(parsed2m)
         rep.apply_batch(b2, events=parsed2m)
-        _, patched_mm, _ = mm._patch_frame()
+        _, patched_mm = mm._patch_frame()
         frames["cdc_maintained_minmax_view/view_patch"] = patched_mm
 
         # -- top-k view: slack-buffer patch over the same store ------------
@@ -157,7 +157,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         parsed2t = rep.parse_batch(b2)
         tk.before_apply(parsed2t)
         rep.apply_batch(b2, events=parsed2t)
-        _, patched_tk, _ = tk._patch_frame()
+        _, patched_tk = tk._patch_frame()
         frames["cdc_maintained_topk_view/view_patch"] = patched_tk
 
         # -- distinct-count view: the support-multiset summary patch -------
@@ -181,7 +181,7 @@ def pipeline_batch_frames(spark: SparkSession, sf_dir: str):
         parsed2d = rep.parse_batch(b2)
         dc.before_apply(parsed2d)
         rep.apply_batch(b2, events=parsed2d)
-        _, patched_dc, _, _support_dc, _bks_dc = dc._patch_frame()
+        _, patched_dc = dc._patch_frame()
         frames["cdc_maintained_distinct_view/view_patch"] = patched_dc
 
         # -- two-source join view: the cross-source replacement patch ------

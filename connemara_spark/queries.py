@@ -2095,10 +2095,9 @@ def cdc_two_source_ddl_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "the rename must trip check_schema's staleness contract"
             )
         # the final batch patched the REBUILT view incrementally (version 1)
-        if view._current() != 1:
+        if (v := view._meta()["version"]) != 1:
             raise RuntimeError(
-                f"rebuilt view should have exactly one patched version, got "
-                f"{view._current()}"
+                f"rebuilt view should have exactly one patched version, got {v}"
             )
         return view.read_view().localCheckpoint()
     finally:
@@ -3272,14 +3271,16 @@ def _drain_to_table(
     _stream_state_width); the session setting is restored after the drain
     (the width is read once at query start and recorded in the checkpoint,
     but restoring only after termination keeps the window race-free)."""
-    import os as _os
     import uuid as _uuid
 
+    from connemara_spark.session import scoped_conf
+
     name = f"drain_{_uuid.uuid4().hex[:10]}"
-    before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if state_width is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_width))
-    try:
+    # the scope closes only after termination: the stream thread reads the
+    # conf asynchronously at first-batch planning, so restoring right after
+    # start() would race it
+    width = {} if state_width is None else {"spark.sql.shuffle.partitions": str(state_width)}
+    with scoped_conf(spark, width):
         q = (
             stream_out.writeStream.format("memory")
             .queryName(name)
@@ -3298,12 +3299,6 @@ def _drain_to_table(
                 f"streaming drain {name} did not finish within 300s — "
                 "refusing to read a partially-populated memory sink"
             )
-    finally:
-        # restore only after termination: the stream thread reads the conf
-        # asynchronously at first-batch planning, so restoring right after
-        # start() would race it
-        if state_width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
     if q.exception() is not None:
         raise RuntimeError(str(q.exception()))
     res = spark.table(name).localCheckpoint()

@@ -9,6 +9,7 @@ real cluster; locally we size shuffle partitions to the core count.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -56,3 +57,24 @@ def get_spark(app_name: str = "connemara-spark", *, shuffle_partitions: int | No
     # arithmetic by the offset change. Pin it at runtime too.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session config ``conf`` for the block only. On exit — normal
+    or raising — each key gets back the value it had before, and a key
+    that was never set is UNSET again (re-setting it to the value a bare
+    ``get`` reports would pin Spark's built-in default explicitly, a
+    silent leak into every later query of the session)."""
+    # get(key, None) is None exactly when the key was never set
+    before = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in before.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)

@@ -51,6 +51,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StringType, StructField, StructType
 
 from connemara_spark.events import BRONZE_SCHEMA
+from connemara_spark.stores import atomic_write_json
 
 _BRONZE_FIELDS = [f.name for f in BRONZE_SCHEMA.fields]
 
@@ -224,12 +225,8 @@ class WalSpoolStreamReader(DataSourceStreamReader):
             return None
 
     def _write_floor(self, n: int) -> bool:
-        tmp = self.progress_path + ".tmp"
         try:
-            os.makedirs(self.spool_dir, exist_ok=True)
-            with open(tmp, "w") as fh:
-                json.dump({"planned_segments": n}, fh)
-            os.replace(tmp, self.progress_path)
+            atomic_write_json(self.progress_path, {"planned_segments": n})
             return True
         except OSError:
             return False  # planning floor is an optimization; the checkpoint rules
@@ -305,11 +302,8 @@ class WalSpoolStreamReader(DataSourceStreamReader):
         except (OSError, json.JSONDecodeError):
             state = {}
         state["committed_segments"] = end["segments"]
-        tmp = self.progress_path + ".tmp"
         try:
-            with open(tmp, "w") as fh:
-                json.dump(state, fh)
-            os.replace(tmp, self.progress_path)
+            atomic_write_json(self.progress_path, state)
         except OSError:
             pass
 

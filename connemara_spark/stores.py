@@ -30,8 +30,9 @@ instead of silently returning partial data. Readers resolve the
 manifest to a path list
 (pruned to specific buckets when the caller knows its keys); writers
 write new bucket dirs + MANIFEST into the next version dir and then
-swap CURRENT — the same write-then-advance commit as ParquetStore, so
-a crashed write leaves no committed trace.
+swap CURRENT — the same write-then-advance commit (``VersionedDir``,
+below) as ParquetStore and the maintained views, so a crashed write
+leaves no committed trace.
 
 Scale properties:
 - apply batch IO: read touched buckets + write touched buckets —
@@ -50,7 +51,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +61,101 @@ from pyspark.sql import functions as F
 from connemara_spark.catalog import TableSpec
 
 _MANIFEST = "MANIFEST.json"
+_CURRENT = "CURRENT"
+
+
+def atomic_write_json(path: str, obj) -> None:
+    """Publish ``obj`` as the JSON file ``path`` atomically: write a
+    sibling ``.tmp`` file, then ``os.replace`` it over ``path``. A reader
+    sees the old content or the new, never a partial file — the one
+    commit primitive of every pointer, manifest and index META here."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+class VersionedDir:
+    """The on-disk versioning protocol shared by every versioned artifact
+    (``ParquetStore`` and ``BucketStore`` tables, maintained views)::
+
+        root/
+          CURRENT      {"version": v, ...}   (atomic swap)
+          v000001/ ... v00000v/
+
+    A version is written into ``path(v)`` first and becomes visible only
+    when ``advance`` swaps CURRENT to name it (write-then-advance): a
+    crash in between leaves CURRENT on the previous committed version,
+    and the retry rewrites the same slot. Directories above CURRENT are
+    such uncommitted leftovers: ``versions`` skips them and ``gc`` never
+    removes them."""
+
+    def __init__(self, root: str):
+        self.root = root
+
+    def path(self, v: int) -> str:
+        # 6 digits grow to 7+ past version 999,999 — dirs() parses any width
+        return os.path.join(self.root, f"v{v:06d}")
+
+    def meta(self, default: dict | None = None) -> dict | None:
+        """The CURRENT pointer's JSON, or ``default`` before the first
+        commit."""
+        try:
+            with open(os.path.join(self.root, _CURRENT)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return default
+
+    def current(self) -> int | None:
+        m = self.meta()
+        return None if m is None else m["version"]
+
+    def advance(self, meta: dict) -> None:
+        """Commit: swap CURRENT to ``meta`` (which names the version)."""
+        atomic_write_json(os.path.join(self.root, _CURRENT), meta)
+
+    def dirs(self) -> list[int]:
+        """Every version directory on disk, committed or not, ascending."""
+        if not os.path.isdir(self.root):
+            return []
+        return sorted(
+            int(m.group(1))
+            for e in os.listdir(self.root)
+            if (m := re.fullmatch(r"v(\d+)", e))
+        )
+
+    def versions(self) -> list[int]:
+        """The version directories at or below CURRENT, ascending."""
+        cur = self.current()
+        return [] if cur is None else [v for v in self.dirs() if v <= cur]
+
+    def retained(self, keep_last: int, versions: list[int] | None = None) -> set[int]:
+        """CURRENT plus the newest ``keep_last`` of ``versions`` (default:
+        ``versions()``) — what retention GC keeps."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1 (CURRENT must survive)")
+        cur = self.current()
+        if cur is None:
+            return set()
+        vs = self.versions() if versions is None else versions
+        return set(vs[-keep_last:]) | {cur}
+
+    def gc(self, referenced: set[int], *, min_age_seconds: float = 0.0) -> list[int]:
+        """Remove every version directory at or below CURRENT that is not
+        in ``referenced`` (and, with ``min_age_seconds``, was modified at
+        least that long ago). Returns the removed versions, ascending."""
+        now = time.time()
+        removed = []
+        for v in self.versions():
+            d = self.path(v)
+            if v in referenced or (
+                min_age_seconds > 0 and now - os.path.getmtime(d) < min_age_seconds
+            ):
+                continue
+            shutil.rmtree(d, ignore_errors=True)
+            removed.append(v)
+        return removed
 
 
 class BucketStore:
@@ -73,29 +171,21 @@ class BucketStore:
     def _tdir(self, spec_name: str) -> str:
         return os.path.join(self.root, spec_name)
 
+    def _vd(self, spec_name: str) -> VersionedDir:
+        return VersionedDir(self._tdir(spec_name))
+
     def _vdir(self, spec_name: str, v: int) -> str:
-        return os.path.join(self._tdir(spec_name), f"v{v:06d}")
+        return self._vd(spec_name).path(v)
 
     def _bdir(self, spec_name: str, v: int, bucket: int) -> str:
         return os.path.join(self._vdir(spec_name, v), f"b{bucket:05d}")
 
     def current_version(self, spec_name: str) -> int | None:
-        ptr = os.path.join(self._tdir(spec_name), "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
-                return json.load(fh)["version"]
-        return None
+        return self._vd(spec_name).current()
 
     def _manifest(self, spec_name: str, v: int) -> dict:
         with open(os.path.join(self._vdir(spec_name, v), _MANIFEST)) as fh:
             return json.load(fh)
-
-    def _advance(self, spec_name: str, v: int) -> None:
-        ptr = os.path.join(self._tdir(spec_name), "CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": v}, fh)
-        os.replace(tmp, ptr)
 
     def bucket_count(self, spec_name: str) -> int:
         """The AUTHORITATIVE bucket count for a table: the current
@@ -108,8 +198,11 @@ class BucketStore:
             return self.n_buckets
         return self._manifest(spec_name, cur)["n_buckets"]
 
-    def bucket_expr(self, spec: TableSpec, n_buckets: int | None = None) -> F.Column:
-        pk = spec.pk_cols or [c.name for c in spec.columns]
+    def bucket_expr(
+        self, spec: TableSpec, n_buckets: int | None = None, cols: list[str] | None = None
+    ) -> F.Column:
+        cols = [c.name for c in spec.columns] if cols is None else cols
+        pk = [c for c in spec.pk_cols if c in cols] or cols
         n = n_buckets if n_buckets is not None else self.bucket_count(spec.target_name)
         return F.pmod(F.xxhash64(*[F.col(c) for c in pk]), F.lit(n)).cast("int")
 
@@ -227,9 +320,11 @@ class BucketStore:
         self._full_write(spec, self.read(spec), new_n_buckets)
         return self.current_version(spec.target_name)
 
-    def _full_write(self, spec: TableSpec, df: DataFrame, n: int) -> None:
+    def _full_write(
+        self, spec: TableSpec, df: DataFrame, n: int, cols: list[str] | None = None
+    ) -> None:
         v = (self.current_version(spec.target_name) or 0) + 1
-        written = self._write_buckets(spec, df, v, n)
+        written = self._write_buckets(spec, df, v, n, cols)
         manifest = {
             "n_buckets": n,
             "buckets": {
@@ -295,15 +390,20 @@ class BucketStore:
                 total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
         return total
 
-    def _write_buckets(self, spec: TableSpec, df: DataFrame, v: int, n: int) -> set[int]:
+    def _write_buckets(
+        self, spec: TableSpec, df: DataFrame, v: int, n: int, cols: list[str] | None = None
+    ) -> set[int]:
         # partitionBy writes each bucket into its own subdirectory in ONE
         # job; the helper column lives only in directory names (renamed to
         # bXXXXX below so readers never partition-infer it back). ``n`` is
         # threaded explicitly: a rebucket writes under the NEW modulus
-        # while the current manifest still carries the old one.
+        # while the current manifest still carries the old one. ``cols``
+        # overrides the spec's projection (a schema-change write, whose
+        # spec may not reflect the evolution yet).
         vdir = self._vdir(spec.target_name, v)
-        staged = df.select(*[c.name for c in spec.columns]).withColumn(
-            "__bucket", self.bucket_expr(spec, n)
+        cols = [c.name for c in spec.columns] if cols is None else cols
+        staged = df.select(*cols).withColumn(
+            "__bucket", self.bucket_expr(spec, n, cols)
         )
         # repartition on the partition key: without it every task writes a
         # file into every bucket directory it sees (tasks x buckets tiny
@@ -329,13 +429,9 @@ class BucketStore:
         return written
 
     def _commit(self, spec_name: str, v: int, manifest: dict) -> None:
-        vdir = self._vdir(spec_name, v)
-        os.makedirs(vdir, exist_ok=True)
-        tmp = os.path.join(vdir, _MANIFEST + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(vdir, _MANIFEST))
-        self._advance(spec_name, v)
+        vd = self._vd(spec_name)
+        atomic_write_json(os.path.join(vd.path(v), _MANIFEST), manifest)
+        vd.advance({"version": v})
 
     # -- lifecycle (store protocol parity with ParquetStore) ---------------
     def create_table(self, spec: TableSpec) -> None:
@@ -377,30 +473,9 @@ class BucketStore:
     def _evolved_full_write(self, spec: TableSpec, df: DataFrame, **_why) -> None:
         # schema-change writes bypass spec.columns projection (the catalog
         # spec may not reflect the evolution yet at call time)
-        v = (self.current_version(spec.target_name) or 0) + 1
-        n = self.bucket_count(spec.target_name)
-        vdir = self._vdir(spec.target_name, v)
-        pk = [c for c in spec.pk_cols if c in df.columns] or list(df.columns)
-        bucket = F.pmod(F.xxhash64(*[F.col(c) for c in pk]), F.lit(n)).cast("int")
-        staged = df.withColumn("__bucket", bucket)
-        # width pinned to the modulus — see _write_buckets (AQE folds a
-        # count-less keyed repartition into one serial file-writing task)
-        staged.repartition(n, "__bucket").write.mode("overwrite").partitionBy(
-            "__bucket"
-        ).parquet(vdir)
-        written: set[int] = set()
-        for e in os.listdir(vdir):
-            if e.startswith("__bucket="):
-                b = int(e.split("=", 1)[1])
-                os.replace(os.path.join(vdir, e), self._bdir(spec.target_name, v, b))
-                written.add(b)
-        manifest = {
-            "n_buckets": n,
-            "buckets": {
-                str(b): (v if b in written else None) for b in range(n)
-            },
-        }
-        self._commit(spec.target_name, v, manifest)
+        self._full_write(
+            spec, df, self.bucket_count(spec.target_name), list(df.columns)
+        )
 
     def chain_length(self, spec: TableSpec) -> int:
         """Number of PHYSICAL version directories alive for the table —
@@ -408,12 +483,7 @@ class BucketStore:
         partial rewrites grow and ``compact`` resets: every live version
         adds one directory per hosted bucket to the read fan-in ceiling,
         so maintenance policies gate on it."""
-        tdir = self._tdir(spec.target_name)
-        if not os.path.isdir(tdir):
-            return 0
-        return sum(
-            1 for e in os.listdir(tdir) if e.startswith("v") and e[1:].isdigit()
-        )
+        return len(self._vd(spec.target_name).dirs())
 
     def compact(self, spec: TableSpec) -> int:
         """Rewrite the table as one self-contained version (every bucket
@@ -427,19 +497,12 @@ class BucketStore:
 
     # -- retention ---------------------------------------------------------
     def versions(self, spec: TableSpec) -> list[int]:
-        cur = self.current_version(spec.target_name)
-        if cur is None:
-            return []
-        out = []
-        tdir = self._tdir(spec.target_name)
-        for e in sorted(os.listdir(tdir)):
-            if e.startswith("v") and e[1:].isdigit():
-                v = int(e[1:])
-                if v <= cur and os.path.exists(
-                    os.path.join(tdir, e, _MANIFEST)
-                ):
-                    out.append(v)
-        return out
+        """Readable snapshots: committed versions that still carry a
+        manifest (GC demotes host-only versions by deleting theirs)."""
+        vd = self._vd(spec.target_name)
+        return [
+            v for v in vd.versions() if os.path.exists(os.path.join(vd.path(v), _MANIFEST))
+        ]
 
     def gc_versions(self, spec: TableSpec, *, keep_last: int = 1) -> list[int]:
         """Reference-counted retention GC: drop version directories that
@@ -456,14 +519,9 @@ class BucketStore:
         version would still present itself as a readable snapshot while
         the versions ITS manifest references may already be gone —
         ``read_version`` would return silently partial data."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1 (CURRENT must survive)")
         name = spec.target_name
-        cur = self.current_version(name)
-        if cur is None:
-            return []
-        vs = self.versions(spec)
-        retained = set(vs[-keep_last:]) | {cur}
+        vd = self._vd(name)
+        retained = vd.retained(keep_last, self.versions(spec))
         referenced = set(retained)
         for v in retained:
             referenced.update(
@@ -471,27 +529,18 @@ class BucketStore:
                 for h in self._manifest(name, v)["buckets"].values()
                 if h is not None
             )
-        removed = []
-        tdir = self._tdir(name)
-        # sweep EVERY version directory, not just manifest-bearing ones:
-        # versions demoted to host-only in an earlier GC pass must still be
-        # physically removed once their last bucket reference is rewritten
-        # away, or they leak forever
-        all_vs = sorted(
-            int(e[1:])
-            for e in os.listdir(tdir)
-            if e.startswith("v") and e[1:].isdigit() and int(e[1:]) <= cur
-        )
-        for v in all_vs:
-            if v not in referenced:
-                shutil.rmtree(self._vdir(name, v), ignore_errors=True)
-                removed.append(v)
-            elif v not in retained:
+        # the sweep covers EVERY version directory, not just manifest-bearing
+        # ones: versions demoted to host-only in an earlier GC pass must
+        # still be physically removed once their last bucket reference is
+        # rewritten away, or they leak forever
+        removed = vd.gc(referenced)
+        for v in vd.versions():
+            if v not in retained:
                 # alive purely as a bucket host: no longer a readable
                 # snapshot — drop its manifest so read_version refuses it
                 # instead of resolving references that may be GC'd
                 try:
-                    os.remove(os.path.join(self._vdir(name, v), _MANIFEST))
+                    os.remove(os.path.join(vd.path(v), _MANIFEST))
                 except FileNotFoundError:
                     pass
-        return sorted(removed)
+        return removed

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from connemara_spark.catalog import EngineCatalog
 from connemara_spark.events import BRONZE_SCHEMA
 from connemara_spark.pipeline import Replayer
+from connemara_spark.stores import atomic_write_json
 
 
 class LsnWatermark:
@@ -62,11 +63,7 @@ class LsnWatermark:
         for (db, slot), lsn in updates.items():
             k = self._key(db, slot)
             self._state[k] = max(self._state.get(k, -1), lsn)
-        tmp = self.path + ".tmp"
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump(self._state, fh)
-        os.replace(tmp, self.path)
+        atomic_write_json(self.path, self._state)
 
     # Above this many origins the per-origin predicate chain becomes a
     # very wide boolean tree (plan bloat + codegen pressure at hundreds of

@@ -23,13 +23,14 @@ Two operators:
 
 from __future__ import annotations
 
-import contextlib
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from connemara_spark.session import scoped_conf
 
 # At crawl-scale unique-key counts (500M+ content hashes) the default
 # executor-heap state store is the first thing to fall over; RocksDB keeps
@@ -42,28 +43,13 @@ ROCKSDB_STATE_PROVIDER = (
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-@contextlib.contextmanager
 def state_store_provider(spark, provider: str | None):
     """Pin the state-store provider for streaming queries STARTED inside
     the block (Spark captures the conf at query start; already-running
     queries keep theirs). ``None`` is a no-op. The previous session value
-    is restored on exit either way — the pin never leaks into later
-    queries on a shared session."""
-    if provider is None:
-        yield
-        return
-    # get(key, None) returns None when the key was never explicitly set
-    # (a bare get would hand back Spark's built-in default and the restore
-    # below would then PIN that default explicitly — a silent conf leak)
-    old = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, provider)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, old)
+    is restored on exit either way (``scoped_conf``) — the pin never
+    leaks into later queries on a shared session."""
+    return scoped_conf(spark, {} if provider is None else {_PROVIDER_CONF: provider})
 
 
 SESSION_SCHEMA = "user_id bigint, session_start timestamp, session_end timestamp, n_events bigint, total_value double"

@@ -153,7 +153,7 @@ def test_streaming_maintained_join_view_over_wal_spool(spark, tmp_path):
         "seg-003")
     sr.run_until_drained()
     check()
-    assert view._current() == 3  # one view version per batch, no recomputes
+    assert view._meta()["version"] == 3  # one view version per batch, no recomputes
 
 
 def test_maintained_view_retry_after_post_apply_crash(spark, tmp_path):
@@ -219,7 +219,7 @@ def test_maintained_view_retry_after_post_apply_crash(spark, tmp_path):
     view.before_apply(parsed)
     rep.apply_batch(b, events=parsed)
     # -- crash here: after_apply never runs; view still at version 1 --
-    assert view._current() == 1
+    assert view._meta()["version"] == 1
 
     # restart: the whole batch replays (watermark never advanced)
     run_batch(crash)
@@ -388,7 +388,7 @@ def test_maintained_two_table_join_view_streaming(spark, tmp_path):
         write_segment(str(tmp_path / "spool"), [dict(e) for e in events], name)
 
     def check():
-        want = sorted(map(tuple, view._join(
+        want = sorted(map(tuple, view._full_agg(
             store.read(spec_c), store.read(spec_o)).collect()))
         got = sorted(map(tuple, view.read_view().collect()))
         assert got == want, (got, want)
@@ -516,7 +516,7 @@ def test_maintained_minmax_view_recompute_only_when_extremum_exhausted(spark, tm
     cat, spec, store = _agg_spec_setup(spark, tmp_path)
     view = MaintainedMinMaxView(
         spark, store, spec, group_col="grp", val_col="amount",
-        view_dir=str(tmp_path / "mmview"), debug_counters=True,
+        view_dir=str(tmp_path / "mmview"),
     )
     sr = StreamingReplayer(
         spark, cat, store,
@@ -601,7 +601,7 @@ def test_maintained_topk_view_slack_buffer_and_rescan(spark, tmp_path):
     cat, spec, store = _agg_spec_setup(spark, tmp_path)
     view = MaintainedTopKView(
         spark, store, spec, group_col="grp", val_col="amount",
-        k=2, slack=1, view_dir=str(tmp_path / "topk"), debug_counters=True,
+        k=2, slack=1, view_dir=str(tmp_path / "topk"),
     )
     sr = StreamingReplayer(
         spark, cat, store,
@@ -693,11 +693,11 @@ def test_minmax_and_topk_views_bucket_store_prune_path(spark, tmp_path):
     store = BucketStore(spark, str(tmp_path / "silver"), n_buckets=8)
     mm = MaintainedMinMaxView(
         spark, store, spec, group_col="grp", val_col="amount",
-        view_dir=str(tmp_path / "mm"), debug_counters=True,
+        view_dir=str(tmp_path / "mm"),
     )
     tk = MaintainedTopKView(
         spark, store, spec, group_col="grp", val_col="amount",
-        k=2, slack=1, view_dir=str(tmp_path / "tk"), debug_counters=True,
+        k=2, slack=1, view_dir=str(tmp_path / "tk"),
     )
     sr = StreamingReplayer(
         spark, cat, store,
@@ -771,7 +771,7 @@ def test_maintained_distinct_count_view_zero_crossings(spark, tmp_path):
     view = MaintainedDistinctCountView(
         spark, store, spec, group_col="grp", val_col="amount",
         val_pg_type="double precision", view_dir=str(tmp_path / "dcview"),
-        support_buckets=4, debug_counters=True,
+        support_buckets=4,
     )
     sr = StreamingReplayer(
         spark, cat, store,
@@ -902,9 +902,9 @@ def test_maintained_distinct_view_retry_after_support_orphan_crash(spark, tmp_pa
     view.before_apply(parsed)
     rep.apply_batch(b, events=parsed)
     # partial after_apply: support written, summary/pointer crash
-    m, _patched, _v_now, new_support, bks = view._patch_frame()
-    assert bks is not None
-    view.sstore.write_partial(view.sspec, new_support, buckets=bks)
+    nxt, _patched = view._patch_frame()
+    assert view.last_touched_buckets is not None  # a partial support write
+    view._before_commit(nxt)
     orphan_sv = view.sstore.current_version(view.sspec.target_name)
     assert view._meta()["version"] == 1
     assert view._meta()["support_version"] < orphan_sv
@@ -945,7 +945,7 @@ def test_maintained_distinct_view_support_partial_rewrite(spark, tmp_path):
     view = MaintainedDistinctCountView(
         spark, store, spec, group_col="grp", val_col="amount",
         val_pg_type="double precision", view_dir=str(tmp_path / "dcview"),
-        support_buckets=8, debug_counters=True,
+        support_buckets=8,
     )
     sr = StreamingReplayer(
         spark, cat, store,
@@ -1173,19 +1173,17 @@ def test_gc_view_versions_retires_seven_digit_dirs(tmp_path):
     """f"v{v:06d}" grows past six digits at version 1,000,000 — GC must
     keep retiring those (an exactly-{6} regex would silently stop right
     when a long-lived stream needs the bound most)."""
-    import json
     import os
 
-    from connemara_spark.operators.ivm import gc_view_versions
+    from connemara_spark.stores import VersionedDir
 
     d = tmp_path / "view"
-    os.makedirs(d)
+    vd = VersionedDir(str(d))
     for v in (999_998, 999_999, 1_000_000, 1_000_001):
-        os.makedirs(d / f"v{v:06d}")
-    with open(d / "CURRENT", "w") as fh:
-        json.dump({"version": 1_000_001, "store_version": 7}, fh)
+        os.makedirs(vd.path(v))
+    vd.advance({"version": 1_000_001, "store_version": 7})
 
-    removed = gc_view_versions(str(d), keep_last=2)
+    removed = vd.gc(vd.retained(2))
     assert removed == [999_998, 999_999]
     assert sorted(e for e in os.listdir(d) if e != "CURRENT") == [
         "v1000000", "v1000001"
@@ -1320,7 +1318,7 @@ def test_single_table_maintainers_detect_pk_rename(spark, tmp_path):
 
 
 def test_minmax_topk_patch_broadcast_fallback(spark, tmp_path, monkeypatch):
-    """Above SPARK_GRAFT_PATCH_GROUP_LITERALS the patch write falls back
+    """Above _PATCH_GROUP_LITERALS touched groups the patch write falls back
     from literal IN-list pruning to the broadcast anti/semi-join shape;
     pin that branch (cap=0 forces it) to the same view-equals-recompute
     contract the default literal branch is pinned to elsewhere."""
@@ -1329,7 +1327,9 @@ def test_minmax_topk_patch_broadcast_fallback(spark, tmp_path, monkeypatch):
     from connemara_spark.streaming import StreamingReplayer
     from connemara_spark.testing import make_event
 
-    monkeypatch.setenv("SPARK_GRAFT_PATCH_GROUP_LITERALS", "0")
+    from connemara_spark.operators import ivm
+
+    monkeypatch.setattr(ivm, "_PATCH_GROUP_LITERALS", 0)
     cat, spec, store = _agg_spec_setup(spark, tmp_path)
     mm = MaintainedMinMaxView(
         spark, store, spec, group_col="grp", val_col="amount",
@@ -1589,3 +1589,57 @@ def test_large_touched_reads_broadcast_the_touched_keys(spark, tmp_path, monkeyp
 
     monkeypatch.setattr(ivm, "_SHUFFLE_TOUCHED_READ_BYTES", 0)
     assert _patch_job_counts(spark, tmp_path) == (3, 3)
+
+
+def test_join_view_steady_patch_prunes_with_summary_bucket_ids(spark, tmp_path, monkeypatch):
+    """A MaintainedJoinView over a BucketStore reads the new state of a
+    steady-state patch through the batch summary's touched-bucket ids:
+    the store's ``buckets_of`` (a driver collect per patch) is never
+    called, and the view equals the full join after every batch."""
+    from connemara_spark.catalog import ColumnSpec, EngineCatalog, TableSpec
+    from connemara_spark.events import BRONZE_SCHEMA
+    from connemara_spark.operators.ivm import MaintainedJoinView
+    from connemara_spark.pipeline import Replayer
+    from connemara_spark.stores import BucketStore
+    from connemara_spark.testing import make_event
+
+    cat = EngineCatalog()
+    cat.register(TableSpec(
+        database="db1", schema="public", table="items",
+        columns=[ColumnSpec("id", "bigint"), ColumnSpec("v", "text")],
+        pk_cols=["id"],
+    ))
+    spec = cat.get("db1", "public", "items")
+    store = BucketStore(spark, str(tmp_path / "silver"), n_buckets=8)
+    rep = Replayer(spark, cat, store)
+    dim = spark.createDataFrame(
+        [(i, f"tier{i % 3}") for i in range(1, 40)], "id long, tier string"
+    )
+    view = MaintainedJoinView(
+        spark, store, spec, dim=dim, key_a="id", key_b="id",
+        view_cols=["id", "v", "tier"], view_dir=str(tmp_path / "view"),
+    )
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("buckets_of called")
+
+    monkeypatch.setattr(store, "buckets_of", no_collect)
+
+    def step(events):
+        rep.step(spark.createDataFrame(
+            [tuple(e[f.name] for f in BRONZE_SCHEMA.fields) for e in events],
+            schema=BRONZE_SCHEMA,
+        ), maintainers=[view])
+        want = sorted(map(tuple, view._full_agg(store.read(spec)).collect()))
+        assert sorted(map(tuple, view.read_view().collect())) == want
+
+    step([make_event(spec, "insert", lsn=i, row={"id": i, "v": f"v{i}"})
+          for i in range(1, 21)])
+    step([
+        make_event(spec, "update", lsn=21, row={"id": 3, "v": "v3b"}, old_key={"id": 3}),
+        make_event(spec, "delete", lsn=22, old_key={"id": 7}),
+        make_event(spec, "insert", lsn=23, row={"id": 30, "v": "v30"}),
+    ])
+    step([make_event(spec, "update", lsn=24, row={"id": 31, "v": "v31"},
+                     old_key={"id": 30})])
+    assert view._meta()["version"] == 3

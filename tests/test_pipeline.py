@@ -617,3 +617,85 @@ def test_no_hand_rolled_replay_loops():
         ]
         assert not hits, "drive batches through Replayer.step/replay:\n" + "\n".join(hits)
     assert not hasattr(driver, "_accepts_batch_id")
+
+
+def test_scoped_conf_restores_set_and_unsets_never_set_keys(spark):
+    """``scoped_conf`` is the one way to state-scope session config: on
+    exit — normal or raising — a key set before gets its value back and a
+    key never set is unset again (not pinned to a default)."""
+    from connemara_spark.session import scoped_conf
+
+    set_key = "spark.sql.shuffle.partitions"
+    new_key = "spark.connemara.scoped_conf_probe"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(new_key, None) is None
+
+    class Boom(Exception):
+        pass
+
+    for raising in (False, True):
+        try:
+            with scoped_conf(spark, {set_key: "7", new_key: "x"}):
+                assert spark.conf.get(set_key) == "7"
+                assert spark.conf.get(new_key) == "x"
+                if raising:
+                    raise Boom
+        except Boom:
+            assert raising
+        assert spark.conf.get(set_key) == before
+        assert spark.conf.get(new_key, None) is None
+
+
+def test_one_versioned_dir_commit_and_one_view_lifecycle():
+    """The CURRENT-pointer protocol has ONE implementation
+    (``stores.VersionedDir``) and the maintained views ONE lifecycle
+    (``ivm.MaintainedView``): no module outside ``stores.py`` names the
+    CURRENT file or formats a ``v{...:06d}`` version directory, and no
+    view class redefines a lifecycle method."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    from connemara_spark.operators import ivm
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "connemara_spark"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "stores.py":
+            continue
+        rel = path.relative_to(root)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if node.value.split("/")[-1] in ("CURRENT", "CURRENT.tmp"):
+                    hits.append(f"{rel}:{node.lineno}: names the CURRENT file")
+            if isinstance(node, ast.JoinedStr):
+                for prev, part in zip(node.values, node.values[1:]):
+                    if (
+                        isinstance(prev, ast.Constant)
+                        and str(prev.value).endswith("v")
+                        and isinstance(part, ast.FormattedValue)
+                        and part.format_spec is not None
+                        and "06d" in ast.unparse(part.format_spec)
+                    ):
+                        hits.append(f"{rel}:{node.lineno}: formats a version dir")
+    assert not hits, "go through stores.VersionedDir:\n" + "\n".join(hits)
+
+    lifecycle = {"_meta", "read_view", "check_schema", "gc_view", "before_apply", "after_apply"}
+    views = {
+        ivm.MaintainedAggView, ivm.MaintainedJoinView, ivm.MaintainedTwoTableJoinView,
+        ivm.MaintainedMinMaxView, ivm.MaintainedTopKView, ivm.MaintainedDistinctCountView,
+    }
+    todo, subclasses = [ivm.MaintainedView], set()
+    while todo:
+        for sub in todo.pop().__subclasses__():
+            subclasses.add(sub)
+            todo.append(sub)
+    assert views <= subclasses
+    for cls in subclasses:
+        assert not lifecycle & set(vars(cls)), f"{cls.__name__} redefines {lifecycle & set(vars(cls))}"
+    defs = Counter(
+        n.name
+        for n in ast.walk(ast.parse(pathlib.Path(ivm.__file__).read_text()))
+        if isinstance(n, ast.FunctionDef)
+    )
+    assert {name: defs[name] for name in lifecycle} == dict.fromkeys(lifecycle, 1)

@@ -80,7 +80,7 @@ def main() -> None:
         dc = MaintainedDistinctCountView(
             spark, store, spec, group_col="g", val_col="x",
             val_pg_type="integer", view_dir=f"{work}/dc",
-            support_buckets=32, debug_counters=True,
+            support_buckets=32,
         )
         views = [agg, mm, tk, dc]
         sr = StreamingReplayer(
