@@ -199,11 +199,22 @@ def _static_patch_plan(spark, n_events: int):
     up to 200k events; above that the widths are within the runs' noise,
     so the constant bounds a task's share of a large batch rather than
     tracking a measured optimum. Results are partition-count invariant
-    (aggregations and equi-joins only)."""
+    (aggregations and equi-joins only).
+
+    The patches' literal IN-lists (``_in_groups``) become hash-set
+    ``InSet``s at any length and never int ``switch`` statements, so
+    their generated classes do not change with the batch's touched
+    groups and stay in the codegen cache (``session.
+    _CODEGEN_CACHE_ENTRIES``)."""
     width = max(1, -(-n_events // _PATCH_EVENTS_PER_PARTITION))
     return scoped_conf(
         spark,
-        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(width)},
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(width),
+            "spark.sql.optimizer.inSetConversionThreshold": "0",
+            "spark.sql.optimizer.inSetSwitchThreshold": "0",
+        },
     )
 
 
@@ -232,11 +243,23 @@ def _patch_gate(s, g: str):
     return [r[0] for r in rows], [r[0] for r in rows if r[1]]
 
 
+def _in_groups(col, values):
+    """Filter predicate keeping rows whose ``col`` is in ``values`` (a
+    NULL matches nothing), compiled to the same class whatever the
+    values: ``_static_patch_plan`` makes every IN-list of two or more
+    literals a hash-set ``InSet``, which generated code references
+    instead of compiling its values in, and the appended NULL makes a
+    one-value list two (the optimizer turns one value into ``col =
+    <literal>``). The NULL only turns a non-match's ``false`` into
+    ``NULL``, which a filter drops all the same."""
+    return col.isin(*values, None)
+
+
 def _not_in_groups(col, values):
     """Keep-side predicate matching LEFT ANTI join semantics exactly,
     including NULLs on either side (NULL never matches, so NULL-group
     rows are KEPT; a NULL in ``values`` matches nothing)."""
-    return ~F.coalesce(col.isin(*values), F.lit(False))
+    return ~F.coalesce(_in_groups(col, values), F.lit(False))
 
 
 def _gated_patch(view, s, base: DataFrame, rows_sel: list) -> DataFrame:
@@ -266,7 +289,7 @@ def _gated_patch(view, s, base: DataFrame, rows_sel: list) -> DataFrame:
     if rescan_vals:
         state = view.store.read(view.spec)
         state = (
-            state.filter(F.col(g).isin(*rescan_vals))
+            state.filter(_in_groups(F.col(g), rescan_vals))
             if lit
             else state.join(
                 F.broadcast(s.filter(F.col("__rescan")).select(g)),

@@ -22,7 +22,9 @@ registry fixtures all run it; nothing else drives the phases below:
    count sets
 
 ``BatchMetrics.phase_s`` reports each step's wall seconds per phase
-(``summary`` = 1-3, ``fold`` = 4-5, ``patch`` = 6).
+(``summary`` = 1-3, ``fold`` = 4-5, ``patch`` = 6), and
+``BatchMetrics.compiles`` the generated classes the JVM compiled during
+the step (two counter reads, no Spark job).
 
 ``Replayer.replay(bronze, batch_ix, n_batches)`` runs a whole stream cut
 into batches by one integer Column: one checkpointed parse, one summary
@@ -46,6 +48,7 @@ from connemara_spark.ddl.executor import DDLExecutor
 from connemara_spark.ddl.rewriter import DDLAction, classify_ddl
 from connemara_spark.events import parse_events, slot_restriction, split_ddl_dml, standard_filters
 from connemara_spark.operators.apply import apply_changes, apply_changes_bounded
+from connemara_spark.session import codegen_compiles
 from connemara_spark.stores import VersionedDir
 
 
@@ -339,6 +342,12 @@ class BatchMetrics:
     # and post-DDL schema checks), "patch" (the concurrent maintainer
     # patches)
     phase_s: dict[str, float] = field(default_factory=dict)
+    # generated classes the JVM compiled during Replayer.step (a JVM-global
+    # counter: a concurrent query's compiles count too). A steady-state
+    # batch compiles none; ~150 means the codegen cache is smaller than
+    # the batch's working set (session._CODEGEN_CACHE_ENTRIES), a few
+    # that a per-batch literal is compiled into generated code
+    compiles: int = 0
 
 
 class Replayer:
@@ -569,6 +578,7 @@ class Replayer:
         ``"ivm b3: fold"``) that the UI and ``tools/joblog_probe.py``
         roll up."""
         owned = parsed is None
+        compiles0 = codegen_compiles(self.spark)
         with _job_labels(self.spark, label) as phase:
             if owned:
                 parsed = self.parse_batch(bronze).persist()
@@ -612,6 +622,7 @@ class Replayer:
                     "fold": t2 - t1,
                     "patch": time.monotonic() - t2,
                 }
+                metrics.compiles = codegen_compiles(self.spark) - compiles0
                 return metrics
             finally:
                 if owned:
@@ -647,10 +658,17 @@ class Replayer:
                 f"replay: batch_ix assigned events to batches {sorted(stray)} "
                 f"outside 0..{n_batches - 1}"
             )
+
+        def in_batch(i):
+            # the index sits in an array literal, which generated code
+            # references: ``batch_ix == i`` would compile ``i`` in, and
+            # every slice's fold and patch stages would be new classes
+            return F.array_contains(F.array(F.lit(i)), batch_ix)
+
         return [
             self.step(
-                bronze.filter(batch_ix == i),
-                parsed=parsed_all.filter(batch_ix == i),
+                bronze.filter(in_batch(i)),
+                parsed=parsed_all.filter(in_batch(i)),
                 summary=summaries.get(i, self.empty_summary()),
                 maintainers=maintainers,
                 batch_id=f"batch-{i}",

@@ -8,10 +8,28 @@ real cluster; locally we size shuffle partitions to the core count.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+# Entries of the JVM's generated-class cache (``spark.sql.codegen.cache.
+# maxEntries``, Spark's default 100). The reference replayer reuses cached
+# prepared statements for every change it applies (replay.pl:173-260); the
+# Spark analog is this cache, and it only works while a batch's whole
+# working set of generated classes fits. One steady ``fresh_views`` batch
+# (perfbench: summary, fold, min/max and top-k patches, JDBC sink,
+# watermark filter) uses ~158 classes, and the cache is an LRU split into
+# 4 segments, so at 100 entries each class is evicted before the next
+# batch asks for it again. Compiles per steady batch (batches 3-6 of a
+# seed-1 run, 4-core host): 100 entries 156-158, 200 / 400 / 1000 / 2000
+# entries 0. 200 holds ~50 classes per segment against ~40 needed; 1000
+# leaves room for deployments with more views and sinks per batch.
+_CODEGEN_CACHE_ENTRIES = 1000
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 
 def get_spark(app_name: str = "connemara-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -48,6 +66,8 @@ def get_spark(app_name: str = "connemara-spark", *, shuffle_partitions: int | No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # static: sized before the JVM's first codegen (see the constant)
+        .config(_CODEGEN_CACHE_CONF, str(_CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     # Builder configs are ignored when getOrCreate() returns a PRE-EXISTING
@@ -56,7 +76,37 @@ def get_spark(app_name: str = "connemara-spark", *, shuffle_partitions: int | No
     # a non-UTC session with DST transitions would skew gap/sessionization
     # arithmetic by the offset change. Pin it at runtime too.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    check_codegen_cache(spark)
     return spark
+
+
+def check_codegen_cache(spark: SparkSession) -> bool:
+    """Whether ``spark``'s generated-class cache holds at least
+    ``_CODEGEN_CACHE_ENTRIES`` classes; logs one warning when it does not.
+
+    The cache size is a static conf: ``get_spark`` cannot change it on a
+    session that already existed (a bare driver-harness session, a
+    notebook), so such a session keeps the size it was built with."""
+    entries = int(spark.conf.get(_CODEGEN_CACHE_CONF))
+    if entries >= _CODEGEN_CACHE_ENTRIES:
+        return True
+    _log.warning(
+        "%s=%d on an existing session (engine default %d): a steady-state "
+        "CDC batch with maintained views needs ~160 generated classes, so "
+        "each batch recompiles most of them (~157 classes, 1.6-2.0 s of "
+        "compile per batch on a 4-core host); build the session with "
+        "get_spark, or set the conf at startup",
+        _CODEGEN_CACHE_CONF, entries, _CODEGEN_CACHE_ENTRIES,
+    )
+    return False
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compile-time histogram count, a cache miss each).
+    The counter is JVM-global: a delta over some code counts every
+    concurrent query's compiles too."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 @contextmanager

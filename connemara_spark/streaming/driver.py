@@ -65,11 +65,11 @@ class LsnWatermark:
             self._state[k] = max(self._state.get(k, -1), lsn)
         atomic_write_json(self.path, self._state)
 
-    # Above this many origins the per-origin predicate chain becomes a
-    # very wide boolean tree (plan bloat + codegen pressure at hundreds of
-    # source databases); switch to a broadcast join against the watermark
-    # table. Below it the literal predicate keeps the filter inside the
-    # scan's codegen span with zero join machinery.
+    # Above this many origins the per-row map lookup (a linear scan of the
+    # map's keys) grows with every source database; switch to a broadcast
+    # hash join against the watermark table. Below it the map literal
+    # keeps the filter inside the scan's codegen span with zero join
+    # machinery.
     BROADCAST_THRESHOLD = 100
 
     def filter_applied(self, bronze: DataFrame) -> DataFrame:
@@ -82,15 +82,16 @@ class LsnWatermark:
         return self._filter_broadcast(bronze)
 
     def _filter_predicate(self, bronze: DataFrame) -> DataFrame:
-        cond = F.lit(True)
-        for k, lsn in self._state.items():
-            db, slot = k.split("\t")
-            cond = cond & ~(
-                (F.col("database") == db)
-                & (F.col("source_slotname") == slot)
-                & (F.col("lsn_start") <= lsn)
-            )
-        return bronze.filter(cond)
+        # One map literal {"db\tslot": watermark}, looked up per row with
+        # the broadcast path's semantics. Generated code references a map
+        # literal but compiles a long literal in, so a per-origin
+        # ``lsn_start <= <lsn>`` chain would be a new class every batch;
+        # the lookup's class is the same for every watermark.
+        wm = F.create_map(*[
+            c for k, lsn in self._state.items() for c in (F.lit(k), F.lit(lsn).cast("long"))
+        ])
+        w = wm[F.concat(F.col("database"), F.lit("\t"), F.col("source_slotname"))]
+        return bronze.filter(w.isNull() | (F.col("lsn_start") > w))
 
     def _filter_broadcast(self, bronze: DataFrame) -> DataFrame:
         rows = []

@@ -1580,6 +1580,78 @@ def test_minmax_topk_patch_is_two_jobs(spark, tmp_path):
     assert _patch_job_counts(spark, tmp_path) == (2, 2)
 
 
+def test_steady_state_steps_compile_batch_invariant_code(spark, tmp_path):
+    """From the third batch on, a ``Replayer.step`` with min/max and top-k
+    views over a BucketStore compiles (``BatchMetrics.compiles``) at most
+    one generated class (0 measured), although every batch touches a
+    different set of integer groups and exhausts a different group's
+    extremum (a rescan leg): the patches' IN-lists put no literal in
+    generated code, and the codegen cache holds a batch's working set
+    (at Spark's default of 100 entries every step recompiles ~150
+    classes). Every view equals a full recompute after every batch."""
+    from connemara_spark.catalog import ColumnSpec, EngineCatalog, TableSpec
+    from connemara_spark.events import BRONZE_SCHEMA
+    from connemara_spark.operators.ivm import MaintainedMinMaxView, MaintainedTopKView
+    from connemara_spark.pipeline import Replayer
+    from connemara_spark.stores import BucketStore
+    from connemara_spark.testing import make_event
+
+    cat = EngineCatalog()
+    cat.register(TableSpec(
+        database="db1", schema="public", table="sales",
+        columns=[ColumnSpec("id", "bigint"), ColumnSpec("grp", "integer"),
+                 ColumnSpec("amount", "double precision")],
+        pk_cols=["id"],
+    ))
+    spec = cat.get("db1", "public", "sales")
+    store = BucketStore(spark, str(tmp_path / "silver"), n_buckets=8)
+    views = {
+        "mm": MaintainedMinMaxView(
+            spark, store, spec, group_col="grp", val_col="amount",
+            view_dir=str(tmp_path / "mm"),
+        ),
+        "tk": MaintainedTopKView(
+            spark, store, spec, group_col="grp", val_col="amount",
+            k=2, slack=1, val_type="double", view_dir=str(tmp_path / "tk"),
+        ),
+    }
+    rep = Replayer(spark, cat, store)
+    lsn = iter(range(1, 1000))
+
+    def step(events):
+        m = rep.step(spark.createDataFrame(
+            [tuple(e[f.name] for f in BRONZE_SCHEMA.fields) for e in events],
+            schema=BRONZE_SCHEMA,
+        ), maintainers=list(views.values()))
+        _assert_views_equal_recompute(store, spec, views)
+        return m
+
+    # group g holds amounts g, g+10, ..., g+50: its minimum is row id g
+    # (id 60 for group 0) and its maximum row id g+50 (id 50 for group 0)
+    step([make_event(spec, "insert", lsn=next(lsn),
+                     row={"id": i, "grp": i % 10, "amount": float(i)})
+          for i in range(1, 61)])
+    compiles = []
+    for g in range(1, 8):
+        # delete group g's unique minimum (a min/max rescan) and its
+        # maximum (the top-k's best entry), and move up to four of its
+        # rows to the next groups, so each batch touches a different
+        # number of groups
+        events = [
+            make_event(spec, "delete", lsn=next(lsn), old_key={"id": g}),
+            make_event(spec, "delete", lsn=next(lsn), old_key={"id": g + 50}),
+        ] + [
+            make_event(spec, "update", lsn=next(lsn),
+                       row={"id": g + 10 * j, "grp": (g + j) % 10, "amount": 100.0 + g + j},
+                       old_key={"id": g + 10 * j})
+            for j in range(1, min(g - 1, 4) + 1)
+        ]
+        m = step(events)
+        assert views["mm"].last_recompute_groups >= 1
+        compiles.append(m.compiles)
+    assert max(compiles[1:]) <= 1, compiles
+
+
 def test_large_touched_reads_broadcast_the_touched_keys(spark, tmp_path, monkeypatch):
     """Above ``_SHUFFLE_TOUCHED_READ_BYTES`` of touched-bucket reads, the
     patches filter those reads with a broadcast of the touched keys

@@ -597,6 +597,28 @@ def test_replay_rejects_batch_index_outside_range(spark, engine):
     assert sorted(r["id"] for r in store.read(spec).collect()) == [1, 2, 3]
 
 
+def test_replay_slices_compile_batch_invariant_code(spark, tmp_path):
+    """``replay`` slices every batch with the same generated code: from
+    the third slice on, a step compiles at most one class (0 measured;
+    ``BatchMetrics.compiles``) although each slice has its own batch
+    index, and the store ends equal to the last write per key."""
+    from pyspark.sql import functions as F
+
+    spec, store, rep = _sales_engine(spark, tmp_path)
+    events = [
+        make_event(spec, "insert" if lsn <= 8 else "update", lsn=lsn,
+                   row={"id": lsn % 8, "grp": "ab"[lsn % 2], "amount": float(lsn)},
+                   **({} if lsn <= 8 else {"old_key": {"id": lsn % 8}}))
+        for lsn in range(1, 49)
+    ]
+    metrics = rep.replay(
+        bronze_df(spark, events), F.expr("int((lsn_start - 1) div 8)"), 6,
+    )
+    assert max(m.compiles for m in metrics[2:]) <= 1, [m.compiles for m in metrics]
+    want = {lsn % 8: float(lsn) for lsn in range(41, 49)}
+    assert {r["id"]: r["amount"] for r in store.read(spec).collect()} == want
+
+
 def test_no_hand_rolled_replay_loops():
     """The per-batch protocol has ONE implementation (Replayer.step /
     Replayer.replay): the registry and the streaming driver must not
@@ -644,6 +666,43 @@ def test_scoped_conf_restores_set_and_unsets_never_set_keys(spark):
             assert raising
         assert spark.conf.get(set_key) == before
         assert spark.conf.get(new_key, None) is None
+
+
+def test_codegen_cache_check_and_compile_counter(spark, caplog):
+    """``get_spark``'s session holds the engine's codegen cache size. A
+    session built elsewhere with Spark's default of 100 entries (a static
+    conf ``get_spark`` cannot change) fails the check with ONE warning
+    that names the per-batch recompile cost. ``codegen_compiles`` counts
+    a class no earlier query generated (a long literal is compiled in)."""
+    import logging
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from connemara_spark import session
+
+    before = session.codegen_compiles(spark)
+    spark.range(4).select((F.col("id") + F.lit(uuid.uuid4().int >> 65)).alias("x")).collect()
+    assert session.codegen_compiles(spark) > before
+
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == session._CODEGEN_CACHE_ENTRIES
+
+    class Conf:
+        def get(self, key):
+            assert key == "spark.sql.codegen.cache.maxEntries"
+            return "100"
+
+    class BareSession:
+        conf = Conf()
+
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert session.check_codegen_cache(spark)
+        assert caplog.records == []
+        assert not session.check_codegen_cache(BareSession())
+    [rec] = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "maxEntries=100" in rec.getMessage()
+    assert "recompiles" in rec.getMessage()
 
 
 def test_one_versioned_dir_commit_and_one_view_lifecycle():

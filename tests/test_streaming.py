@@ -262,3 +262,35 @@ def test_watermark_filter_broadcast_path_matches_predicate_at_1k_origins(
     assert sorted(map(tuple, few._filter_predicate(small).collect())) == sorted(
         map(tuple, few._filter_broadcast(small).collect())
     )
+
+
+def test_watermark_filter_compiles_no_class_per_watermark(spark, tmp_path):
+    """The predicate path of ``LsnWatermark.filter_applied`` generates the
+    same code whatever the watermarks: once its class is compiled,
+    advancing the watermark compiles at most one class (0 measured; the
+    counter is JVM-global), where a compiled-in LSN literal compiles two
+    every streaming batch, and the filter keeps exactly the rows above
+    their origin's watermark."""
+    from pyspark.sql import functions as F
+
+    from connemara_spark.session import codegen_compiles
+    from connemara_spark.streaming.driver import LsnWatermark
+
+    bronze = spark.range(40).select(
+        F.concat(F.lit("db"), (F.col("id") % 3).cast("string")).alias("database"),
+        F.lit("slot").alias("source_slotname"),
+        F.col("id").alias("lsn_start"),
+    )
+    wm = LsnWatermark(str(tmp_path / "wm.json"))
+    compiles = []
+    for lsn in (5, 11, 23, 31):
+        wm.advance({("db0", "slot"): lsn, ("db1", "slot"): lsn + 2})
+        c0 = codegen_compiles(spark)
+        got = sorted(r["lsn_start"] for r in wm.filter_applied(bronze).collect())
+        compiles.append(codegen_compiles(spark) - c0)
+        want = [
+            i for i in range(40)
+            if i > {0: lsn, 1: lsn + 2}.get(i % 3, -1)
+        ]
+        assert got == want
+    assert max(compiles[1:]) <= 1, compiles

@@ -2,19 +2,25 @@
 
 Usage: python tools/joblog_probe.py <query_name> [sf_dir]
 
-Runs the query once cold (codegen/JIT warm) and once timed, with
-spark.eventLog enabled, then parses the event log into the per-job ladder:
-job wall time, stage task counts, task-time sums, and the DRIVER GAPS
-between jobs (submission latency + pure driver work — planning, collects,
-file moves). The gap column is the number the per-batch protocols care
-about: at 100 TB the same ladder amortizes over data; locally it IS the
-cost. Writes nothing to the repo; prints a table.
+Runs the query once at sf0.001 (codegen/JIT warm) and once timed at
+``sf_dir``, in a ``session.get_spark`` session with spark.eventLog
+enabled, then parses the event log into the per-job ladder: job wall
+time, stage task counts, task-time sums, and the DRIVER GAPS between jobs
+(submission latency + pure driver work — planning, collects, file moves).
+The gap column is the number the per-batch protocols care about: at
+100 TB the same ladder amortizes over data; locally it IS the cost. Per
+pass it prints jobs per batch (batches counted from the ``"<label> b<i>:"``
+job labels ``Replayer.step`` sets) and the generated classes the JVM
+compiled (``session.codegen_compiles``). Writes nothing to the repo;
+prints a table.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shlex
 import sys
 import tempfile
 import time
@@ -26,45 +32,37 @@ def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     logdir = tempfile.mkdtemp(prefix="sparklog_")
-
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    from connemara_spark.session import get_spark  # noqa: F401  (conf parity)
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.appName("joblog-probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", logdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # the event log is launch-time conf: pass it to the JVM the session
+    # starts, as perfbench/run.py does
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": logdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {shlex.quote(f'{k}={v}')}" for k, v in conf.items()
+    ) + " pyspark-shell"
 
     from connemara_spark.queries import REGISTRY
+    from connemara_spark.session import codegen_compiles, get_spark
 
+    spark = get_spark("joblog-probe")
     q = REGISTRY[name]
-    # warm pass (codegen/JIT; smallest SF)
-    q.fn(spark, "/root/testdata/sf0.001").collect()
-    spark.catalog.clearCache()
+    passes = []  # (pass name, epoch ms at start, epoch ms at end, compiles)
 
-    t0 = time.monotonic()
-    n = len(q.fn(spark, sf_dir).collect())
-    wall = time.monotonic() - t0
-    spark.catalog.clearCache()
+    def run_pass(label, sf):
+        c0, ms0 = codegen_compiles(spark), time.time() * 1000
+        t0 = time.monotonic()
+        n = len(q.fn(spark, sf).collect())
+        wall = time.monotonic() - t0
+        spark.catalog.clearCache()
+        passes.append((label, ms0, time.time() * 1000, codegen_compiles(spark) - c0))
+        return n, wall
+
+    # warm pass at the smallest SF, which sits beside ``sf_dir``
+    run_pass("warm", os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001"))
+    n, wall = run_pass("timed", sf_dir)
     # flush the event log
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
@@ -112,10 +110,20 @@ def main() -> None:
                 )
 
     order = sorted(jobs)
-    # jobs from the warm pass are included; keep only the timed window: the
-    # last contiguous run whose total spans ~wall. Simpler: report all and
-    # mark; the reader slices by the big time gap of clearCache between runs.
+    # the ladder and the rollup below cover both passes; the per-pass
+    # lines split them by each pass's wall-clock window
     print(f"query={name} rows={n} wall={wall:.2f}s  jobs_total={len(order)}")
+    for label, lo, hi, compiles in passes:
+        in_pass = [jobs[j] for j in order if lo <= jobs[j]["t0"] <= hi]
+        # jobs of a batch's step (its label), not the pass's parse,
+        # summaries or reads
+        labels = [m.group(1) for job in in_pass if (m := re.match(r"(.*? b\d+):", job["desc"]))]
+        per = max(len(set(labels)), 1)
+        print(
+            f"{label} pass: jobs={len(in_pass)} batches={len(set(labels))} "
+            f"jobs/batch={len(labels) / per:.1f} compiles={compiles} "
+            f"compiles/batch={compiles / per:.1f}"
+        )
     prev_end = None
     for j in order:
         job = jobs[j]
@@ -147,9 +155,7 @@ def main() -> None:
         gap = ((job["t0"] - prev_end) / 1000.0) if prev_end else 0.0
         prev_end = job["t1"]
         # strip the batch index so phases aggregate across batches
-        import re as _re
-
-        key = _re.sub(r" b\d+:", ":", job["desc"]) or "(unlabelled)"
+        key = re.sub(r" b\d+:", ":", job["desc"]) or "(unlabelled)"
         a = agg.setdefault(key, [0.0, 0.0, 0])
         a[0] += dur
         a[1] += max(gap, 0.0)
