@@ -597,8 +597,7 @@ class Replayer:
                     # dropped or renamed column fails loudly here, before
                     # any patch could null-fill it
                     for m in maintainers:
-                        if hasattr(m, "check_schema"):
-                            m.check_schema(self.catalog)
+                        m.check_schema(self.catalog)
                 t2 = time.monotonic()
 
                 def patch(m):

@@ -1749,7 +1749,7 @@ def cdc_jdbc_multi_table_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # multi-table analog of the COPY-shaped bootstrap)
         jd = spark.sparkContext.setJobDescription
         jd("jdbcmulti: bootstrap")
-        sink.bootstrap_load_all(batch_id="bootstrap")
+        sink.bootstrap_load(batch_id="bootstrap")
         jd(None)
         lo, hi = _event_lsn_bounds(spark, sf_dir)  # footer stats, no Spark job
         step = max((hi - lo) // 2 + 1, 1)
@@ -3218,8 +3218,7 @@ def _stream_state_width(
     paying a commit (files + fsync) EVERY microbatch, so a tiny drained
     fixture at the session's full width burns 32 state commits per batch
     to shuffle a few MB. ~8 MB of input per state partition, floor 8,
-    ceiling the session width (a 100 TB stream saturates the ceiling; the
-    env knob overrides for deployments that know their state volume).
+    ceiling the session width (a 100 TB stream saturates the ceiling).
 
     ``python_keys``: the caller's state-key-cardinality estimate for
     Python-stateful drains (``applyInPandasWithState``). Those pay a
@@ -3239,9 +3238,6 @@ def _stream_state_width(
     join's four state-store commits per batch."""
     import os as _os
 
-    env = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
     total = 0
     for p in paths:
         for dirpath, _dirs, files in _os.walk(p):

@@ -10,13 +10,14 @@ into the target.
 
 Spark-idiomatic shape (executors cannot speak JDBC-with-transactions
 row-by-row from Python, and per-row DML from the driver would be the
-reference's single-writer bottleneck): the batch's touched-key slice is
-written DISTRIBUTEDLY to a staging table with ``df.write.jdbc`` (the
-parallel, dumb-append fast path), and ONE driver-side transaction then
-reconciles target <- staging:
+reference's single-writer bottleneck): each target table's touched-key
+slice is written DISTRIBUTEDLY to its own staging table with
+``df.write.jdbc`` (the parallel, dumb-append fast path), and ONE
+driver-side transaction then reconciles every target <- its staging:
 
     DELETE FROM target WHERE pk IN (SELECT pk FROM staging_keys);
     INSERT INTO target SELECT ... FROM staging;
+    ...                                 -- every further target table
     INSERT INTO ledger VALUES (batch_id);  -- same transaction
     COMMIT;
 
@@ -26,25 +27,32 @@ checkpoint rollback) converges because replacement overwrites rather
 than diffs. The ledger row makes the whole apply exactly-once — a batch
 id already in the ledger is skipped before any work, and the ledger
 insert commits atomically WITH the data, so a crash either applied
-nothing or recorded the application.
+nothing or recorded the application. Across several tables the one
+transaction is the reference's per-source-transaction atomicity (W2)
+reproduced at the external target: a reader never observes table A's
+batch without table B's.
+
+``JdbcMultiApplySink`` is the sink, over a list of per-table legs;
+``JdbcApplySink`` is its one-target case (its constructor only names the
+one leg, ledger and staging table).
 
 Protocol: ``before_apply(parsed_events, buckets=None)`` pins the batch's
 touched keys (same hook as the view maintainers — ``Replayer.step`` drives
-this class via ``maintainers=[...]``); ``after_apply(batch_id=None)`` ships
-and merges.
-
-``JdbcMultiApplySink`` extends the discipline across SEVERAL target
-tables with ONE reconcile transaction — the reference's per-source-
-transaction atomicity (W2) reproduced at the external target.
+the sink via ``maintainers=[...]``); ``check_schema(catalog)`` follows DDL
+to the targets; ``after_apply(batch_id=None)`` ships and merges.
 """
 
 from __future__ import annotations
 
 import copy
 import logging
+from contextlib import closing
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from connemara_spark.catalog import TableSpec
 from connemara_spark.operators.ivm import touched_keys
 from connemara_spark.pipeline import run_legs
 
@@ -88,6 +96,10 @@ def _with_write_defaults(properties: dict[str, str] | None) -> dict[str, str]:
     return out
 
 
+def _quoted(cols: list[str]) -> str:
+    return ", ".join(f'"{c}"' for c in cols)
+
+
 # pg type -> portable SQL column type for target-side DDL following
 # (ALTER TABLE ADD COLUMN). Dialect-specific needs go through the sink's
 # ``type_overrides``; an unmapped type fails loudly rather than guessing.
@@ -110,85 +122,286 @@ _PG_TO_SQL = {
 }
 
 
-class _JdbcLedgerBase:
-    """Driver-side JDBC plumbing shared by the apply sinks: authenticated
-    connections, the exactly-once ledger, distributed slice staging, and
-    the per-table replacement statements. Subclasses set ``spark``,
-    ``store``, ``url``, ``props``, ``ledger``."""
+@dataclass
+class _Leg:
+    """One target table: the spec its target currently has (a snapshot,
+    advanced only by ``check_schema``), the target and its staging table."""
 
-    spark = store = url = props = ledger = None
-    staging_partitions = 8
+    spec: TableSpec
+    target: str
+    staging: str
 
-    def _connect(self):
-        # the driver-side connections must authenticate the same way the
-        # executors' df.write.jdbc does: every connection property except
-        # the class name (user, password, ssl, ...) is forwarded verbatim
-        jvm = self.spark._jvm
-        driver = self.props.get("driver")
-        if driver:
-            jvm.java.lang.Class.forName(driver)
-        jprops = jvm.java.util.Properties()
-        for k, v in self.props.items():
-            if k != "driver":
-                jprops.setProperty(k, v)
-        return jvm.java.sql.DriverManager.getConnection(self.url, jprops)
 
-    def _ensure_ledger(self) -> None:
-        # NOTE: the connection is still in autocommit mode here — DDL commits
-        # itself, and calling con.commit() under autocommit is an error on
-        # PostgreSQL/MySQL drivers (works only on Derby), so we never do.
-        con = self._connect()
+class JdbcMultiApplySink:
+    """Apply one batch's folded state across the target tables in ONE
+    transaction — the consolidation guarantee the reference inherits from
+    executing a source transaction's DML inside a single PostgreSQL
+    transaction (W2 tx integrity; replay.pl's commit barrier): the SHARED
+    ledger row commits atomically with every table, so the whole batch is
+    exactly-once as a unit. Before COMMIT nothing is visible anywhere,
+    after COMMIT the retry is a ledger skip — there is no window where
+    only SOME tables carry the batch.
+
+    ``targets``: list of ``(spec, target_table)``. Each table stages to
+    its own ``{table}_staging`` (one distributed write per table — the
+    parallel fast path, submitted concurrently); the single driver
+    transaction then replaces rows at every table's touched keys and
+    records the batch id once.
+
+    DDL following (``check_schema``): ADD COLUMN is always replayed to
+    the target; DROP is destructive and only replayed with
+    ``follow_destructive`` — otherwise it fails loudly for review (the
+    reference replays DDL to consolidation verbatim; a distributed sink
+    defaults to the cautious half of that). ``type_overrides`` maps pg
+    types to target column types beyond ``_PG_TO_SQL``."""
+
+    def __init__(
+        self,
+        spark,
+        store,
+        targets,
+        *,
+        url: str,
+        properties: dict[str, str] | None = None,
+        ledger_table: str = "multi_apply_ledger",
+        follow_destructive: bool = False,
+        type_overrides: dict[str, str] | None = None,
+        staging_partitions: int = 8,
+    ):
+        if not targets:
+            raise ValueError("JdbcMultiApplySink needs at least one (spec, table)")
+        self.spark = spark
+        self.store = store
+        # JDBC write parallelism must track the TARGET's ingest concurrency,
+        # not the store's layout: the staged slice inherits the bucketed
+        # read's partitioning (+ the key-rows union), so a 32-bucket store
+        # ships ~64 near-empty partitions, each opening a connection for a
+        # tiny executeBatch — measured ~1.7s/batch against embedded Derby
+        # where the reconcile transaction itself costs ~0.06s. Eight
+        # concurrent connections is a sane ceiling for a PostgreSQL-class
+        # target; large slices still parallelize up to it.
+        self.staging_partitions = max(1, staging_partitions)
+        # SNAPSHOT every spec: the catalog mutates TableSpec objects in
+        # place when DDL executes, and each leg's spec must track what its
+        # JDBC TARGET looks like, not what the catalog currently says — the
+        # gap between the two is exactly what check_schema reconciles (and
+        # what its destructive-drop refusal reports). Aliasing the
+        # catalog's object would advance the staged shape the instant DDL
+        # ran, before the target followed.
+        self.legs = [
+            _Leg(copy.deepcopy(spec), tbl, f"{tbl}_staging") for spec, tbl in targets
+        ]
+        self.url = url
+        self.props = _with_write_defaults(properties)
+        self.ledger = ledger_table
+        self.follow_destructive = follow_destructive
+        self.type_overrides = type_overrides or {}
+        self._touched = None
+        self._ensure_ledger()
+        # auto-assigned batch ids must survive process restarts: a fresh
+        # counter starting at 1 would collide with ledger entries from the
+        # previous process and silently SKIP real batches — resume from
+        # the highest committed sequence instead
+        self._batch_seq = self._max_committed_seq()
+
+    # -- maintainer protocol (driven by Replayer.step) ---------------------
+    def before_apply(self, parsed_events, buckets: dict | None = None) -> None:
+        # lazy pins, one per leg: they derive from the immutable (cached)
+        # parsed batch only, so post-apply evaluation sees identical keys —
+        # and the pins cost zero jobs. ``buckets``: the batch summary's
+        # {(db, schema, table): touched bucket ids}; a table's entry spares
+        # its staging read the buckets_of collect (see _stage_slice)
+        bk = buckets or {}
+        self._touched = [
+            (touched_keys(parsed_events, leg.spec), bk.get(leg.spec.qualified_key))
+            for leg in self.legs
+        ]
+
+    def after_apply(self, batch_id: str | None = None) -> None:
+        """Ship and merge the batch. With an explicit ``batch_id`` (one
+        derived from the source's offsets/stream batch id) delivery is
+        exactly-once via the ledger. Auto-assigned ids resume above the
+        ledger's highest committed sequence, so a restarted process never
+        collides-and-skips; a stream-replayed batch then applies under a
+        FRESH id — still convergent, because replacement overwrites the
+        touched keys with current state rather than diffing."""
+        if self._touched is None:
+            raise RuntimeError("before_apply must run first")
+        if batch_id is None:
+            self._batch_seq += 1
+            batch_id = f"seq-{self._batch_seq}"
         try:
-            st = con.createStatement()
-            try:
-                st.execute(
-                    f"CREATE TABLE {self.ledger} (batch_id VARCHAR(128) PRIMARY KEY)"
+            self.apply_touched(self._touched, batch_id=batch_id)
+        finally:
+            self._touched = None
+
+    def check_schema(self, catalog) -> None:
+        """Follow schema evolution to every TARGET — the reference replays
+        DDL to consolidation PostgreSQL (its target IS where DDL lands,
+        connemara_rewrite.pm routing), so a sink that kept shipping the
+        old column list after a mid-stream ALTER would either crash the
+        reconcile INSERT (added column missing at the target) or drift
+        silently (dropped column lingering). Driven by ``Replayer.step``
+        after any batch that executed DDL, BEFORE after_apply ships the
+        batch's slice. Per leg:
+
+        - columns the catalog gained are ADDed to the target
+          (``ALTER TABLE .. ADD COLUMN``, type via ``_PG_TO_SQL`` /
+          ``type_overrides``);
+        - columns the catalog lost RAISE unless ``follow_destructive``,
+          in which case they are dropped at the target too;
+        - the scratch staging table is dropped either way so the next
+          apply recreates it with the evolved schema (a truncate-reuse
+          would fail on the shape change).
+        """
+        for leg in self.legs:
+            cur = catalog.get(leg.spec.database, leg.spec.schema, leg.spec.table)
+            # validate BEFORE adopting the evolved spec: if the
+            # destructive-drop check raises, leg.spec must still match the
+            # target so a retried after_apply re-raises the clear drift
+            # message instead of crashing on a column the target never gained
+            target_cols = {c.lower() for c in self._target_columns(leg.target)}
+            spec_names = {c.name.lower() for c in cur.columns}
+            to_add = [c for c in cur.columns if c.name.lower() not in target_cols]
+            dropped = sorted(target_cols - spec_names)
+            if dropped and not self.follow_destructive:
+                raise RuntimeError(
+                    f"JDBC target {leg.target} still has column(s) {dropped} "
+                    f"that DDL dropped from {cur.target_name} — pass "
+                    f"follow_destructive=True to replay the drop, or reconcile "
+                    f"the target manually"
                 )
-            except Exception as create_err:
-                # "already exists" is fine; auth/connectivity/permission
-                # errors are NOT — probe the table to tell them apart, and
-                # surface the ORIGINAL error when the probe fails too
-                try:
-                    rs = con.createStatement().executeQuery(
-                        f"SELECT batch_id FROM {self.ledger} WHERE 1=0"
-                    )
-                    rs.close()
-                except Exception:
-                    raise create_err
-        finally:
-            con.close()
+            if to_add or dropped:
+                with closing(self._connect()) as con:
+                    st = con.createStatement()
+                    for c in to_add:
+                        key = c.pg_type.strip().lower()
+                        sql_t = self.type_overrides.get(key) or _PG_TO_SQL.get(key)
+                        if sql_t is None:
+                            raise ValueError(
+                                f"no SQL type mapping for pg type {c.pg_type!r} "
+                                f"(column {c.name}) — pass type_overrides"
+                            )
+                        st.execute(
+                            f"ALTER TABLE {leg.target} ADD COLUMN {c.name} {sql_t}"
+                        )
+                    for name in dropped:
+                        st.execute(f"ALTER TABLE {leg.target} DROP COLUMN {name}")
+                    try:
+                        st.execute(f"DROP TABLE {leg.staging}")
+                    except Exception:
+                        pass  # scratch table may not exist yet
+            # the target now matches — adopt (a snapshot of) the evolved shape
+            leg.spec = copy.deepcopy(cur)
 
-    def _max_committed_seq(self) -> int:
-        con = self._connect()
-        try:
-            rs = con.createStatement().executeQuery(
-                f"SELECT batch_id FROM {self.ledger}"
-            )
-            best = 0
-            while rs.next():
-                bid = rs.getString(1)
-                if bid.startswith("seq-") and bid[4:].isdigit():
-                    best = max(best, int(bid[4:]))
-            return best
-        finally:
-            con.close()
+    # -- core --------------------------------------------------------------
+    def bootstrap_load(self, *, batch_id: str = "bootstrap") -> bool:
+        """Initial sync of every target — the reference's COPY-shaped
+        snapshot load (schema dump + restore feed the target BEFORE
+        streaming begins, sources/snapshot.py S4/S5, one pg_restore
+        session): ship the silver store's full current state without the
+        touched-key machinery, since at bootstrap EVERY key is new.
 
-    def _ledger_has(self, batch_id: str) -> bool:
-        con = self._connect()
-        try:
-            ps = con.prepareStatement(
-                f"SELECT 1 FROM {self.ledger} WHERE batch_id = ?"
+        Shape: one distributed staging write per table (the same parallel
+        fast path as per-batch applies), then ONE driver transaction that
+        clears every target, bulk-inserts set-based from staging
+        (in-database, no per-row driver roundtrips), and records the batch
+        id once. The single transaction makes the load crash-atomic — a
+        reader never observes table A restored without table B — and the
+        ledger row makes it exactly-once: a restarted bootstrap is one
+        skip, a crashed one left every target untouched. Returns False on
+        the ledger skip."""
+        if self._ledger_has(batch_id):
+            return False
+
+        def stage(leg):
+            cols = [c.name for c in leg.spec.columns]
+            self._write_staging(
+                self.store.read(leg.spec)
+                .select(*cols)
+                .withColumn("__key_only", F.lit(False)),
+                leg.staging,
             )
-            ps.setString(1, batch_id)
-            rs = ps.executeQuery()
-            return rs.next()
-        finally:
-            con.close()
+            return cols
+
+        staged = run_legs([partial(stage, leg) for leg in self.legs])
+
+        def load(st):
+            for leg, cols in zip(self.legs, staged):
+                st.execute(f"DELETE FROM {leg.target}")
+                st.execute(
+                    f"INSERT INTO {leg.target} ({', '.join(cols)}) "
+                    f"SELECT {_quoted(cols)} FROM {leg.staging}"
+                )
+
+        self._transaction(batch_id, load)
+        return True
+
+    def apply_touched(self, touched, *, batch_id: str) -> bool:
+        """Replace every target's rows at its touched keys with the silver
+        store's CURRENT rows at those keys, and record ``batch_id``, in ONE
+        transaction. ``touched``: one ``(keys_df, buckets)`` pair per leg,
+        in ``targets`` order — ``buckets`` is the batch summary's touched
+        bucket ids for that table (what ``before_apply`` pins), or None to
+        price them from the keys. Returns False when ``batch_id`` was
+        already applied (the exactly-once skip covers every table)."""
+        if self._ledger_has(batch_id):
+            return False
+        # The per-table staging writes are the batch's distributed phase
+        # and fully independent (own staging table, own index connection) —
+        # submitted as CONCURRENT Spark jobs, the staging phase costs
+        # max(tables), not sum(tables); one leg runs inline. Only the single
+        # reconcile TRANSACTION is inherently serial (that is the atomicity
+        # guarantee, not a bottleneck: it is set-based DML at the target).
+        staged = run_legs(
+            [
+                partial(self._stage_slice, leg, keys, buckets)
+                for leg, (keys, buckets) in zip(self.legs, touched, strict=True)
+            ]
+        )
+
+        def reconcile(st):
+            for leg, (pk, cols) in zip(self.legs, staged):
+                self._reconcile_leg(st, leg.target, leg.staging, pk, cols)
+
+        self._transaction(batch_id, reconcile)
+        return True
+
+    def _transaction(self, batch_id: str, statements) -> None:
+        """ONE target transaction: ``statements(st)`` issues the data
+        statements on an open Statement, then the ledger row records
+        ``batch_id`` and everything commits together. A crash before
+        COMMIT leaves the targets untouched and the batch unrecorded — the
+        retry redoes everything; a crash after COMMIT makes the retry a
+        ledger skip."""
+        with closing(self._connect()) as con:
+            try:
+                con.setAutoCommit(False)
+                statements(con.createStatement())
+                ps = con.prepareStatement(
+                    f"INSERT INTO {self.ledger} (batch_id) VALUES (?)"
+                )
+                ps.setString(1, batch_id)
+                ps.executeUpdate()
+                con.commit()
+            except Exception:
+                con.rollback()
+                raise
+
+    def _write_staging(self, staged, staging: str) -> None:
+        # coalesce, not repartition: fold the store-layout-shaped
+        # partitioning down to the target's connection budget without a
+        # shuffle (see staging_partitions in __init__) — left at store-scan
+        # parallelism a write opens one target connection PER SCAN
+        # PARTITION (32+ against a bucketed store)
+        staged.coalesce(self.staging_partitions).write.mode("overwrite").option(
+            "truncate", "true"
+        ).jdbc(self.url, staging, properties=self.props)
 
     def _stage_slice(
-        self, spec, staging: str, keys, buckets: list[int] | None = None
+        self, leg: _Leg, keys, buckets: list[int] | None = None
     ) -> tuple[list, list]:
-        """ONE distributed staging write for one table: the new rows at the
+        """ONE distributed staging write for one leg: the new rows at the
         touched keys (__key_only=false, inserted by the reconcile) plus the
         bare touched keys (__key_only=true — they ride along so DELETED
         rows, touched but absent from the new state, still reach the
@@ -198,6 +411,7 @@ class _JdbcLedgerBase:
         for this table, when the caller has them — skips the per-batch
         ``buckets_of`` driver collect (the fold priced the same set on the
         summary job; ``build_fold`` treats the two as interchangeable)."""
+        spec, staging = leg.spec, leg.staging
         pk = list(spec.pk_cols)
         if not pk:
             raise ValueError(f"{spec.target_name}: JDBC apply needs PK columns")
@@ -217,17 +431,11 @@ class _JdbcLedgerBase:
             *pk,
             *[F.lit(None).cast(c.spark_type).alias(c.name) for c in non_pk],
         ).withColumn("__key_only", F.lit(True))
-        staged = (
+        self._write_staging(
             slice_df.select(*cols)
             .withColumn("__key_only", F.lit(False))
-            .unionByName(key_rows.select(*cols, "__key_only"))
-            # coalesce, not repartition: fold the store-layout-shaped
-            # partitioning down to the target's connection budget without
-            # a shuffle (see staging_partitions in __init__)
-            .coalesce(self.staging_partitions)
-        )
-        staged.write.mode("overwrite").option("truncate", "true").jdbc(
-            self.url, staging, properties=self.props
+            .unionByName(key_rows.select(*cols, "__key_only")),
+            staging,
         )
         # Index the staged PK: the overwrite recreates the staging table
         # UNINDEXED, and without it some planners (embedded Derby) run the
@@ -238,37 +446,35 @@ class _JdbcLedgerBase:
         # AUTOCOMMIT connection: a failed re-create (truncate-reuse keeps
         # the index alive) must not poison the reconcile transaction
         # (PostgreSQL aborts a tx after any failed statement).
-        con = self._connect()
-        try:
-            con.createStatement().execute(
-                f"CREATE INDEX {staging}_pk ON {staging} "
-                f"({', '.join(f'{chr(34)}{c}{chr(34)}' for c in pk)})"
-            )
-        except Exception as exc:
-            # Only "already exists" is benign (truncate-reuse keeps the
-            # index alive across batches, so re-creation is expected). Any
-            # OTHER failure — permissions, identifier length, a schema-
-            # qualified staging name — would silently revert the reconcile
-            # to the nested-loop plan this index exists to prevent, so it
-            # must leave a signal even though the apply can proceed.
-            state = _sql_state(exc)
-            if state not in _DUP_OBJECT_SQLSTATES:
-                _log.warning(
-                    "staging index %s_pk creation failed (SQLState=%s): %s "
-                    "— reconcile will run UNINDEXED (nested-loop risk)",
-                    staging,
-                    state,
-                    exc,
+        with closing(self._connect()) as con:
+            try:
+                con.createStatement().execute(
+                    f"CREATE INDEX {staging}_pk ON {staging} ({_quoted(pk)})"
                 )
-        finally:
-            con.close()
+            except Exception as exc:
+                # Only "already exists" is benign (truncate-reuse keeps the
+                # index alive across batches, so re-creation is expected).
+                # Any OTHER failure — permissions, identifier length, a
+                # schema-qualified staging name — would silently revert the
+                # reconcile to the nested-loop plan this index exists to
+                # prevent, so it must leave a signal even though the apply
+                # can proceed.
+                state = _sql_state(exc)
+                if state not in _DUP_OBJECT_SQLSTATES:
+                    _log.warning(
+                        "staging index %s_pk creation failed (SQLState=%s): "
+                        "%s — reconcile will run UNINDEXED (nested-loop risk)",
+                        staging,
+                        state,
+                        exc,
+                    )
         return pk, cols
 
     @staticmethod
     def _reconcile_leg(st, target: str, staging: str, pk: list, cols: list) -> None:
         """Replacement statements for one table on an OPEN transaction's
-        Statement — the caller owns begin/commit/rollback. Spark's JDBC
-        writer creates staging columns QUOTED in the DataFrame's exact
+        Statement — ``_transaction`` owns begin/commit/rollback. Spark's
+        JDBC writer creates staging columns QUOTED in the DataFrame's exact
         case; the user-created target resolves unquoted (standard case
         folding) — reference each side its way. ``_stage_slice`` indexed
         the staged PK, so the EXISTS semi-join below probes instead of
@@ -280,14 +486,85 @@ class _JdbcLedgerBase:
         )
         st.execute(
             f"INSERT INTO {target} ({', '.join(cols)}) "
-            f"SELECT {', '.join(f'{chr(34)}{c}{chr(34)}' for c in cols)} "
-            f'FROM {staging} WHERE "__key_only" = false'
+            f'SELECT {_quoted(cols)} FROM {staging} WHERE "__key_only" = false'
         )
 
+    # -- JDBC plumbing -----------------------------------------------------
+    def _connect(self):
+        # the driver-side connections must authenticate the same way the
+        # executors' df.write.jdbc does: every connection property except
+        # the class name (user, password, ssl, ...) is forwarded verbatim
+        jvm = self.spark._jvm
+        driver = self.props.get("driver")
+        if driver:
+            jvm.java.lang.Class.forName(driver)
+        jprops = jvm.java.util.Properties()
+        for k, v in self.props.items():
+            if k != "driver":
+                jprops.setProperty(k, v)
+        return jvm.java.sql.DriverManager.getConnection(self.url, jprops)
 
-class JdbcApplySink(_JdbcLedgerBase):
-    """Replicate a silver table's CDC-applied state into a JDBC target,
-    |Δ|-scoped per batch, exactly-once via a ledger table."""
+    def _target_columns(self, target: str) -> list[str]:
+        with closing(self._connect()) as con:
+            md = con.getMetaData()
+            out: list[str] = []
+            # unquoted identifiers fold per-dialect (Derby: upper,
+            # PostgreSQL: lower) — probe both folds
+            for probe in (target.upper(), target):
+                rs = md.getColumns(None, None, probe, None)
+                while rs.next():
+                    out.append(rs.getString("COLUMN_NAME"))
+                if out:
+                    return out
+        raise RuntimeError(f"target table {target} not found")
+
+    def _ensure_ledger(self) -> None:
+        # NOTE: the connection is still in autocommit mode here — DDL commits
+        # itself, and calling con.commit() under autocommit is an error on
+        # PostgreSQL/MySQL drivers (works only on Derby), so we never do.
+        with closing(self._connect()) as con:
+            try:
+                con.createStatement().execute(
+                    f"CREATE TABLE {self.ledger} (batch_id VARCHAR(128) PRIMARY KEY)"
+                )
+            except Exception as create_err:
+                # "already exists" is fine; auth/connectivity/permission
+                # errors are NOT — probe the table to tell them apart, and
+                # surface the ORIGINAL error when the probe fails too
+                try:
+                    con.createStatement().executeQuery(
+                        f"SELECT batch_id FROM {self.ledger} WHERE 1=0"
+                    ).close()
+                except Exception:
+                    raise create_err
+
+    def _max_committed_seq(self) -> int:
+        with closing(self._connect()) as con:
+            rs = con.createStatement().executeQuery(
+                f"SELECT batch_id FROM {self.ledger}"
+            )
+            best = 0
+            while rs.next():
+                bid = rs.getString(1)
+                if bid.startswith("seq-") and bid[4:].isdigit():
+                    best = max(best, int(bid[4:]))
+            return best
+
+    def _ledger_has(self, batch_id: str) -> bool:
+        with closing(self._connect()) as con:
+            ps = con.prepareStatement(
+                f"SELECT 1 FROM {self.ledger} WHERE batch_id = ?"
+            )
+            ps.setString(1, batch_id)
+            return ps.executeQuery().next()
+
+
+class JdbcApplySink(JdbcMultiApplySink):
+    """The one-target case: replicate one silver table into
+    ``target_table``, |Δ|-scoped per batch, exactly-once via
+    ``{target_table}_apply_ledger`` and staged through
+    ``{target_table}_staging`` (both overridable) — the names this sink
+    has always used, so an existing target keeps its ledger."""
 
     def __init__(
         self,
@@ -304,432 +581,16 @@ class JdbcApplySink(_JdbcLedgerBase):
         type_overrides: dict[str, str] | None = None,
         staging_partitions: int = 8,
     ):
-        self.spark = spark
-        self.store = store
-        # JDBC write parallelism must track the TARGET's ingest concurrency,
-        # not the store's layout: the staged slice inherits the bucketed
-        # read's partitioning (+ the key-rows union), so a 32-bucket store
-        # ships ~64 near-empty partitions, each opening a connection for a
-        # tiny executeBatch — measured ~1.7s/batch against embedded Derby
-        # where the reconcile transaction itself costs ~0.06s. Eight
-        # concurrent connections is a sane ceiling for a PostgreSQL-class
-        # target; large slices still parallelize up to it.
-        self.staging_partitions = max(1, staging_partitions)
-        # SNAPSHOT the spec: the catalog mutates TableSpec objects in place
-        # when DDL executes, and this sink's spec must track what the JDBC
-        # TARGET looks like, not what the catalog currently says — the gap
-        # between the two is exactly what check_schema reconciles (and what
-        # its destructive-drop refusal reports). Aliasing the catalog's
-        # object would advance the sink's view the instant DDL ran,
-        # before the target followed.
-        self.spec = copy.deepcopy(spec)
-        self.url = url
-        self.target = target_table
-        self.props = _with_write_defaults(properties)
-        self.staging = staging_table or f"{target_table}_staging"
-        self.ledger = ledger_table or f"{target_table}_apply_ledger"
-        # target-side DDL following (check_schema): ADD COLUMN is always
-        # replayed to the target; DROP is destructive and only replayed
-        # when the operator opted in — otherwise it fails loudly for
-        # review (the reference replays DDL to consolidation verbatim;
-        # a distributed sink defaults to the cautious half of that)
-        self.follow_destructive = follow_destructive
-        self.type_overrides = type_overrides or {}
-        self._touched = self._touched_buckets = None
-        self._ensure_ledger()
-        # auto-assigned batch ids must survive process restarts: a fresh
-        # counter starting at 1 would collide with ledger entries from the
-        # previous process and silently SKIP real batches — resume from
-        # the highest committed sequence instead
-        self._batch_seq = self._max_committed_seq()
-
-    # -- maintainer protocol (driven by Replayer.step) ---------------------
-    def before_apply(self, parsed_events, buckets: dict | None = None) -> None:
-        # lazy pin: derives from the immutable (cached) parsed batch only,
-        # so post-apply evaluation sees identical keys — and the pin costs
-        # zero jobs (ivm.MaintainedTwoTableJoinView.before_apply).
-        # ``buckets``: the batch summary's {(db, schema, table): touched
-        # bucket ids}; this table's entry spares the staging read its
-        # buckets_of collect (see _stage_slice)
-        self._touched = touched_keys(parsed_events, self.spec)
-        self._touched_buckets = (buckets or {}).get(self.spec.qualified_key)
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        """Ship and merge the batch. With an explicit ``batch_id`` (one
-        derived from the source's offsets/stream batch id) delivery is
-        exactly-once via the ledger. Auto-assigned ids resume above the
-        ledger's highest committed sequence, so a restarted process never
-        collides-and-skips; a stream-replayed batch then applies under a
-        FRESH id — still convergent, because replacement overwrites the
-        touched keys with current state rather than diffing."""
-        if self._touched is None:
-            raise RuntimeError("before_apply must run first")
-        if batch_id is None:
-            self._batch_seq += 1
-            batch_id = f"seq-{self._batch_seq}"
-        try:
-            self.apply_touched(
-                self._touched, batch_id=batch_id, buckets=self._touched_buckets
-            )
-        finally:
-            self._touched = self._touched_buckets = None
-
-    def check_schema(self, catalog) -> None:
-        """Follow schema evolution to the TARGET — the reference replays
-        DDL to consolidation PostgreSQL (its target IS where DDL lands,
-        connemara_rewrite.pm routing), so a sink that kept shipping the
-        old column list after a mid-stream ALTER would either crash the
-        reconcile INSERT (added column missing at the target) or drift
-        silently (dropped column lingering). Driven by StreamingReplayer
-        after any batch that executed DDL, BEFORE after_apply ships the
-        batch's slice:
-
-        - columns the catalog gained are ADDed to the target
-          (``ALTER TABLE .. ADD COLUMN``, type via ``_PG_TO_SQL`` /
-          ``type_overrides``);
-        - columns the catalog lost RAISE unless ``follow_destructive``,
-          in which case they are dropped at the target too;
-        - the scratch staging table is dropped either way so the next
-          apply recreates it with the evolved schema (a truncate-reuse
-          would fail on the shape change).
-        """
-        cur = catalog.get(self.spec.database, self.spec.schema, self.spec.table)
-        # validate BEFORE adopting the evolved spec: if the destructive-drop
-        # check raises, self.spec must still match the target so a retried
-        # after_apply re-raises the clear drift message instead of crashing
-        # on a column the target never gained
-        target_cols = {c.lower() for c in self._target_columns()}
-        spec_names = {c.name.lower() for c in cur.columns}
-        to_add = [c for c in cur.columns if c.name.lower() not in target_cols]
-        dropped = sorted(target_cols - spec_names)
-        if dropped and not self.follow_destructive:
-            raise RuntimeError(
-                f"JDBC target {self.target} still has column(s) {dropped} that "
-                f"DDL dropped from {cur.target_name} — pass "
-                f"follow_destructive=True to replay the drop, or reconcile "
-                f"the target manually"
-            )
-        if not to_add and not dropped:
-            self.spec = copy.deepcopy(cur)
-            return
-        con = self._connect()
-        try:
-            st = con.createStatement()
-            for c in to_add:
-                key = c.pg_type.strip().lower()
-                sql_t = self.type_overrides.get(key) or _PG_TO_SQL.get(key)
-                if sql_t is None:
-                    raise ValueError(
-                        f"no SQL type mapping for pg type {c.pg_type!r} "
-                        f"(column {c.name}) — pass type_overrides"
-                    )
-                st.execute(
-                    f"ALTER TABLE {self.target} ADD COLUMN {c.name} {sql_t}"
-                )
-            for name in dropped:
-                st.execute(f"ALTER TABLE {self.target} DROP COLUMN {name}")
-            try:
-                st.execute(f"DROP TABLE {self.staging}")
-            except Exception:
-                pass  # scratch table may not exist yet
-        finally:
-            con.close()
-        # target now matches — adopt (a snapshot of) the evolved shape
-        self.spec = copy.deepcopy(cur)
-
-    def _target_columns(self) -> list[str]:
-        con = self._connect()
-        try:
-            md = con.getMetaData()
-            out: list[str] = []
-            # unquoted identifiers fold per-dialect (Derby: upper,
-            # PostgreSQL: lower) — probe both folds
-            for probe in (self.target.upper(), self.target):
-                rs = md.getColumns(None, None, probe, None)
-                while rs.next():
-                    out.append(rs.getString("COLUMN_NAME"))
-                if out:
-                    break
-            if not out:
-                raise RuntimeError(f"target table {self.target} not found")
-            return out
-        finally:
-            con.close()
-
-    # -- core --------------------------------------------------------------
-    def bootstrap_load(self, *, batch_id: str = "bootstrap") -> bool:
-        """Initial target sync — the reference's COPY-shaped snapshot load
-        (schema dump + restore feed the target BEFORE streaming begins,
-        sources/snapshot.py S4/S5): ship the silver store's full current
-        state into the target without the touched-key machinery, since at
-        bootstrap EVERY key is new.
-
-        Shape: one distributed staging write (the same parallel fast path
-        as per-batch applies), then ONE driver transaction that clears the
-        target, bulk-inserts set-based from staging (in-database, no
-        per-row driver roundtrips), and records the batch id. The single
-        transaction makes the load crash-atomic, and the ledger row makes
-        it exactly-once — a restarted bootstrap is a skip, a crashed one
-        left the target untouched. Returns False on the ledger skip."""
-        if self._ledger_has(batch_id):
-            return False
-        cols = [c.name for c in self.spec.columns]
-        state = self.store.read(self.spec)
-        # coalesce to the connection budget (see _stage_slice): a bootstrap
-        # left at store-scan parallelism opens one target connection per
-        # scan partition for no throughput gain
-        state.select(*cols).withColumn("__key_only", F.lit(False)).coalesce(
-            self.staging_partitions
-        ).write.mode("overwrite").option("truncate", "true").jdbc(
-            self.url, self.staging, properties=self.props
+        super().__init__(
+            spark,
+            store,
+            [(spec, target_table)],
+            url=url,
+            properties=properties,
+            ledger_table=ledger_table or f"{target_table}_apply_ledger",
+            follow_destructive=follow_destructive,
+            type_overrides=type_overrides,
+            staging_partitions=staging_partitions,
         )
-        con = self._connect()
-        try:
-            con.setAutoCommit(False)
-            st = con.createStatement()
-            st.execute(f"DELETE FROM {self.target}")
-            st.execute(
-                f"INSERT INTO {self.target} ({', '.join(cols)}) "
-                f"SELECT {', '.join(f'{chr(34)}{c}{chr(34)}' for c in cols)} "
-                f"FROM {self.staging}"
-            )
-            ps = con.prepareStatement(
-                f"INSERT INTO {self.ledger} (batch_id) VALUES (?)"
-            )
-            ps.setString(1, batch_id)
-            ps.executeUpdate()
-            con.commit()
-        except Exception:
-            con.rollback()
-            raise
-        finally:
-            con.close()
-        return True
-
-    def apply_touched(
-        self, keys, *, batch_id: str, buckets: list[int] | None = None
-    ) -> bool:
-        """Replace the target's rows at ``keys`` with the silver store's
-        CURRENT rows at those keys. Returns False when ``batch_id`` was
-        already applied (exactly-once skip)."""
-        if self._ledger_has(batch_id):
-            return False
-        pk, cols = self._stage_slice(self.spec, self.staging, keys, buckets)
-        self._reconcile(batch_id, pk, cols)
-        return True
-
-    def _reconcile(self, batch_id: str, pk: list[str], cols: list[str]) -> None:
-        """ONE transaction: replacement at touched keys + ledger record.
-        Crash before COMMIT leaves the target untouched and the batch
-        unrecorded — the retry redoes everything; crash after COMMIT makes
-        the retry a ledger-skip."""
-        con = self._connect()
-        try:
-            con.setAutoCommit(False)
-            self._reconcile_leg(
-                con.createStatement(), self.target, self.staging, pk, cols
-            )
-            ps = con.prepareStatement(
-                f"INSERT INTO {self.ledger} (batch_id) VALUES (?)"
-            )
-            ps.setString(1, batch_id)
-            ps.executeUpdate()
-            con.commit()
-        except Exception:
-            con.rollback()
-            raise
-        finally:
-            con.close()
-
-
-class JdbcMultiApplySink(_JdbcLedgerBase):
-    """Apply one batch's folded state across SEVERAL target tables in ONE
-    transaction — the consolidation guarantee the reference inherits from
-    executing a source transaction's DML inside a single PostgreSQL
-    transaction (W2 tx integrity; replay.pl's commit barrier): a reader
-    of the target never observes table A's batch without table B's, and
-    the SHARED ledger row commits atomically with all of them, so the
-    whole multi-table batch is exactly-once as a unit.
-
-    ``targets``: list of ``(spec, target_table)``. Each table stages to
-    its own ``{table}_staging`` (one distributed write per table — the
-    parallel fast path); the single driver transaction then replaces
-    rows at every table's touched keys and records the batch id once.
-    Crash semantics match the single-table sink: before COMMIT nothing
-    is visible anywhere, after COMMIT the retry is a ledger skip — there
-    is no window where only SOME tables carry the batch.
-
-    Maintainer protocol: ``before_apply`` pins every table's touched
-    keys from the ONE shared parse; drive it via
-    ``StreamingReplayer(maintainers=[...])`` like the views."""
-
-    def __init__(
-        self,
-        spark,
-        store,
-        targets,
-        *,
-        url: str,
-        properties: dict[str, str] | None = None,
-        ledger_table: str = "multi_apply_ledger",
-        staging_partitions: int = 8,
-    ):
-        if not targets:
-            raise ValueError("JdbcMultiApplySink needs at least one (spec, table)")
-        self.spark = spark
-        self.store = store
-        # see JdbcApplySink: JDBC write parallelism tracks the target's
-        # connection budget, not the store layout
-        self.staging_partitions = max(1, staging_partitions)
-        # SNAPSHOT every spec (same hazard JdbcApplySink guards against):
-        # the catalog mutates TableSpec.columns IN PLACE when DDL executes,
-        # and each target's staged slice must track what that JDBC TARGET
-        # looks like, not what the catalog currently says. Aliasing the
-        # live objects would make the staged slice adopt the evolved shape
-        # against an unevolved target the instant mid-stream DDL ran —
-        # and unlike the single-table sink this one has no check_schema
-        # to reconcile the gap, so the reconcile INSERT would wedge.
-        self.targets = [(copy.deepcopy(spec), tbl) for spec, tbl in targets]
-        self.url = url
-        self.props = _with_write_defaults(properties)
-        self.ledger = ledger_table
-        self._touched = None
-        self._ensure_ledger()
-        self._batch_seq = self._max_committed_seq()
-
-    # -- maintainer protocol ------------------------------------------------
-    def before_apply(self, parsed_events, buckets: dict | None = None) -> None:
-        # lazy pins, one per table, all off the shared cached parse (see
-        # JdbcApplySink.before_apply). ``buckets``: the batch summary's
-        # {(db, schema, table): touched bucket ids} when the loop has it.
-        bk = buckets or {}
-        self._touched = [
-            (
-                spec,
-                target,
-                touched_keys(parsed_events, spec),
-                bk.get((spec.database, spec.schema, spec.table)),
-            )
-            for spec, target in self.targets
-        ]
-
-    def after_apply(self, batch_id: str | None = None) -> None:
-        if self._touched is None:
-            raise RuntimeError("before_apply must run first")
-        if batch_id is None:
-            self._batch_seq += 1
-            batch_id = f"seq-{self._batch_seq}"
-        try:
-            self.apply_touched_all(self._touched, batch_id=batch_id)
-        finally:
-            self._touched = None
-
-    # -- core ----------------------------------------------------------------
-    def bootstrap_load_all(self, *, batch_id: str = "bootstrap") -> bool:
-        """Initial sync of EVERY target table in ONE transaction — the
-        multi-table analog of ``JdbcApplySink.bootstrap_load`` (the
-        reference restores the whole schema dump before streaming begins,
-        sources/snapshot.py S4/S5, and that restore is one pg_restore
-        session): each table's full silver state ships distributedly to
-        its staging, then a single driver transaction clears and
-        bulk-inserts all targets set-based and records the batch id once.
-        A reader never observes table A restored without table B; a
-        crashed bootstrap left every target untouched; a restarted one is
-        a single ledger skip covering all tables."""
-        if self._ledger_has(batch_id):
-            return False
-
-        def stage_one(spec, target):
-            cols = [c.name for c in spec.columns]
-            staging = f"{target}_staging"
-            # coalesce to the connection budget like the single-table
-            # bootstrap_load: left at store-scan parallelism this write
-            # opened one target connection PER SCAN PARTITION (32+ against
-            # a bucketed store — measured as a 1.56s 32-task job against
-            # embedded Derby where the coalesced write is sub-second)
-            self.store.read(spec).select(*cols).withColumn(
-                "__key_only", F.lit(False)
-            ).coalesce(self.staging_partitions).write.mode("overwrite").option(
-                "truncate", "true"
-            ).jdbc(
-                self.url, staging, properties=self.props
-            )
-            return (target, staging, cols)
-
-        # each table stages to ITS OWN staging table — independent
-        # distributed writes, submitted concurrently (see apply_touched_all)
-        staged = run_legs(
-            [(lambda s=spec, t=target: stage_one(s, t)) for spec, target in self.targets]
-        )
-        con = self._connect()
-        try:
-            con.setAutoCommit(False)
-            st = con.createStatement()
-            for target, staging, cols in staged:
-                st.execute(f"DELETE FROM {target}")
-                st.execute(
-                    f"INSERT INTO {target} ({', '.join(cols)}) "
-                    f"SELECT {', '.join(f'{chr(34)}{c}{chr(34)}' for c in cols)} "
-                    f"FROM {staging}"
-                )
-            ps = con.prepareStatement(
-                f"INSERT INTO {self.ledger} (batch_id) VALUES (?)"
-            )
-            ps.setString(1, batch_id)
-            ps.executeUpdate()
-            con.commit()
-        except Exception:
-            con.rollback()
-            raise
-        finally:
-            con.close()
-        return True
-
-    def apply_touched_all(self, legs, *, batch_id: str) -> bool:
-        """Stage every table's touched-key slice, then replace rows at all
-        of them + record the batch id in ONE transaction. ``legs``:
-        ``(spec, target_table, keys_df)`` triples, or 4-tuples with the
-        batch summary's touched-bucket id list appended (what
-        ``before_apply(parsed, buckets=...)`` builds) — the staging read
-        then prunes to those buckets instead of re-deriving them with a
-        per-batch ``buckets_of`` collect; triples keep the fallback path.
-        Returns False on the exactly-once ledger skip (covers every table
-        at once)."""
-        if self._ledger_has(batch_id):
-            return False
-
-        def stage_one(spec, target, keys, buckets=None):
-            staging = f"{target}_staging"
-            pk, cols = self._stage_slice(spec, staging, keys, buckets)
-            return (target, staging, pk, cols)
-
-        # The per-table staging writes are the batch's distributed phase
-        # and fully independent (own staging table, own index connection) —
-        # submit them as CONCURRENT Spark jobs so the staging phase costs
-        # max(tables), not sum(tables). Only the single reconcile
-        # TRANSACTION below is inherently serial (that is the atomicity
-        # guarantee, not a bottleneck: it is set-based DML at the target).
-        staged = run_legs(
-            [
-                (lambda leg=leg: stage_one(*leg))
-                for leg in legs
-            ]
-        )
-        con = self._connect()
-        try:
-            con.setAutoCommit(False)
-            st = con.createStatement()
-            for target, staging, pk, cols in staged:
-                self._reconcile_leg(st, target, staging, pk, cols)
-            ps = con.prepareStatement(
-                f"INSERT INTO {self.ledger} (batch_id) VALUES (?)"
-            )
-            ps.setString(1, batch_id)
-            ps.executeUpdate()
-            con.commit()
-        except Exception:
-            con.rollback()
-            raise
-        finally:
-            con.close()
-        return True
+        if staging_table:
+            self.legs[0].staging = staging_table

@@ -70,7 +70,7 @@ def test_jdbc_apply_replicates_store_state_exactly_once(spark, tmp_path):
 
     # seed the target with the snapshot (full first load: every key touched)
     all_keys = store.read(spec).select("id")
-    assert sink.apply_touched(all_keys, batch_id="bootstrap")
+    assert sink.apply_touched([(all_keys, None)], batch_id="bootstrap")
     assert _target_rows(spark, url) == {
         i: (f"v{i}", i) for i in range(20)
     }
@@ -96,7 +96,8 @@ def test_jdbc_apply_replicates_store_state_exactly_once(spark, tmp_path):
 
     # exactly-once: replaying the SAME batch id is a no-op skip
     assert sink.apply_touched(
-        spark.createDataFrame([(2,), (5,), (50,)], "id long"), batch_id="batch-1"
+        [(spark.createDataFrame([(2,), (5,), (50,)], "id long"), None)],
+        batch_id="batch-1",
     ) is False
     assert _target_rows(spark, url) == want
 
@@ -107,7 +108,7 @@ def test_jdbc_apply_retry_after_crash_converges(spark, tmp_path):
     post-commit replay skips). Replacement semantics make the re-apply
     idempotent even though the store already contains the batch."""
     url, spec, store, rep, sink = _setup(spark, tmp_path, "sinkdb2")
-    sink.apply_touched(store.read(spec).select("id"), batch_id="bootstrap")
+    sink.apply_touched([(store.read(spec).select("id"), None)], batch_id="bootstrap")
 
     events = [
         make_event(spec, "update", lsn=1, row={"id": 1, "v": "x", "n": 7}, old_key={"id": 1}),
@@ -131,7 +132,7 @@ def test_jdbc_apply_retry_after_crash_converges(spark, tmp_path):
     assert _target_rows(spark, url)[1] == ("x", 7)
     # and the duplicate delivery after success is skipped
     assert sink2.apply_touched(
-        spark.createDataFrame([(1,)], "id long"), batch_id="batch-1"
+        [(spark.createDataFrame([(1,)], "id long"), None)], batch_id="batch-1"
     ) is False
 
 
@@ -198,7 +199,7 @@ def test_jdbc_sink_through_streaming_driver_with_restart(spark, tmp_path):
 
 def test_driver_side_connections_forward_credentials(spark):
     """The driver-side JDBC connections (_ensure_ledger/_ledger_has/
-    _reconcile) must authenticate with the SAME connection properties the
+    _transaction) must authenticate with the SAME connection properties the
     executors' df.write.jdbc uses — a sink configured with user/password
     that only forwards them to the staging write would fail against any
     authenticated target. Derby maps the `user` property to the session's
@@ -481,7 +482,7 @@ def test_sink_follows_add_column_ddl_to_target(spark, tmp_path):
     sr.run_until_drained()
     spec2 = cat.get("db1", "public", "items")
     assert spec2.column_names == ["id", "v", "n", "note"]
-    assert [c.lower() for c in sink._target_columns()] == ["id", "v", "n", "note"]
+    assert [c.lower() for c in sink._target_columns("items")] == ["id", "v", "n", "note"]
 
     # post-DDL batch: the new column's values reach the target
     write_segment(str(tmp_path / "spool"), [
@@ -533,10 +534,10 @@ def test_sink_drop_column_fails_loudly_unless_opted_in(spark, tmp_path):
     with pytest.raises(RuntimeError, match="dropped"):
         sink.check_schema(cat)
     # target untouched by the refusal
-    assert [c.lower() for c in sink._target_columns()] == ["id", "v", "n"]
+    assert [c.lower() for c in sink._target_columns("items")] == ["id", "v", "n"]
     # and the sink's OWN spec too: a retried check_schema must re-raise the
     # same clear drift message, not crash shipping a shape the target lacks
-    assert sink.spec.column_names == ["id", "v", "n"]
+    assert sink.legs[0].spec.column_names == ["id", "v", "n"]
     with pytest.raises(RuntimeError, match="dropped"):
         sink.check_schema(cat)
 
@@ -545,7 +546,7 @@ def test_sink_drop_column_fails_loudly_unless_opted_in(spark, tmp_path):
         target_table="items", properties=PROPS, follow_destructive=True,
     )
     sink2.check_schema(cat)
-    assert [c.lower() for c in sink2._target_columns()] == ["id", "v"]
+    assert [c.lower() for c in sink2._target_columns("items")] == ["id", "v"]
 
 
 def _two_table_setup(spark, tmp_path, dbname):
@@ -607,10 +608,10 @@ def test_multi_table_apply_is_one_atomic_transaction(spark, tmp_path):
     )
     # bootstrap both tables through the multi path (every key touched)
     legs = [
-        (items, "items", store.read(items).select("id")),
-        (accounts, "accounts", store.read(accounts).select("id")),
+        (store.read(items).select("id"), None),
+        (store.read(accounts).select("id"), None),
     ]
-    assert sink.apply_touched_all(legs, batch_id="bootstrap") is True
+    assert sink.apply_touched(legs, batch_id="bootstrap") is True
     assert _table(spark, url, "SELECT id, v FROM items") == {i: f"v{i}" for i in range(5)}
     assert _table(spark, url, "SELECT id, bal FROM accounts") == {i: float(i) for i in range(5)}
 
@@ -628,7 +629,7 @@ def test_multi_table_apply_is_one_atomic_transaction(spark, tmp_path):
     assert _table(spark, url, "SELECT id, bal FROM accounts")[2] == 99.5
 
     # replaying the SAME id skips BOTH tables at once
-    assert sink.apply_touched_all(legs, batch_id="batch-1") is False
+    assert sink.apply_touched(legs, batch_id="batch-1") is False
 
     # atomicity: make the SECOND leg fail (drop its staging between the
     # stage writes and the transaction by pointing the leg at a staging
@@ -649,9 +650,9 @@ def test_multi_table_apply_is_one_atomic_transaction(spark, tmp_path):
     sink._reconcile_leg = exploding
     try:
         with pytest.raises(RuntimeError, match="injected"):
-            sink.apply_touched_all(
-                [(items, "items", store.read(items).select("id")),
-                 (accounts, "accounts", store.read(accounts).select("id"))],
+            sink.apply_touched(
+                [(store.read(items).select("id"), None),
+                 (store.read(accounts).select("id"), None)],
                 batch_id="batch-2",
             )
     finally:
@@ -661,9 +662,9 @@ def test_multi_table_apply_is_one_atomic_transaction(spark, tmp_path):
     assert _table(spark, url, "SELECT id, v FROM items") == before_items
     assert sink._ledger_has("batch-2") is False
     # the retry under the same id converges cleanly
-    assert sink.apply_touched_all(
-        [(items, "items", store.read(items).select("id")),
-         (accounts, "accounts", store.read(accounts).select("id"))],
+    assert sink.apply_touched(
+        [(store.read(items).select("id"), None),
+         (store.read(accounts).select("id"), None)],
         batch_id="batch-2",
     ) is True
     assert _table(spark, url, "SELECT id, v FROM items")[3] == "BOOM"
@@ -679,9 +680,9 @@ def test_multi_table_sink_through_streaming_driver(spark, tmp_path):
     url, cat, items, accounts, store, rep, sink = _two_table_setup(
         spark, tmp_path, "multidb2"
     )
-    sink.apply_touched_all(
-        [(items, "items", store.read(items).select("id")),
-         (accounts, "accounts", store.read(accounts).select("id"))],
+    sink.apply_touched(
+        [(store.read(items).select("id"), None),
+         (store.read(accounts).select("id"), None)],
         batch_id="bootstrap",
     )
     write_segment(str(tmp_path / "spool"), [
@@ -706,14 +707,14 @@ def test_multi_table_sink_through_streaming_driver(spark, tmp_path):
 
 
 def test_multi_table_bootstrap_load_all_is_one_atomic_transaction(spark, tmp_path):
-    """bootstrap_load_all restores EVERY target in one transaction: both
+    """bootstrap_load restores EVERY target in one transaction: both
     tables land together, a rerun is a single ledger skip covering all of
     them, and a failure on the second table's bulk-insert leaves the
     first table untouched (no half-restored target)."""
     url, cat, items, accounts, store, rep, sink = _two_table_setup(
         spark, tmp_path, "multidb3"
     )
-    assert sink.bootstrap_load_all(batch_id="bootstrap") is True
+    assert sink.bootstrap_load(batch_id="bootstrap") is True
     assert _table(spark, url, "SELECT id, v FROM items") == {
         i: f"v{i}" for i in range(5)
     }
@@ -722,7 +723,7 @@ def test_multi_table_bootstrap_load_all_is_one_atomic_transaction(spark, tmp_pat
     }
     # exactly-once: a restarted bootstrap is one skip for all tables
     store.write(items, spark.createDataFrame([(9, "late")], "id long, v string"))
-    assert sink.bootstrap_load_all(batch_id="bootstrap") is False
+    assert sink.bootstrap_load(batch_id="bootstrap") is False
     assert _table(spark, url, "SELECT id, v FROM items") == {
         i: f"v{i}" for i in range(5)
     }
@@ -774,14 +775,14 @@ def test_multi_table_bootstrap_load_all_is_one_atomic_transaction(spark, tmp_pat
     sink._connect = sabotage
     try:
         with pytest.raises(_Boom):
-            sink.bootstrap_load_all(batch_id="bootstrap-2")
+            sink.bootstrap_load(batch_id="bootstrap-2")
     finally:
         sink._connect = orig
     assert _table(spark, url, "SELECT id, v FROM items") == before_items
     assert sink._ledger_has("bootstrap-2") is False
     # the retry under the same id converges (items now restores the
     # post-sabotage silver state: the single 'late' row)
-    assert sink.bootstrap_load_all(batch_id="bootstrap-2") is True
+    assert sink.bootstrap_load(batch_id="bootstrap-2") is True
     assert _table(spark, url, "SELECT id, v FROM items") == {9: "late"}
     assert _table(spark, url, "SELECT id, bal FROM accounts") == {
         i: float(i) for i in range(5)
@@ -829,3 +830,83 @@ def test_streaming_sink_ships_with_summary_bucket_hints(spark, tmp_path, monkeyp
     got = _target_rows(spark, url)
     assert got == {r["id"]: (r["v"], r["n"]) for r in store.read(spec).collect()}
     assert got[100] == ("newer", 8) and got[2] == ("patched", 99) and 5 not in got
+
+
+def _columns(spark, url, table):
+    """The live target's column names, lower-cased, in table order."""
+    con = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = con.getMetaData().getColumns(None, None, table.upper(), None)
+        out = []
+        while rs.next():
+            out.append(rs.getString("COLUMN_NAME").lower())
+        return out
+    finally:
+        con.close()
+
+
+def test_multi_table_sink_follows_add_column_to_its_target(spark, tmp_path):
+    """A batch carrying ALTER TABLE ADD COLUMN on ONE of the sink's tables,
+    plus post-DDL DML: ``Replayer.step`` runs the sink's check_schema
+    before the batch ships, so the matching Derby target gains the
+    column and mirrors the store, and the other target is unchanged."""
+    url, cat, items, accounts, store, rep, sink = _two_table_setup(
+        spark, tmp_path, "multiddl1"
+    )
+    assert sink.bootstrap_load()
+    accounts_before = _table(spark, url, "SELECT id, bal FROM accounts")
+    rep.step(_bronze(spark, [
+        make_event(items, "insert", lsn=1, row={"id": 10, "v": "pre"}),
+        _ddl_event_dict(items, 2, "ALTER TABLE public.items ADD COLUMN note text"),
+        make_event(items, "insert", lsn=3, row={"id": 11, "v": "post", "note": "hello"},
+                   present=["id", "v", "note"]),
+        make_event(items, "update", lsn=4, row={"id": 1, "v": "v1", "note": "later"},
+                   present=["id", "v", "note"], old_key={"id": 1}),
+    ]), maintainers=[sink])
+    assert cat.get("db1", "public", "items").column_names == ["id", "v", "note"]
+    assert _columns(spark, url, "items") == ["id", "v", "note"]
+    assert _columns(spark, url, "accounts") == ["id", "bal"]
+    want = {r["id"]: (r["v"], r["note"]) for r in store.read(items).collect()}
+    got_v = _table(spark, url, "SELECT id, v FROM items")
+    got_note = _table(spark, url, "SELECT id, note FROM items")
+    assert {k: (got_v[k], got_note[k]) for k in got_v} == want
+    assert got_note[10] is None and got_note[11] == "hello" and got_note[1] == "later"
+    assert _table(spark, url, "SELECT id, bal FROM accounts") == accounts_before
+
+
+def test_multi_table_sink_drop_column_fails_loudly_unless_opted_in(spark, tmp_path):
+    """A DROP COLUMN on one of the sink's tables raises the clear drift
+    error from ``Replayer.step`` and leaves that target's column in place;
+    a sink built with ``follow_destructive=True`` replays the drop, and
+    the next batch ships both tables in their current shape."""
+    from connemara_spark.sinks import JdbcMultiApplySink
+
+    url, cat, items, accounts, store, rep, sink = _two_table_setup(
+        spark, tmp_path, "multiddl2"
+    )
+    assert sink.bootstrap_load()
+    drop = _bronze(spark, [
+        _ddl_event_dict(accounts, 1, "ALTER TABLE public.accounts DROP COLUMN bal"),
+    ])
+    with pytest.raises(RuntimeError, match=r"still has column\(s\) \['bal'\].*follow_destructive"):
+        rep.step(drop, maintainers=[sink])
+    assert _columns(spark, url, "accounts") == ["id", "bal"]
+    assert _columns(spark, url, "items") == ["id", "v"]
+
+    sink2 = JdbcMultiApplySink(
+        spark, store, [(items, "items"), (accounts, "accounts")],
+        url="jdbc:derby:memory:multiddl2", properties=PROPS,
+        follow_destructive=True,
+    )
+    sink2.check_schema(cat)
+    assert _columns(spark, url, "accounts") == ["id"]
+    rep.step(_bronze(spark, [
+        make_event(accounts, "insert", lsn=2, row={"id": 7}),
+        make_event(items, "update", lsn=3, row={"id": 2, "v": "x"}, old_key={"id": 2}),
+    ]), maintainers=[sink2])
+    assert _table(spark, url, "SELECT id, v FROM items") == {
+        r["id"]: r["v"] for r in store.read(items).collect()
+    }
+    assert set(_table(spark, url, "SELECT id, id FROM accounts")) == {
+        r["id"] for r in store.read(accounts).collect()
+    } == {0, 1, 2, 3, 4, 7}

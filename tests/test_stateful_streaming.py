@@ -699,15 +699,13 @@ def test_heavy_hitters_stream_candidates_cover_and_recount_exact(spark, tmp_path
     assert got == want == {("hot", 300), ("warm", 120)}
 
 
-def test_stream_state_width_python_keys_policy(spark, tmp_path, monkeypatch):
+def test_stream_state_width_python_keys_policy(spark, tmp_path):
     """CPU-aware width for Python-stateful drains: the ``python_keys``
     cardinality hint raises the byte-derived width to min(session, keys)
     (per-key Python invocations parallelize across partitions), while
-    shard-keyed operators (keys <= floor) keep the narrow width and the
-    env override still wins over everything."""
+    shard-keyed operators (keys <= floor) keep the narrow width."""
     from connemara_spark.queries import _stream_state_width
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
     land = tmp_path / "land"
     land.mkdir()
     (land / "seg-0000.parquet").write_bytes(b"x" * 1024)  # tiny: byte width = floor
@@ -726,7 +724,3 @@ def test_stream_state_width_python_keys_policy(spark, tmp_path, monkeypatch):
     # exceeds the byte width (session may be < 10 in tests; cover both)
     mid = _stream_state_width(spark, str(land), python_keys=10)
     assert mid == max(floor, min(session, 10))
-
-    # env override wins over the hint
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    assert _stream_state_width(spark, str(land), python_keys=10**6) == 3

@@ -94,7 +94,7 @@ def main() -> None:
             store.write_partial(spec, nxt, keys=keys)
             t_store = time.perf_counter() - t0
             t0 = time.perf_counter()
-            sink.apply_touched(keys, batch_id=f"b-{b}")
+            sink.apply_touched([(keys, None)], batch_id=f"b-{b}")
             t_sink = time.perf_counter() - t0
             halves.append((t_store, t_sink))
             print(json.dumps({
