@@ -16,6 +16,12 @@ the per-event transition function:
                absent columns = unchanged TOASTs keep the old value,
                statement-shape cache at replay.pl:186-194)
 
+Every fold variant — ``apply_changes``, ``apply_changes_bounded``,
+``apply_changes_cut``, ``apply_delta`` — is a projection of ONE keyed join
+(``_keyed_join``: project, optionally prune, group per key, join the staged
+snapshot on the PK struct) through ONE state column (``_state_col``: fold
+the key's events over its snapshot entry, else pass the entry through).
+
 PK-change updates (replay.pl:905-950) are split into delete(old_pk) +
 insert(new_pk) *before* grouping, preserving intra-event order via a
 sub-ordinal — the same barrier semantics without any barrier.
@@ -41,9 +47,11 @@ from pyspark.sql import types as T
 
 from connemara_spark.catalog import TableSpec
 
-# Ordering of events: (insert_timestamp, lsn_start) — replay.pl:833 — plus a
-# sub-ordinal so a split PK-change update keeps delete-before-insert.
-_ORDER_COLS = ("insert_timestamp", "lsn_start", "sub_ord")
+# A projected event as the fold sees it. The LEADING fields are the apply
+# order — (insert_timestamp, lsn_start), replay.pl:833, plus a sub-ordinal so
+# a split PK-change update keeps delete-before-insert — so sort_array over
+# these structs yields exact apply order.
+_EVENT_FIELDS = ("insert_timestamp", "lsn_start", "sub_ord", "op", "vals", "has")
 
 
 def _typed_value(spec: TableSpec, name: str) -> Column:
@@ -89,11 +97,6 @@ def _effective_spec(spec: TableSpec) -> tuple[TableSpec, bool]:
     return replace(spec, pk_cols=[c.name for c in spec.columns]), True
 
 
-def events_for_table(events: DataFrame, spec: TableSpec) -> DataFrame:
-    spec, whole_row = _effective_spec(spec)
-    return _events_for_table(events, spec, whole_row)
-
-
 def _spec_sig(spec: TableSpec) -> tuple:
     """Value signature of everything the projection builders read from a
     spec — the cache key for prepared expression trees."""
@@ -127,36 +130,34 @@ def _prepared(key, build):
     return hit
 
 
-def touched_bucket_array(
-    spec: TableSpec, n_buckets: int, whole_row: bool | None = None
-) -> Column:
+def touched_bucket_array(spec: TableSpec, n_buckets: int) -> Column:
     """``array<int>`` of the hash-bucket ids THIS event's touched PKs fall
     into under ``spec`` — exactly the ids ``BucketStore.buckets_of(
     touched_keys(events, spec))`` would compute (property-test-pinned),
     expressed inline so partial-rewrite pricing can ride the per-table
     counts aggregation instead of paying its own collect per table.
 
-    Mirrors ``_events_for_table``'s __pk assignment: a PK-change update
+    Mirrors ``events_for_table``'s __pk assignment (same ``_key_change``
+    predicate, keyed like ``_effective_spec(spec)``): a PK-change update
     touches BOTH the old and new key, an insert the new key, everything
-    else the old key. The caller must pass the EFFECTIVE spec
-    (``_effective_spec`` output) so no-PK tables key on the whole row, and
-    SHOULD pass that call's ``whole_row`` flag so the pk_changed predicate
-    here matches ``_events_for_table``'s exactly; when omitted it is
-    inferred from set(pk_cols)==columns, which also treats a table whose
-    DECLARED PK genuinely covers every column as whole-row — benign for
-    bucket pricing (old==new keys hash to the same bucket either way) but
-    a divergence from the flag, hence the explicit parameter."""
-    if whole_row is None:
-        whole_row = set(spec.pk_cols) == {c.name for c in spec.columns}
+    else the old key."""
+    spec, whole_row = _effective_spec(spec)
     return _prepared(
         ("touched_bucket_array", _spec_sig(spec), n_buckets, whole_row),
         lambda: _build_touched_bucket_array(spec, n_buckets, whole_row),
     )
 
 
-def _build_touched_bucket_array(
-    spec: TableSpec, n_buckets: int, whole_row: bool
-) -> Column:
+def _key_change(spec: TableSpec, whole_row: bool) -> tuple[Column, Column, Column]:
+    """``(old_key, new_key, pk_changed)`` of one parsed event — the split
+    rule the fold's event projection applies and bucket pricing mirrors.
+
+    A PK change requires every PK column PRESENT in columnnames (wal2json
+    always ships changed PK columns; an absent PK column is an untouched
+    TOAST-style omission, NOT a change to NULL — comparing against the
+    absent key would misread every partial update as a key change).
+    Whole-row keys: EVERY full update is delete(old)+insert(new) — any
+    value change IS a key change when the key is the row."""
     old_key = F.struct(*[c.alias(k) for c, k in zip(_old_key(spec), spec.pk_cols)])
     new_key = F.struct(*[c.alias(k) for c, k in zip(_new_key(spec), spec.pk_cols)])
     pk_present = None
@@ -168,6 +169,13 @@ def _build_touched_bucket_array(
     )
     if not whole_row:
         pk_changed = pk_changed & ~old_key.eqNullSafe(new_key)
+    return old_key, new_key, pk_changed
+
+
+def _build_touched_bucket_array(
+    spec: TableSpec, n_buckets: int, whole_row: bool
+) -> Column:
+    old_key, new_key, pk_changed = _key_change(spec, whole_row)
 
     def bucket(key: Column) -> Column:
         # same hash as stores.BucketStore.bucket_expr over the same typed
@@ -184,14 +192,16 @@ def _build_touched_bucket_array(
     )
 
 
-def _events_for_table(events: DataFrame, spec: TableSpec, whole_row: bool = False) -> DataFrame:
-    """Filter + project the parsed event stream for one table.
+def events_for_table(events: DataFrame, spec: TableSpec) -> DataFrame:
+    """Filter + project the parsed event stream for one table, keyed like
+    ``_effective_spec(spec)``.
 
     Output: ``insert_timestamp, lsn_start, sub_ord, op, __pk (struct),
     vals (typed struct), has (bool struct)`` with PK-change updates exploded
     into delete+insert pairs (P7, replay.pl:905-950). The Column trees are
     prepared once per spec (``_prepared``) — they are input-independent.
     """
+    spec, whole_row = _effective_spec(spec)
     filt, pre_cols, gen_cols, out_cols = _prepared(
         ("events_for_table", _spec_sig(spec), whole_row),
         lambda: _build_event_projection(spec, whole_row),
@@ -211,37 +221,19 @@ def _build_event_projection(spec: TableSpec, whole_row: bool):
         & (F.col("table") == spec.table)
     )
 
-    new_key = F.struct(*[c.alias(k) for c, k in zip(_new_key(spec), spec.pk_cols)])
-    old_key = F.struct(*[c.alias(k) for c, k in zip(_old_key(spec), spec.pk_cols)])
+    old_key, new_key, pk_changed = _key_change(spec, whole_row)
     vals = F.struct(*[_typed_value(spec, c.name).alias(c.name) for c in spec.columns])
     has = F.struct(
         *[F.array_contains(F.coalesce("columnnames", F.array()), c.name).alias(c.name) for c in spec.columns]
     )
-    null_vals = F.struct(*[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns])
+    null_vals = _null_vals(spec)
     false_has = F.struct(*[F.lit(False).alias(c.name) for c in spec.columns])
-
-    # A PK change requires every PK column PRESENT in columnnames (wal2json
-    # always ships changed PK columns; an absent PK column is an untouched
-    # TOAST-style omission, NOT a change to NULL — comparing against the
-    # absent key would misread every partial update as a key change).
-    pk_present = None
-    for pk in spec.pk_cols:
-        c = F.array_contains(F.coalesce("columnnames", F.array()), pk)
-        pk_present = c if pk_present is None else (pk_present & c)
 
     # STAGE 1 (whole-stage-codegen'd Project, CSE applies): every expensive
     # expression — the names→values maps, typed cast struct, presence struct,
     # both key structs — is evaluated exactly once per event here. Without
     # this split the whole tree ends up inlined (repeatedly!) inside the
     # Generate node below, which Spark evaluates in interpreted mode.
-    pk_changed = (
-        (F.col("op") == "update") & F.col("oldkeys").isNotNull() & pk_present
-    )
-    if not whole_row:
-        pk_changed = pk_changed & ~old_key.eqNullSafe(new_key)
-    # whole-row keys: EVERY full update is delete(old)+insert(new) — any
-    # value change IS a key change when the key is the row.
-
     pre_cols = [
         F.col("insert_timestamp"),
         F.col("lsn_start"),
@@ -297,33 +289,23 @@ def _build_event_projection(spec: TableSpec, whole_row: bool):
     return filt, pre_cols, gen_cols, out_cols
 
 
+def _event_struct() -> Column:
+    return F.struct(*[F.col(c).alias(c) for c in _EVENT_FIELDS])
+
 
 def _events_per_key(ev: DataFrame) -> DataFrame:
-    """Group projected events per PK with the sort_array ordering contract:
-    the struct's LEADING fields are the order columns (insert_timestamp,
-    lsn_start, sub_ord), so sort_array yields exact apply order. Shared by
-    apply_changes / apply_delta / scd2_history — the one place the ordering
-    contract is encoded."""
+    """Group projected events per PK as ``(__pk, __evs)``, ``__evs`` sorted
+    in exact apply order (``_EVENT_FIELDS``). Used by the keyed join and
+    by scd2_history."""
     agg_col = _prepared(
         ("events_per_key_agg",),
-        lambda: F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("insert_timestamp").alias("insert_timestamp"),
-                    F.col("lsn_start").alias("lsn_start"),
-                    F.col("sub_ord").alias("sub_ord"),
-                    F.col("op").alias("op"),
-                    F.col("vals").alias("vals"),
-                    F.col("has").alias("has"),
-                )
-            )
-        ).alias("__evs"),
+        lambda: F.sort_array(F.collect_list(_event_struct())).alias("__evs"),
     )
     return ev.groupBy("__pk").agg(agg_col)
 
 
 def _make_fold(spec: TableSpec):
-    """The per-event step function of the apply fold (see ``_fold_expr``).
+    """The per-event step function of the apply fold (see ``_state_col``).
 
     Accumulator: struct(exists boolean, violations int, vals struct<cols>).
     ``violations`` counts update/delete on a missing row — the J4 single-row
@@ -343,7 +325,7 @@ def _make_fold(spec: TableSpec):
         upd_vals = F.struct(
             *[F.when(e["has"][c], e["vals"][c]).otherwise(acc["vals"][c]).alias(c) for c in cols]
         )
-        null_vals = F.struct(*[F.lit(None).cast(s.spark_type).alias(s.name) for s in spec.columns])
+        null_vals = _null_vals(spec)
         # Incomplete PK-change insert (sub_ord=1 marks the insert half of a
         # split PK change): omitted TOAST columns are lost (see module
         # docstring) — surfaced as a violation, not silently.
@@ -384,13 +366,64 @@ def _make_fold(spec: TableSpec):
     return fold
 
 
-def _fold_expr(spec: TableSpec, events_col: str | Column, init_exists: Column, init_vals: Column) -> Column:
-    """The per-key ordered fold: F.aggregate over the sorted event array."""
-    init = F.struct(
-        init_exists.alias("exists"), F.lit(0).alias("violations"), init_vals.alias("vals")
+def _null_vals(spec: TableSpec) -> Column:
+    return F.struct(*[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns])
+
+
+def _state(exists: Column, vals: Column) -> Column:
+    """A fold state with no violations yet."""
+    return F.struct(exists.alias("exists"), F.lit(0).alias("violations"), vals.alias("vals"))
+
+
+def _entry_state(spec: TableSpec) -> Column:
+    """The key's snapshot entry as a fold state (absent → not exists)."""
+    snap = F.col("__snap_vals")
+    return _state(snap.isNotNull(), F.coalesce(snap, _null_vals(spec)))
+
+
+def _state_col(spec: TableSpec, evs: Column | None = None, *, init=None, step=None) -> Column:
+    """One key's state after the batch: ``evs`` (default the key's sorted
+    ``__evs``) folded with ``step`` (default the per-event apply step)
+    over ``init`` (default the snapshot entry) — or ``init`` unchanged when
+    the key has no events. Every fold variant's state is this column."""
+    init = _entry_state(spec) if init is None else init
+    return (
+        F.when(
+            F.col("__evs").isNotNull(),
+            F.aggregate(F.col("__evs") if evs is None else evs, init, step or _make_fold(spec)),
+        )
+        .otherwise(init)
     )
-    evs = F.col(events_col) if isinstance(events_col, str) else events_col
-    return F.aggregate(evs, init, _make_fold(spec))
+
+
+def _keyed_join(
+    snapshot: DataFrame,
+    events: DataFrame,
+    spec: TableSpec,
+    *,
+    keys: DataFrame | None = None,
+    group=_events_per_key,
+    how: str = "full_outer",
+) -> tuple[TableSpec, DataFrame]:
+    """snapshot ⟗ (events grouped per key) — the one preamble of every fold.
+
+    Projects the table's events, optionally semi-join-prunes BOTH fold
+    inputs to ``keys`` (columns = ``spec.pk_cols``), groups the events per
+    key with ``group`` (→ ``__pk, __evs``) and joins them to the staged
+    snapshot (``__pk, __snap_vals``) on the PK struct. ``how="left"`` runs
+    the join from the grouped events, keeping only touched keys.
+    Returns ``(effective spec, joined)``; the folds are projections
+    of ``joined``."""
+    spec, _ = _effective_spec(spec)
+    ev = events_for_table(events, spec)
+    if keys is not None:
+        ev, snapshot = _prune_to_keys(ev, snapshot, spec, keys)
+    per_key = group(ev)
+    snap = _stage_snapshot(snapshot, spec)
+    if how == "left":
+        return spec, per_key.join(snap, on="__pk", how="left")
+    # sort-merge full outer join on the PK struct; AQE handles skew
+    return spec, snap.join(per_key, on="__pk", how="full_outer")
 
 
 def _prune_to_keys(
@@ -400,8 +433,7 @@ def _prune_to_keys(
     touched-key set (columns = ``spec.pk_cols``). Semantics-preserving for
     state AT the kept keys: the per-key fold is independent across keys —
     an event at key k (including either half of a split PK change) only
-    ever touches state at k. Shared by every fold variant so pruning
-    semantics can never diverge between them."""
+    ever touches state at k."""
     k = F.broadcast(
         keys.select(
             F.struct(*[F.col(c).alias(c) for c in spec.pk_cols]).alias("__pk")
@@ -417,8 +449,7 @@ def _prune_to_keys(
 
 
 def _stage_snapshot(snapshot: DataFrame, spec: TableSpec) -> DataFrame:
-    """Snapshot rows as ``(__pk struct, __snap_vals struct)`` — the join-side
-    staging every fold variant shares."""
+    """Snapshot rows as ``(__pk struct, __snap_vals struct)``."""
     cols = _prepared(
         ("stage_snapshot", _spec_sig(spec)),
         lambda: [
@@ -448,38 +479,15 @@ def _project_result(folded: DataFrame, spec: TableSpec, state_col: str) -> DataF
     return folded.filter(F.col(f"{state_col}.exists")).select(*cols)
 
 
-def _apply_state_col(spec: TableSpec) -> Column:
-    """The ``__state`` column of ``apply_changes``'s post-join projection —
-    fold the key's sorted events over the snapshot entry (or pass the
-    entry through untouched when the key has no events). Depends only on
-    the spec, so it is prepared once per spec signature and reused across
-    every batch/frame (unbound expression tree, never data)."""
-
-    def build() -> Column:
-        null_vals = F.struct(
-            *[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns]
-        )
-        return (
-            F.when(
-                F.col("__evs").isNotNull(),
-                _fold_expr(
-                    spec,
-                    "__evs",
-                    init_exists=F.col("__snap_vals").isNotNull(),
-                    init_vals=F.coalesce(F.col("__snap_vals"), null_vals),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.col("__snap_vals").isNotNull().alias("exists"),
-                    F.lit(0).alias("violations"),
-                    F.coalesce(F.col("__snap_vals"), null_vals).alias("vals"),
-                )
-            )
-            .alias("__state")
-        )
-
-    return _prepared(("apply_state", _spec_sig(spec)), build)
+def _result(folded: DataFrame, spec: TableSpec, with_metrics: bool):
+    result = _project_result(folded, spec, "__state")
+    if not with_metrics:
+        return result
+    metrics = folded.agg(
+        F.count(F.lit(1)).alias("keys_seen"),
+        F.sum(F.col("__state.violations")).alias("violations"),
+    )
+    return result, metrics
 
 
 def apply_changes(
@@ -509,37 +517,15 @@ def apply_changes(
 
     This is the pure batch core: ``(snapshot_df, events_df) -> snapshot_df'``
     — usable identically from batch jobs and from ``foreachBatch`` (SURVEY §7
-    design stance).
+    design stance). One shuffle groups the events per key; the state
+    column references only ``__evs``/``__snap_vals`` by name, so it is
+    prepared once per spec signature (see ``_make_fold``'s NOTE).
     """
-    spec, _whole_row = _effective_spec(spec)
-    ev = events_for_table(events, spec)
-    if keys is not None:
-        ev, snapshot = _prune_to_keys(ev, snapshot, spec, keys)
-
-    # One shuffle: group per key, events in exact apply order (the ordering
-    # contract lives in _events_per_key).
-    per_key = _events_per_key(ev)
-    snap = _stage_snapshot(snapshot, spec)
-
-    # Sort-merge full outer join on the PK struct; AQE handles skew.
-    joined = snap.join(per_key, on="__pk", how="full_outer")
-
-    # The whole __state expression references only __evs/__snap_vals by
-    # name and the spec — prepared once per spec signature (the F.aggregate
-    # fold alone is hundreds of py4j calls; see _make_fold's NOTE).
-    folded = joined.select("__pk", _apply_state_col(spec))
-
-    # PK columns come from the join key (authoritative); the fold keeps
-    # them consistent for insert/update events anyway.
-    result = _project_result(folded, spec, "__state")
-
-    if not with_metrics:
-        return result
-    metrics = folded.agg(
-        F.count(F.lit(1)).alias("keys_seen"),
-        F.sum(F.col("__state.violations")).alias("violations"),
+    spec, joined = _keyed_join(snapshot, events, spec, keys=keys)
+    state = _prepared(
+        ("apply_state", _spec_sig(spec)), lambda: _state_col(spec).alias("__state")
     )
-    return result, metrics
+    return _result(joined.select("__pk", state), spec, with_metrics)
 
 
 def apply_changes_bounded(
@@ -589,98 +575,57 @@ def apply_changes_bounded(
         # reinstating the unbounded per-key array this function exists to
         # prevent.
         raise ValueError(f"lsn_bucket must be >= 1 (got {lsn_bucket})")
-    spec, _whole_row = _effective_spec(spec)
-    ev = events_for_table(events, spec)
-    if keys is not None:
-        ev, snapshot = _prune_to_keys(ev, snapshot, spec, keys)
-
     cols = [c.name for c in spec.columns]
-    null_vals = F.struct(
-        *[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns]
-    )
-    ev_struct = F.struct(
-        F.col("insert_timestamp").alias("insert_timestamp"),
-        F.col("lsn_start").alias("lsn_start"),
-        F.col("sub_ord").alias("sub_ord"),
-        F.col("op").alias("op"),
-        F.col("vals").alias("vals"),
-        F.col("has").alias("has"),
-    )
-    lvl1 = (
-        ev.withColumn("__bucket", F.expr(f"lsn_start div {int(lsn_bucket)}"))
-        .groupBy("__pk", "__bucket")
-        .agg(F.sort_array(F.collect_list(ev_struct)).alias("__evs"))
-    )
-
-    # Per-bucket summary: one fold with entry (exists=true, null vals);
-    # the determined-column mask and the entry-missing correction make it
-    # exact for any entry state (see docstring).
-    foldT = _fold_expr(spec, "__evs", init_exists=F.lit(True), init_vals=null_vals)
-    first = F.element_at("__evs", 1)
-    first_viol = (
-        F.when(first["op"].isin("update", "delete"), F.lit(1)).otherwise(F.lit(0))
-    )
-    reset = F.exists("__evs", lambda e: e["op"].isin("insert", "delete"))
 
     def _touches(col_name):
         return lambda e: e["has"][col_name]
 
-    summary = F.struct(
-        F.col("__bucket").alias("bucket"),
-        foldT["exists"].alias("exists_out"),
-        foldT["violations"].alias("viol_t"),
-        first_viol.alias("first_viol"),
-        F.struct(
-            *[
-                (reset | F.exists("__evs", _touches(c))).alias(c)
-                for c in cols
-            ]
-        ).alias("has"),
-        foldT["vals"].alias("vals"),
-    )
-    per_key = (
-        lvl1.select("__pk", summary.alias("__s"))
-        .groupBy("__pk")
-        .agg(F.sort_array(F.collect_list("__s")).alias("__sums"))
-    )
+    def bucket_summaries(ev: DataFrame) -> DataFrame:
+        lvl1 = (
+            ev.withColumn("__bucket", F.expr(f"lsn_start div {int(lsn_bucket)}"))
+            .groupBy("__pk", "__bucket")
+            .agg(F.sort_array(F.collect_list(_event_struct())).alias("__evs"))
+        )
+        # Per-bucket summary: one fold with entry (exists=true, null vals);
+        # the determined-column mask and the entry-missing correction make
+        # it exact for any entry state (see docstring).
+        fold_t = F.aggregate("__evs", _state(F.lit(True), _null_vals(spec)), _make_fold(spec))
+        first = F.element_at("__evs", 1)
+        reset = F.exists("__evs", lambda e: e["op"].isin("insert", "delete"))
+        summary = F.struct(
+            F.col("__bucket").alias("bucket"),
+            fold_t["exists"].alias("exists_out"),
+            fold_t["violations"].alias("viol_t"),
+            F.when(first["op"].isin("update", "delete"), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("first_viol"),
+            F.struct(*[(reset | F.exists("__evs", _touches(c))).alias(c) for c in cols]).alias(
+                "has"
+            ),
+            fold_t["vals"].alias("vals"),
+        )
+        return (
+            lvl1.select("__pk", summary.alias("__s"))
+            .groupBy("__pk")
+            .agg(F.sort_array(F.collect_list("__s")).alias("__evs"))
+        )
 
-    def fold2(acc: Column, s: Column) -> Column:
+    def overlay(acc: Column, s: Column) -> Column:
         viol = (
             acc["violations"]
             + s["viol_t"]
             + F.when(acc["exists"], F.lit(0)).otherwise(s["first_viol"])
         )
         vals = F.struct(
-            *[
-                F.when(s["has"][c], s["vals"][c]).otherwise(acc["vals"][c]).alias(c)
-                for c in cols
-            ]
+            *[F.when(s["has"][c], s["vals"][c]).otherwise(acc["vals"][c]).alias(c) for c in cols]
         )
         return F.struct(
             s["exists_out"].alias("exists"), viol.alias("violations"), vals.alias("vals")
         )
 
-    snap = _stage_snapshot(snapshot, spec)
-    joined = snap.join(per_key, on="__pk", how="full_outer")
-    init = F.struct(
-        F.col("__snap_vals").isNotNull().alias("exists"),
-        F.lit(0).alias("violations"),
-        F.coalesce(F.col("__snap_vals"), null_vals).alias("vals"),
-    )
-    folded = joined.select(
-        "__pk",
-        F.when(F.col("__sums").isNotNull(), F.aggregate("__sums", init, fold2))
-        .otherwise(init)
-        .alias("__state"),
-    )
-    result = _project_result(folded, spec, "__state")
-    if not with_metrics:
-        return result
-    metrics = folded.agg(
-        F.count(F.lit(1)).alias("keys_seen"),
-        F.sum(F.col("__state.violations")).alias("violations"),
-    )
-    return result, metrics
+    spec, joined = _keyed_join(snapshot, events, spec, keys=keys, group=bucket_summaries)
+    folded = joined.select("__pk", _state_col(spec, step=overlay).alias("__state"))
+    return _result(folded, spec, with_metrics)
 
 
 def apply_changes_cut(
@@ -690,7 +635,6 @@ def apply_changes_cut(
     *,
     cut,
     keys: DataFrame | None = None,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fold ONE event stream into TWO snapshot states — at an intermediate
     cut and at the end — in a single pass: one parse, one shuffle, one
@@ -707,66 +651,21 @@ def apply_changes_cut(
 
     ``keys``: optional touched-key pruning, as in :func:`apply_changes`.
 
-    ``materialize`` (default True): localCheckpoint the per-key two-state
-    frame before returning. The frame is O(|keys|) rows (|delta|-sized when
-    pruned) — small by construction — and the typical caller (view-delta
-    maintenance, ``ivm.join_view_delta``) references each returned state in
-    BOTH sides of an ``exceptAll``; without materialization Spark re-executes
-    the whole parse+shuffle+fold subtree once per plan reference (measured
-    2× per state = up to 8× per stream pair at sf0.1). Pass
-    ``materialize=False`` when folding SEVERAL streams: persist each
-    returned ``flat`` frame and trigger them with one combined job so the
-    folds overlap on the executor pool instead of serializing behind eager
-    checkpoints (see ``cdc_join_view_delta``).
-
     Returns ``(state_at_cut, state_final, flat)`` — the two snapshot-shaped
     states plus the underlying per-key frame (``__pk, __s1, __s0``) both are
-    column-selections of.
+    column-selections of. Nothing is materialized: a caller that
+    references the states more than once should persist ``flat``
+    (``ivm.join_view_delta_staged`` reads each ``flat`` once).
     """
-    spec, _whole_row = _effective_spec(spec)
-    ev = events_for_table(events, spec)
-    null_vals = F.struct(
-        *[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns]
-    )
-
-    if keys is not None:
-        ev, snapshot = _prune_to_keys(ev, snapshot, spec, keys)
-
-    per_key = _events_per_key(ev)
-    snap = _stage_snapshot(snapshot, spec)
-    joined = snap.join(per_key, on="__pk", how="full_outer")
-
-    init_exists = F.col("__snap_vals").isNotNull()
-    init_vals = F.coalesce(F.col("__snap_vals"), null_vals)
-    init_state = F.struct(
-        init_exists.alias("exists"), F.lit(0).alias("violations"), init_vals.alias("vals")
-    )
-    pre_evs = F.filter("__evs", cut)
-    s0 = (
-        F.when(
-            F.col("__evs").isNotNull(),
-            _fold_expr(spec, pre_evs, init_exists=init_exists, init_vals=init_vals),
-        )
-        .otherwise(init_state)
-        .alias("__s0")
-    )
+    spec, joined = _keyed_join(snapshot, events, spec, keys=keys)
+    s0 = _state_col(spec, F.filter("__evs", cut)).alias("__s0")
     staged = joined.select("__pk", "__evs", s0)
     # Second projection: __s0 is a plain attribute here, so the post fold's
     # init references the ALREADY-COMPUTED struct (no Catalyst re-inlining
     # of the pre fold's tree — the HOF let-binding rule).
-    post_evs = F.filter("__evs", lambda e: ~cut(e))
-    s1 = (
-        F.when(
-            F.col("__evs").isNotNull(),
-            F.aggregate(post_evs, F.col("__s0"), _make_fold(spec)),
-        )
-        .otherwise(F.col("__s0"))
-        .alias("__s1")
-    )
+    post = F.filter("__evs", lambda e: ~cut(e))
+    s1 = _state_col(spec, post, init=F.col("__s0")).alias("__s1")
     flat = staged.select("__pk", s1, "__s0")
-    if materialize:
-        flat = flat.localCheckpoint(eager=True)
-
     return (
         _project_result(flat, spec, "__s0"),
         _project_result(flat, spec, "__s1"),
@@ -783,38 +682,20 @@ def apply_delta(snapshot: DataFrame, events: DataFrame, spec: TableSpec) -> Data
     ``__pk struct, old_exists, old_vals struct, new_exists, new_vals struct``.
     Untouched keys don't appear (their contribution to any maintained
     structure is unchanged), so the output size is O(touched keys) — at
-    100 TB that's the event batch's key set, not the table.
+    100 TB that's the event batch's key set, not the table. The join runs
+    LEFT from the event keys (the full outer join exists to carry
+    untouched rows).
     """
-    spec, _whole_row = _effective_spec(spec)
-    ev = events_for_table(events, spec)
-    per_key = _events_per_key(ev)
-
-    snap = _stage_snapshot(snapshot, spec)
-    # LEFT join from the event keys: only touched keys matter here (the
-    # full-outer join in apply_changes exists to carry untouched rows).
-    joined = per_key.join(snap, on="__pk", how="left")
-
-    def build() -> list[Column]:
-        null_vals = F.struct(
-            *[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns]
-        )
-        return [
+    spec, joined = _keyed_join(snapshot, events, spec, how="left")
+    cols = _prepared(
+        ("apply_delta_state", _spec_sig(spec)),
+        lambda: [
             F.col("__snap_vals").isNotNull().alias("old_exists"),
-            F.coalesce(F.col("__snap_vals"), null_vals).alias("old_vals"),
-            _fold_expr(
-                spec,
-                "__evs",
-                init_exists=F.col("__snap_vals").isNotNull(),
-                init_vals=F.coalesce(F.col("__snap_vals"), null_vals),
-            ).alias("__state"),
-        ]
-
-    # prepared like apply_changes' __state (see _apply_state_col): the
-    # fold column is the expensive tree and depends only on the spec
-    folded = joined.select(
-        "__pk", *_prepared(("apply_delta_state", _spec_sig(spec)), build)
+            F.coalesce(F.col("__snap_vals"), _null_vals(spec)).alias("old_vals"),
+            _state_col(spec).alias("__state"),
+        ],
     )
-    return folded.select(
+    return joined.select("__pk", *cols).select(
         "__pk",
         "old_exists",
         "old_vals",
@@ -830,7 +711,7 @@ def incremental_group_agg(
     group_col: str,
     sum_col: str,
     sum_type: str = "decimal(12,2)",
-    sum_expr=None,
+    sum_expr: str | None = None,
 ) -> DataFrame:
     """Maintain a ``(group, n_rows, total)`` aggregate under CDC WITHOUT
     rescanning the base table: each touched key contributes -old/+new to its
@@ -845,54 +726,34 @@ def incremental_group_agg(
     zero-rows ghosts). Cost: the delta is O(touched keys); the merge join
     touches only affected groups.
 
-    ``sum_expr`` (optional ``Column -> Column``) transforms the raw value
-    column before the cast — e.g. ``functions.money.grid_dec`` so a
-    double-sourced money sum is grid-exact (the base aggregate must apply
-    the same transform).
+    ``sum_expr`` (optional SQL expression over the row's columns, default
+    ``sum_col``) is what gets summed — e.g. ``functions.money.grid_dec_sql``
+    so a double-sourced money sum is grid-exact (the base aggregate must
+    apply the same transform); the same contract as ``group_agg_net``'s
+    ``sum_col``.
     """
-    if sum_expr is None:
-        f = lambda c: c
-    else:
-        # thread sum_type through when the transform accepts it (grid_dec's
-        # dec_type): a transform that snapped at its OWN hardcoded scale
-        # would silently overflow to NULL at its inner cast before the
-        # caller's outer sum_type cast ever ran
-        import inspect
-
-        _pos = [
-            q
-            for q in inspect.signature(sum_expr).parameters.values()
-            if q.kind in (q.POSITIONAL_ONLY, q.POSITIONAL_OR_KEYWORD)
-        ]
-        f = (lambda c: sum_expr(c, sum_type)) if len(_pos) >= 2 else sum_expr
     # ONE pass over the delta: each row explodes into its -old and/or +new
-    # contribution. The earlier minus/plus self-UNION referenced ``delta``
-    # twice, and delta is typically an (expensive) diff-join frame — both
-    # union branches re-executed the whole diff per patch job.
-    minus_c = F.when(
-        F.col("old_exists"),
-        F.struct(
-            F.col(f"old_vals.{group_col}").alias("g"),
-            F.lit(-1).cast("long").alias("dn"),
-            (-f(F.col(f"old_vals.{sum_col}")).cast(sum_type)).alias("dt"),
-        ),
-    )
-    plus_c = F.when(
-        F.col("new_exists"),
-        F.struct(
-            F.col(f"new_vals.{group_col}").alias("g"),
-            F.lit(1).cast("long").alias("dn"),
-            f(F.col(f"new_vals.{sum_col}")).cast(sum_type).alias("dt"),
-        ),
-    )
-    net = (
-        delta.select(
-            F.explode(
-                F.filter(F.array(minus_c, plus_c), lambda x: x.isNotNull())
-            ).alias("__c")
+    # row. A minus/plus self-UNION would reference ``delta`` twice, and
+    # delta is typically an (expensive) fold frame — both union branches
+    # would re-execute it.
+    def side(sign: int, exists: str, vals: str) -> Column:
+        return F.when(
+            F.col(exists),
+            F.struct(F.lit(sign).cast("long").alias("__dn"), F.col(vals).alias("__row")),
         )
-        .groupBy(F.col("__c.g").alias(group_col))
-        .agg(F.sum("__c.dn").alias("__dn"), F.sum("__c.dt").alias("__dt"))
+
+    rows = delta.select(
+        F.explode(
+            F.filter(
+                F.array(side(-1, "old_exists", "old_vals"), side(1, "new_exists", "new_vals")),
+                lambda x: x.isNotNull(),
+            )
+        ).alias("__c")
+    ).select("__c.__dn", "__c.__row.*")
+    val = F.expr(sum_expr or f"`{sum_col}`").cast(sum_type)
+    net = rows.groupBy(F.col(group_col).alias(group_col)).agg(
+        F.sum("__dn").alias("__dn"),
+        F.sum(F.when(F.col("__dn") < 0, -val).otherwise(val)).alias("__dt"),
     )
     return merge_group_agg(base_agg, net, group_col=group_col, sum_type=sum_type)
 
@@ -1004,100 +865,3 @@ def latest_wins(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> Da
     return (
         df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
-
-
-def upsert_full_rows(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    op_col: str = "op",
-) -> DataFrame:
-    """Simplified apply for full-row change streams (every event carries all
-    columns): latest-wins per key, then delete-aware anti-join + union.
-
-    Equivalent to MERGE whenMatchedUpdate/whenNotMatchedInsert/
-    whenMatchedDelete (S8/J1-J3) on engines without Delta: one window
-    shuffle + one join.
-    """
-    last = latest_wins(changes, key_cols, order_cols)
-    data_cols = [c for c in snapshot.columns]
-    upserts = last.filter(F.col(op_col) != "delete").select(*data_cols)
-    keys = last.select(*key_cols)
-    survived = snapshot.join(keys, on=key_cols, how="left_anti")
-    return survived.unionByName(upserts)
-
-
-def apply_changes_states(
-    snapshot: DataFrame,
-    events: DataFrame,
-    spec: TableSpec,
-    *,
-    lsn_bounds: list[int | None],
-) -> list[DataFrame]:
-    """Apply the event batch and emit the table state at EACH LSN bound
-    (``None`` = full stream) from ONE per-key fold pipeline.
-
-    Point-in-time queries that need several consistent states of the same
-    table (join-view deltas, cut comparisons, drift audits) would
-    otherwise run one full groupBy + snapshot-join pipeline PER state.
-    Here the grouped/sorted event arrays and the snapshot join are built
-    once; each bound's state is a map-side fold over the SHARED sorted
-    array filtered to ``lsn_start <= bound``. When several returned states
-    feed one downstream plan, Spark's ReuseExchange dedupes the single
-    shuffle — N states cost one exchange plus N codegen'd fold
-    projections.
-
-    Fold-over-filtered-array ≡ fold-over-bounded-events because the fold
-    is per-key sequential and the filter preserves order (tested against
-    one-shot ``apply_changes`` per bound).
-
-    When to use: real-CDC key shapes — many keys, few events per key —
-    where the grouped arrays are small and the saved exchange dominates.
-    On dense-per-key shapes (few keys, hundreds of events each) the full
-    sorted arrays ride through every downstream plan reference and two
-    independent pre-filtered ``apply_changes`` pipelines measured FASTER
-    (the cdc_join_view_delta fixture: 200 keys × ~475 events — see that
-    query's comment). Measure on your key distribution.
-    """
-    spec, _whole_row = _effective_spec(spec)
-    ev = events_for_table(events, spec)
-    per_key = _events_per_key(ev)
-
-    snap_key = F.struct(*[F.col(k).alias(k) for k in spec.pk_cols])
-    snap = snapshot.select(
-        snap_key.alias("__pk"),
-        F.struct(*[F.col(c.name).alias(c.name) for c in spec.columns]).alias("__snap_vals"),
-    )
-    joined = snap.join(per_key, on="__pk", how="full_outer")
-
-    null_vals = F.struct(
-        *[F.lit(None).cast(c.spark_type).alias(c.name) for c in spec.columns]
-    )
-    passthrough = F.struct(
-        F.col("__snap_vals").isNotNull().alias("exists"),
-        F.lit(0).alias("violations"),
-        F.coalesce(F.col("__snap_vals"), null_vals).alias("vals"),
-    )
-
-    outs = []
-    for bound in lsn_bounds:
-        evs = (
-            F.col("__evs")
-            if bound is None
-            else F.filter(F.col("__evs"), lambda e: e["lsn_start"] <= F.lit(bound))
-        )
-        # an all-late key folds over an EMPTY filtered array -> init ==
-        # passthrough, so the empty case needs no special branch
-        state = F.when(
-            F.col("__evs").isNotNull(),
-            _fold_expr(
-                spec,
-                evs,
-                init_exists=F.col("__snap_vals").isNotNull(),
-                init_vals=F.coalesce(F.col("__snap_vals"), null_vals),
-            ),
-        ).otherwise(passthrough)
-        folded = joined.select("__pk", state.alias("__state"))
-        outs.append(_project_result(folded, spec, "__state"))
-    return outs

@@ -8,11 +8,12 @@ Updating Materialized Views") reduces here to: only join keys TOUCHED by
 either side's delta can change a view row, so the view diff restricted
 to touched keys IS the view delta.
 
-Shape at 100 TB: the touched-key set is |Δ|-sized and broadcasts; all
-four state tables are semi-join-pruned to touched keys BEFORE the join
-(with bucketed silver tables the semi join prunes at the scan), so work
-scales with the delta, not the view. The per-key diff is exceptAll over
-1:1 join rows — a hash aggregation on the touched subset only.
+Shape at 100 TB: the touched-key set is |Δ|-sized and broadcasts; the
+states are semi-join-pruned to touched keys BEFORE the join (with
+bucketed silver tables the semi join prunes at the scan), so work scales
+with the delta, not the view. ``join_view_delta_staged`` emits the
+per-key diff straight from two staged folds; the ``Maintained*View``
+classes below patch versioned materialized views per batch.
 
 Crucially the pruning must also reach UPSTREAM of the states: when a
 state table is itself produced by a CDC fold, fold the touched keys only
@@ -32,46 +33,6 @@ from connemara_spark.session import scoped_conf
 from connemara_spark.stores import VersionedDir
 
 
-def join_view_delta(
-    a_old: DataFrame,
-    a_new: DataFrame,
-    b_old: DataFrame,
-    b_new: DataFrame,
-    *,
-    key_a: str,
-    key_b: str,
-    touched: DataFrame,
-    view_cols: list[str],
-) -> DataFrame:
-    """Row-level delta of the equi-join view ``A ⋈_{key_a=key_b} B``
-    between (a_old, b_old) and (a_new, b_new), computed only over
-    ``touched`` join keys (single-column DataFrame: keys present in either
-    side's CDC delta). Returns ``op ('ins'|'del')`` + ``view_cols``:
-    applying the delta to the old view yields the new view exactly."""
-    t = F.broadcast(
-        touched.select(F.col(touched.columns[0]).alias("__k")).distinct()
-    )
-
-    def view(a: DataFrame, b: DataFrame) -> DataFrame:
-        a_t = a.join(t, a[key_a] == t["__k"], "left_semi")
-        b_t = b.join(t, b[key_b] == t["__k"], "left_semi")
-        j = a_t.join(b_t, a_t[key_a] == b_t[key_b])
-        # resolve each view column explicitly (A side wins a name shared by
-        # both inputs — e.g. when key_a == key_b)
-        return j.select(
-            *[
-                (a_t[c] if c in a_t.columns else b_t[c]).alias(c)
-                for c in view_cols
-            ]
-        )
-
-    old_v = view(a_old, b_old)
-    new_v = view(a_new, b_new)
-    return new_v.exceptAll(old_v).select(F.lit("ins").alias("op"), "*").unionByName(
-        old_v.exceptAll(new_v).select(F.lit("del").alias("op"), "*")
-    )
-
-
 def join_view_delta_staged(
     a_flat: DataFrame,
     b_flat: DataFrame,
@@ -83,7 +44,7 @@ def join_view_delta_staged(
 ) -> DataFrame:
     """View delta computed DIRECTLY from two staged folds' per-key frames
     (``apply_changes_cut``'s ``flat`` output: ``__pk, __s0, __s1``) —
-    skipping the materialize-two-views-and-exceptAll detour entirely.
+    neither view state is materialized.
 
     With single-column PKs each side contributes at most ONE row per join
     key to the view, so the per-key delta is decidable locally after one
@@ -153,15 +114,6 @@ def touched_keys(events: DataFrame, spec) -> DataFrame:
     return ev.select(
         *[F.col(f"__pk.{c}").alias(c) for c in spec.pk_cols]
     ).distinct()
-
-
-def apply_view_delta(old_view: DataFrame, delta: DataFrame) -> DataFrame:
-    """Patch a materialized view with a row-level delta: bag-minus the
-    ``del`` rows, append the ``ins`` rows. ``old_view + delta == new_view``
-    is the operator's contract (test-pinned)."""
-    dels = delta.filter(F.col("op") == "del").drop("op")
-    inss = delta.filter(F.col("op") == "ins").drop("op")
-    return old_view.exceptAll(dels).unionByName(inss)
 
 
 # Events one patch shuffle partition carries (see _static_patch_plan).
@@ -785,7 +737,7 @@ class MaintainedJoinView(MaintainedView):
         view_dir: str,
     ):
         # The touched-key set is computed in PK space (touched_keys), and
-        # join_view_delta prunes on key_a — those spaces must coincide or
+        # the patch prunes the view on key_a — those spaces must coincide or
         # the pruning silently misses changed rows and the view goes stale.
         # A non-PK join column would need touched keys derived in key_a
         # space from the old+new states at the touched PKs; not supported.

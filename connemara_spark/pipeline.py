@@ -457,10 +457,7 @@ class Replayer:
         Returns ``{ix: (ddl_rows, counts, buckets)}``; batches with no
         events are absent (callers default to the empty summary)."""
         from connemara_spark.events import is_ddl_event
-        from connemara_spark.operators.apply import (
-            _effective_spec,
-            touched_bucket_array,
-        )
+        from connemara_spark.operators.apply import touched_bucket_array
 
         empty = F.array().cast("array<int>")
         partial = hasattr(self.store, "write_partial") and hasattr(
@@ -470,7 +467,6 @@ class Replayer:
         if partial:
             expr = None
             for spec in self.catalog.tables():
-                espec, whole_row = _effective_spec(spec)
                 cond = (
                     (F.col("database") == spec.database)
                     & (F.col("schema") == spec.schema)
@@ -479,11 +475,11 @@ class Replayer:
                 # per-table bucket count: a rebucketed table's modulus is
                 # its manifest's, not the store default
                 n = (
-                    self.store.bucket_count(espec.target_name)
+                    self.store.bucket_count(spec.target_name)
                     if hasattr(self.store, "bucket_count")
                     else self.store.n_buckets
                 )
-                arm = touched_bucket_array(espec, n, whole_row=whole_row)
+                arm = touched_bucket_array(spec, n)
                 expr = F.when(cond, arm) if expr is None else expr.when(cond, arm)
             if expr is not None:
                 barr = expr.otherwise(empty)

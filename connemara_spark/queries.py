@@ -2882,12 +2882,12 @@ def cdc_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_dec("c_acctbal")).alias("total"),
     )
     delta = apply_delta(snapshot, parse_events(bronze), CUSTOMER_SPEC)
-    from connemara_spark.functions.money import grid_dec
+    from connemara_spark.functions.money import grid_dec_sql
 
     out = incremental_group_agg(
         base_agg, delta, group_col="c_mktsegment", sum_col="c_acctbal",
         # grid-exact money (matches base_agg's _dec): see _dec's docstring
-        sum_expr=grid_dec,
+        sum_expr=grid_dec_sql("c_acctbal"),
     )
     return out.select(
         "c_mktsegment",
@@ -9446,7 +9446,7 @@ def cdc_join_view_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsn_cut = lambda e: e["lsn_start"] <= cut
     tk_c = touched.select(F.col("k").alias("c_custkey"))
     _, _, c_flat = apply_changes_cut(
-        snapshot, c_ev, CUSTOMER_SPEC, cut=lsn_cut, keys=tk_c, materialize=False
+        snapshot, c_ev, CUSTOMER_SPEC, cut=lsn_cut, keys=tk_c
     )
 
     acct_schema = T.StructType(
@@ -9460,7 +9460,7 @@ def cdc_join_view_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = spark.createDataFrame([], acct_schema)
     tk_a = touched.select(F.col("k").alias("a_userkey"))
     _, _, a_flat = apply_changes_cut(
-        empty, a_ev, ACCOUNT_SPEC, cut=lsn_cut, keys=tk_a, materialize=False
+        empty, a_ev, ACCOUNT_SPEC, cut=lsn_cut, keys=tk_a
     )
     return join_view_delta_staged(
         c_flat, a_flat,

@@ -53,7 +53,7 @@ from functools import partial
 from pyspark.sql import functions as F
 
 from connemara_spark.catalog import TableSpec
-from connemara_spark.operators.ivm import touched_keys
+from connemara_spark.operators.ivm import _table_buckets, touched_keys
 from connemara_spark.pipeline import run_legs
 
 _log = logging.getLogger(__name__)
@@ -209,11 +209,12 @@ class JdbcMultiApplySink:
         # lazy pins, one per leg: they derive from the immutable (cached)
         # parsed batch only, so post-apply evaluation sees identical keys —
         # and the pins cost zero jobs. ``buckets``: the batch summary's
-        # {(db, schema, table): touched bucket ids}; a table's entry spares
-        # its staging read the buckets_of collect (see _stage_slice)
-        bk = buckets or {}
+        # {(db, schema, table): touched bucket ids}, read as the views read
+        # it — a table's entry spares its staging read the buckets_of
+        # collect, and a table absent from it had no DML, so its leg ships
+        # nothing (see _stage_slice)
         self._touched = [
-            (touched_keys(parsed_events, leg.spec), bk.get(leg.spec.qualified_key))
+            (touched_keys(parsed_events, leg.spec), _table_buckets(buckets, leg.spec))
             for leg in self.legs
         ]
 
@@ -342,9 +343,10 @@ class JdbcMultiApplySink:
         store's CURRENT rows at those keys, and record ``batch_id``, in ONE
         transaction. ``touched``: one ``(keys_df, buckets)`` pair per leg,
         in ``targets`` order — ``buckets`` is the batch summary's touched
-        bucket ids for that table (what ``before_apply`` pins), or None to
-        price them from the keys. Returns False when ``batch_id`` was
-        already applied (the exactly-once skip covers every table)."""
+        bucket ids for that table (what ``before_apply`` pins; ``[]`` ships
+        nothing for the leg), or None to price them from the keys. Returns
+        False when ``batch_id`` was already applied (the exactly-once skip
+        covers every table)."""
         if self._ledger_has(batch_id):
             return False
         # The per-table staging writes are the batch's distributed phase
@@ -361,8 +363,9 @@ class JdbcMultiApplySink:
         )
 
         def reconcile(st):
-            for leg, (pk, cols) in zip(self.legs, staged):
-                self._reconcile_leg(st, leg.target, leg.staging, pk, cols)
+            for leg, shipped in zip(self.legs, staged):
+                if shipped is not None:
+                    self._reconcile_leg(st, leg.target, leg.staging, *shipped)
 
         self._transaction(batch_id, reconcile)
         return True
@@ -400,21 +403,26 @@ class JdbcMultiApplySink:
 
     def _stage_slice(
         self, leg: _Leg, keys, buckets: list[int] | None = None
-    ) -> tuple[list, list]:
+    ) -> tuple[list, list] | None:
         """ONE distributed staging write for one leg: the new rows at the
         touched keys (__key_only=false, inserted by the reconcile) plus the
         bare touched keys (__key_only=true — they ride along so DELETED
         rows, touched but absent from the new state, still reach the
-        DELETE). Returns (pk, cols) for the reconcile statements.
+        DELETE). Returns (pk, cols) for the reconcile statements, or None
+        when the leg has nothing to ship.
 
         ``buckets``: the batch summary's already-priced touched-bucket ids
         for this table, when the caller has them — skips the per-batch
         ``buckets_of`` driver collect (the fold priced the same set on the
-        summary job; ``build_fold`` treats the two as interchangeable)."""
+        summary job; ``build_fold`` treats the two as interchangeable).
+        ``[]`` (the table had no DML in the batch) skips the staging write
+        and the leg's reconcile statements."""
         spec, staging = leg.spec, leg.staging
         pk = list(spec.pk_cols)
         if not pk:
             raise ValueError(f"{spec.target_name}: JDBC apply needs PK columns")
+        if buckets == []:
+            return None
         # the new state at the touched keys — over a BucketStore this read
         # prunes to the touched buckets at path selection
         if buckets is not None and hasattr(self.store, "read_buckets"):

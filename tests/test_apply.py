@@ -9,7 +9,7 @@ import pytest
 
 from connemara_spark.catalog import ColumnSpec, EngineCatalog, TableSpec
 from connemara_spark.events import BRONZE_SCHEMA, parse_events
-from connemara_spark.operators.apply import apply_changes, latest_wins, upsert_full_rows
+from connemara_spark.operators.apply import apply_changes, latest_wins
 from connemara_spark.testing import SequentialOracle, make_event, random_event_stream
 
 CUST = TableSpec(
@@ -179,16 +179,6 @@ def test_latest_wins(spark):
     )
     out = {r["k"]: r["v"] for r in latest_wins(df, ["k"], ["ord"]).collect()}
     assert out == {1: "b", 2: "x"}
-
-
-def test_upsert_full_rows(spark):
-    snap = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    chg = spark.createDataFrame(
-        [(2, "b2", "update", 1), (3, "c", "insert", 2), (1, None, "delete", 3)],
-        "k int, v string, op string, lsn int",
-    )
-    out = {r["k"]: r["v"] for r in upsert_full_rows(snap, chg, ["k"], ["lsn"]).collect()}
-    assert out == {2: "b2", 3: "c"}
 
 
 def test_partial_update_with_absent_pk_is_not_a_pk_change(spark):
@@ -442,42 +432,6 @@ def test_parse_events_fail_fast_on_malformed_payload(spark):
     assert bad.collect()[0]["payload"].startswith("{corrupt")
     # pre-split callers opt out of the guard on the clean side
     assert parse_events(ok, on_malformed="ignore").count() == 1
-
-
-def test_apply_changes_states_matches_per_bound_apply(spark):
-    """One shared fold pipeline per bound-list == independent apply_changes
-    per bound, including partial updates, deletes, and all-late keys."""
-    from pyspark.sql import functions as F
-
-    from connemara_spark.operators.apply import apply_changes_states
-
-    base = [
-        {"c_custkey": 1, "c_name": "a", "c_nationkey": 1, "c_acctbal": 10.0, "c_mktsegment": "M"},
-        {"c_custkey": 2, "c_name": "b", "c_nationkey": 2, "c_acctbal": 20.0, "c_mktsegment": "M"},
-    ]
-    evs = [
-        make_event(CUST, "update", lsn=5, row={"c_acctbal": 55.0},
-                   old_key={"c_custkey": 1}, present=["c_acctbal"]),
-        make_event(CUST, "delete", lsn=7, old_key={"c_custkey": 2}),
-        make_event(CUST, "insert", lsn=12,
-                   row={"c_custkey": 3, "c_name": "c", "c_nationkey": 3,
-                        "c_acctbal": 30.0, "c_mktsegment": "M"}),
-        make_event(CUST, "update", lsn=15, row={"c_name": "a15"},
-                   old_key={"c_custkey": 1}, present=["c_name"]),
-    ]
-    snapshot = spark.createDataFrame(
-        [tuple(r[c.name] for c in CUST.columns) for r in base], schema=CUST.spark_schema()
-    )
-    bronze = spark.createDataFrame(
-        [tuple(r[f.name] for f in BRONZE_SCHEMA.fields) for r in evs], schema=BRONZE_SCHEMA
-    )
-    ev = parse_events(bronze)
-
-    states = apply_changes_states(snapshot, ev, CUST, lsn_bounds=[5, 10, None])
-    for bound, got in zip([5, 10, None], states):
-        bounded = ev if bound is None else ev.filter(F.col("lsn_start") <= bound)
-        want = apply_changes(snapshot, bounded, CUST)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), bound
 
 
 @pytest.mark.parametrize("seed", [3, 7, 21])

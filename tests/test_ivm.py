@@ -1,90 +1,8 @@
-"""Incremental join-view maintenance: delta correctness + apply identity."""
+"""Incremental view maintenance: the maintained views under CDC batches."""
 
 from __future__ import annotations
 
 import pytest
-
-from connemara_spark.operators.ivm import join_view_delta
-
-
-def _dfs(spark):
-    a_old = spark.createDataFrame(
-        [(1, "a1"), (2, "a2"), (3, "a3")], "k long, av string"
-    )
-    # key 2 updated, key 3 deleted, key 4 inserted
-    a_new = spark.createDataFrame(
-        [(1, "a1"), (2, "a2x"), (4, "a4")], "k long, av string"
-    )
-    b_old = spark.createDataFrame(
-        [(1, "b1"), (2, "b2"), (3, "b3"), (4, "b4")], "k long, bv string"
-    )
-    b_new = b_old
-    return a_old, a_new, b_old, b_new
-
-
-def test_join_view_delta_rows(spark):
-    a_old, a_new, b_old, b_new = _dfs(spark)
-    touched = spark.createDataFrame([(2,), (3,), (4,)], "k long")
-    delta = {
-        (r["op"], r["k"], r["av"], r["bv"])
-        for r in join_view_delta(
-            a_old, a_new, b_old, b_new,
-            key_a="k", key_b="k", touched=touched,
-            view_cols=["k", "av", "bv"],
-        ).collect()
-    }
-    assert delta == {
-        ("del", 2, "a2", "b2"),   # update = del old row +
-        ("ins", 2, "a2x", "b2"),  #   ins new row
-        ("del", 3, "a3", "b3"),   # source row deleted
-        ("ins", 4, "a4", "b4"),   # source row inserted
-    }
-
-
-def test_join_view_delta_untouched_keys_ignored(spark):
-    """Keys outside the touched set never appear — even if states differ
-    there (that would mean the caller's touched set was wrong; the
-    operator's contract is delta-scoped work, and key 1 is unchanged)."""
-    a_old, a_new, b_old, b_new = _dfs(spark)
-    touched = spark.createDataFrame([(3,)], "k long")
-    ops = {
-        (r["op"], r["k"])
-        for r in join_view_delta(
-            a_old, a_new, b_old, b_new,
-            key_a="k", key_b="k", touched=touched,
-            view_cols=["k", "av", "bv"],
-        ).collect()
-    }
-    assert ops == {("del", 3)}
-
-
-def test_join_view_delta_apply_identity(spark):
-    """old_view minus del-rows plus ins-rows == new_view (the definition
-    of a correct view delta), checked over the full key set."""
-    a_old, a_new, b_old, b_new = _dfs(spark)
-    touched = spark.createDataFrame([(1,), (2,), (3,), (4,)], "k long")
-    delta = join_view_delta(
-        a_old, a_new, b_old, b_new,
-        key_a="k", key_b="k", touched=touched,
-        view_cols=["k", "av", "bv"],
-    )
-    old_view = a_old.join(b_old, "k").select("k", "av", "bv")
-    new_view = a_new.join(b_new, "k").select("k", "av", "bv")
-    dels = delta.filter("op = 'del'").drop("op")
-    inss = delta.filter("op = 'ins'").drop("op")
-    patched = old_view.exceptAll(dels).unionByName(inss)
-    assert sorted(map(tuple, patched.collect())) == sorted(map(tuple, new_view.collect()))
-
-
-def test_apply_view_delta_identity(spark):
-    from connemara_spark.operators.ivm import apply_view_delta
-
-    old_view = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], "k long, v string")
-    delta = spark.createDataFrame(
-        [("del", 2, "b"), ("ins", 3, "c")], "op string, k long, v string"
-    )
-    got = sorted(map(tuple, apply_view_delta(old_view, delta).collect()))
-    assert got == [(1, "a"), (2, "b"), (3, "c")]  # bag-minus removes ONE copy
 
 
 def test_streaming_maintained_join_view_over_wal_spool(spark, tmp_path):

@@ -758,3 +758,24 @@ def test_one_versioned_dir_commit_and_one_view_lifecycle():
         if isinstance(n, ast.FunctionDef)
     )
     assert {name: defs[name] for name in lifecycle} == dict.fromkeys(lifecycle, 1)
+
+
+def test_one_keyed_apply_fold():
+    """The apply folds share ONE keyed join (``apply._keyed_join``): the
+    snapshot staging and the touched-key pruning each have exactly one
+    call site in the package, so no fold variant re-spells the preamble."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "connemara_spark"
+    names = ("_stage_snapshot", "_prune_to_keys")
+    sites = Counter()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in names:
+                    sites[name] += 1
+    assert {n: sites[n] for n in names} == dict.fromkeys(names, 1)

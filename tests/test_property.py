@@ -284,7 +284,7 @@ def test_inlined_bucket_pricing_equals_buckets_of(
         schema=BRONZE_SCHEMA,
     )
     events = parse_events(bronze)
-    espec, whole_row = _effective_spec(SPEC)
+    espec, _ = _effective_spec(SPEC)
 
     # reference pricing: distinct touched keys hashed the store's way
     keys = touched_keys(events, espec)
@@ -302,7 +302,7 @@ def test_inlined_bucket_pricing_equals_buckets_of(
         r["__b"]
         for r in events.select(
             F.explode(
-                touched_bucket_array(espec, n_buckets, whole_row=whole_row)
+                touched_bucket_array(SPEC, n_buckets)
             ).alias("__b")
         ).distinct().collect()
     )

@@ -910,3 +910,37 @@ def test_multi_table_sink_drop_column_fails_loudly_unless_opted_in(spark, tmp_pa
     assert set(_table(spark, url, "SELECT id, id FROM accounts")) == {
         r["id"] for r in store.read(accounts).collect()
     } == {0, 1, 2, 3, 4, 7}
+
+
+def test_multi_table_sink_skips_legs_without_dml(spark, tmp_path, monkeypatch):
+    """A batch that touches only ``items``: the ``accounts`` leg has no
+    entry in the batch summary, so it ships nothing — no ``buckets_of``
+    collect, no staging write, no reconcile statements — while the ledger
+    still records the batch and ``items`` lands."""
+    url, cat, items, accounts, store, rep, sink = _two_table_setup(
+        spark, tmp_path, "multiskip1"
+    )
+    assert sink.bootstrap_load()
+    accounts_before = _table(spark, url, "SELECT id, bal FROM accounts")
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("buckets_of called")
+
+    monkeypatch.setattr(store, "buckets_of", no_collect)
+    staged, reconciled = [], []
+    write_staging, reconcile_leg = sink._write_staging, sink._reconcile_leg
+    monkeypatch.setattr(
+        sink, "_write_staging",
+        lambda df, staging: (staged.append(staging), write_staging(df, staging)),
+    )
+    monkeypatch.setattr(
+        sink, "_reconcile_leg",
+        lambda st, target, *a: (reconciled.append(target), reconcile_leg(st, target, *a)),
+    )
+    rep.step(_bronze(spark, [
+        make_event(items, "update", lsn=1, row={"id": 1, "v": "patched"}, old_key={"id": 1}),
+    ]), maintainers=[sink], batch_id="items-only")
+    assert staged == ["items_staging"] and reconciled == ["items"]
+    assert _table(spark, url, "SELECT id, v FROM items")[1] == "patched"
+    assert _table(spark, url, "SELECT id, bal FROM accounts") == accounts_before
+    assert sink._ledger_has("items-only")
